@@ -8,10 +8,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *
   * The reference tunes an actor engine (parallel degree, 100k-row buffers,
   * 15MB S3 ranges — `fpdb-executor/include/fpdb/executor/physical/Globals.h`);
-  * the Spark-native equivalents are shuffle partitioning, AQE, and runtime
-  * bloom filters (predicate transfer, SURVEY.md §4.1). These settings are the
-  * ones that transfer to a real cluster: on 1000 executors only `master` and
-  * the partition counts change.
+  * the Spark-native equivalents are shuffle partitioning and AQE. The
+  * engine's predicate transfer (SURVEY.md §4.1) is the injected optimizer
+  * rule [[graft.plans.AutoSemiReduction]], not the runtime bloom filters
+  * enabled below (see the note there). These settings are the ones that
+  * transfer to a real cluster: on 1000 executors only `master` and the
+  * partition counts change.
   */
 object GraftSession {
 
@@ -29,8 +31,14 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // AQE skew-join split: the scale path for skewed join keys.
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Predicate transfer, single-hop: runtime bloom filter injection
-      // (reference: BloomFilterCreate/UsePOp, SURVEY.md §2.2).
+      // Runtime bloom filter injection (the nearest Spark analog of the
+      // reference's BloomFilterCreate/UsePOp, SURVEY.md §2.2). It is NOT
+      // how this engine transfers predicates: Spark injects a filter only
+      // when the application side scans more than
+      // `runtime.bloomFilter.applicationSideScanSizeThreshold` (10 GB by
+      // default), so it never fires on inputs below that — which is why
+      // turning it off moved no entry's wall time at sf0.1. Left on for
+      // tables that large; AutoSemiReduction does the transfer here.
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       .config("spark.sql.optimizer.runtimeFilter.semiJoinReduction.enabled", "false")
       // Cost-based optimization incl. stats-driven join reordering — the

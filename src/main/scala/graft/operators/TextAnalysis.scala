@@ -292,13 +292,14 @@ object TextAnalysis {
     // K·nᵝ, β≈0.5 — ~1e8 rows (a few GB framed) for a 100 TB corpus,
     // inside the 8 GB broadcast cap but enough executor pressure that a
     // deployment may prefer the shuffle join; the hint is therefore
-    // conf-gated (spark.graft.tfidf.broadcastVocab, default on). With
+    // conf-gated (spark.graft.tfidf.broadcastVocab, default on; only
+    // `false` turns it off — graft.util.Conf.isOn). With
     // the gate off the join falls back to the planner's choice and tf
     // re-shuffles for the window — slower, never wrong.
     val df = tf.groupBy($"word").agg(count(lit(1)).as("df"))
     val dfSide =
       if (s.conf.getOption("spark.graft.tfidf.broadcastVocab")
-            .forall(_.toBoolean)) broadcast(df)
+            .forall(graft.util.Conf.isOn)) broadcast(df)
       else df
     val w = Window.partitionBy($"doc_id").orderBy($"score".desc, $"word")
     tf.join(dfSide, "word")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.optimizer.JoinSelectionHelper
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -32,10 +33,12 @@ import org.apache.spark.sql.internal.SQLConf
   * measured benefit (`fpdb-store-server/src/flight/
   * AdaptPushdownManager.cpp:45-60`), a join is reduced iff:
   *
-  *  1. the FULL dim is over `spark.sql.autoBroadcastJoinThreshold` — the
-  *     main join will shuffle the fact, so rows removed early are shuffle
-  *     bytes saved. A broadcastable dim already joins map-side (plus the
-  *     session's runtime bloom filters); a semi pass there is pure cost.
+  *  1. the planner would SHUFFLE the join ([[plannerShuffles]]): neither
+  *     input broadcasts, by size (JoinSelection's own `canBroadcastBySize`
+  *     over the same stats) or by hint. A join with a broadcastable input
+  *     is planned map-side — a semi pass there only adds a build+probe,
+  *     whichever side it would shrink. Checked once per join, for both
+  *     legs, before any probe.
   *  2. the dim's KEY projection IS under the threshold — the injected semi
   *     broadcasts, filtering the fact map-side before its exchange.
   *  3. the dim's filter measurably keeps ≤ `spark.graft.semiReduction
@@ -58,20 +61,52 @@ import org.apache.spark.sql.internal.SQLConf
   *    respect for hand-written `PredicateTransfer.reduce` calls).
   * Kill switch: `spark.graft.autoSemiReduction=false`.
   */
-object AutoSemiReduction extends Rule[LogicalPlan] with PredicateHelper {
+object AutoSemiReduction extends Rule[LogicalPlan] with PredicateHelper
+    with JoinSelectionHelper {
 
   private val SizeRatio = 8L
 
   private def enabled: Boolean =
-    SQLConf.get.getConfString("spark.graft.autoSemiReduction", "true").toBoolean
+    graft.util.Conf.isOn(SQLConf.get.getConfString("spark.graft.autoSemiReduction", "true"))
 
   /** The BACKWARD leg's own sub-switch, under the main kill switch —
     * `spark.graft.autoSemiReduction.backward` (r15, r14 verdict item 6). */
   private def backwardEnabled: Boolean =
-    SQLConf.get.getConfString("spark.graft.autoSemiReduction.backward", "true").toBoolean
+    graft.util.Conf.isOn(
+      SQLConf.get.getConfString("spark.graft.autoSemiReduction.backward", "true"))
 
-  private def maxSelectivity: Double =
-    SQLConf.get.getConfString("spark.graft.semiReduction.maxSelectivity", "0.5").toDouble
+  private val DefaultMaxSelectivity = 0.5
+  /** The last unusable maxSelectivity value warned about — one warning
+    * per bad value, not one per optimizer pass. */
+  @volatile private var warnedSelectivity: String = null
+
+  /** `spark.graft.semiReduction.maxSelectivity`, a fraction in [0, 1];
+    * anything else (unparsable, NaN, out of range) falls back to the
+    * default rather than failing every query the session optimizes. */
+  private def maxSelectivity: Double = {
+    val raw = SQLConf.get.getConfString("spark.graft.semiReduction.maxSelectivity",
+      DefaultMaxSelectivity.toString)
+    raw.trim.toDoubleOption.filter(v => v >= 0.0 && v <= 1.0).getOrElse {
+      if (raw != warnedSelectivity) {
+        warnedSelectivity = raw
+        logWarning(s"spark.graft.semiReduction.maxSelectivity='$raw' is not a " +
+          s"fraction in [0, 1]; using $DefaultMaxSelectivity")
+      }
+      DefaultMaxSelectivity
+    }
+  }
+
+  /** Would JoinSelection plan `j` with an exchange under BOTH inputs? It
+    * broadcasts a side hinted BROADCAST first, else a side under
+    * `autoBroadcastJoinThreshold` by size and not hinted otherwise —
+    * `getBroadcastBuildSide` is that exact choice, on the stats the
+    * planner reads. Only a shuffled join has rows a semi pass can keep
+    * off the wire; both legs share this gate. */
+  private def plannerShuffles(j: Join): Boolean = {
+    val conf = SQLConf.get
+    getBroadcastBuildSide(j, hintOnly = true, conf).isEmpty &&
+      getBroadcastBuildSide(j, hintOnly = false, conf).isEmpty
+  }
 
   /** A filter beyond the inferred `isnotnull` join-key guards. */
   private def selectivelyFiltered(p: LogicalPlan): Boolean = p.exists {
@@ -200,16 +235,35 @@ object AutoSemiReduction extends Rule[LogicalPlan] with PredicateHelper {
     }
   }
 
+  /** `p` without its IsNotNull conjuncts; a Filter left with none goes. */
+  private def withoutNotNullGuards(p: LogicalPlan): LogicalPlan = p.transformUp {
+    case Filter(c, child) =>
+      splitConjunctivePredicates(c).filterNot(_.isInstanceOf[IsNotNull])
+        .reduceOption(And).fold(child)(Filter(_, child))
+  }
+
   private def measuredSelectivity(dim: LogicalPlan): Double = {
     SparkSession.getActiveSession match {
       case Some(spark) if !dim.isStreaming =>
+        // Probe and cache key ignore IsNotNull conjuncts, as
+        // selectivelyFiltered does; otherwise the optimizer's pass before
+        // InferFiltersFromConstraints and the pass after it probe the same
+        // sample under two keys. Invariant: every dropped guard is implied
+        // by a null-rejecting conjunct or by an equi-key — that is the
+        // only place the inference rule takes isnotnull(a) from. A guard
+        // implied by a conjunct of this chain changes no count; one
+        // implied by an equi-key (of any join) only admits null-key rows
+        // the join drops anyway, which can only RAISE the measured ratio,
+        // toward leaving the plan alone. A hand-written IS NOT NULL is
+        // dropped the same way, with the same one-sided effect.
+        val probed = withoutNotNullGuards(dim)
         val cache = cacheFor(spark)
-        val key = dim.canonicalized
+        val key = probed.canonicalized
         val hit = cache.synchronized(cache.get(key))
         if (hit != null) return hit.doubleValue()
         val sel = try {
           probing.set(java.lang.Boolean.TRUE)
-          probeOnce(spark, dim)
+          probeOnce(spark, probed)
         } catch {
           case e: Throwable => logWarning(s"selectivity probe failed: $e"); 1.0
         } finally probing.set(java.lang.Boolean.FALSE)
@@ -229,16 +283,15 @@ object AutoSemiReduction extends Rule[LogicalPlan] with PredicateHelper {
           if fact.outputSet.contains(a) && dim.outputSet.contains(b) => (a, b)
     }
 
+  /** FORWARD eligibility of an edge whose join [[plannerShuffles]]. */
   private def eligible(fact: LogicalPlan, dim: LogicalPlan, cond: Expression): Boolean = {
-    val dimSize = dim.stats.sizeInBytes
     val threshold = SQLConf.get.autoBroadcastJoinThreshold
     val keys = equiKeys(fact, dim, cond)
     def keysProjSize =
       Project(keys.map(_._2), dim).stats.sizeInBytes
     keys.nonEmpty &&
       selectivelyFiltered(dim) &&
-      dimSize > threshold &&                       // main join shuffles the fact
-      fact.stats.sizeInBytes >= dimSize * SizeRatio &&
+      fact.stats.sizeInBytes >= dim.stats.sizeInBytes * SizeRatio &&
       !dim.exists(_.isInstanceOf[Join]) &&         // join-free dim: probe can't recurse
       safeToCopy(dim) &&
       !alreadyReduced(fact, dim) &&
@@ -258,18 +311,17 @@ object AutoSemiReduction extends Rule[LogicalPlan] with PredicateHelper {
     * filter/project chain — exactly the shapes [[measuredSelectivity]]
     * can probe — so the injected semi's build side is the fact's key
     * projection DISCOUNTED by the measured selectivity, and the gate
-    * admits only when that discounted size still broadcasts:
+    * admits only when that discounted size still broadcasts. The caller
+    * has already established that the planner shuffles the join (both
+    * inputs over the threshold, neither hinted — [[plannerShuffles]]):
+    * a copied fact small enough to broadcast is the BHJ's build side,
+    * so the dim is never shuffled and there is nothing to save. Then:
     *
-    *  1. the dim is over the broadcast threshold (the main join will
-    *     shuffle it — dim rows removed early are shuffle bytes saved;
-    *     a broadcastable dim already joins map-side);
-    *  2. the fact carries a measured-selective filter (≤ maxSelectivity
+    *  1. the fact carries a measured-selective filter (≤ maxSelectivity
     *     — an unfiltered fact's keys prune nothing);
-    *  3. `keysProjSize × selectivity ≤ threshold` — the semi broadcasts,
-    *     filtering the dim map-side before its exchange (Spark's own
-    *     runtime bloom filters cover the shuffle-semi variant; auto-
-    *     injecting a SHUFFLED semi would add an exchange, the r2
-    *     regression class).
+    *  2. `keysProjSize × selectivity ≤ threshold` — the semi broadcasts,
+    *     filtering the dim map-side before its exchange (auto-injecting
+    *     a SHUFFLED semi would add an exchange, the r2 regression class).
     *
     * Semantics-preserving exactly like the forward leg: a semi by the
     * join's own keys removes only dim rows the inner join would drop,
@@ -297,9 +349,7 @@ object AutoSemiReduction extends Rule[LogicalPlan] with PredicateHelper {
       cond: Expression): Option[LogicalPlan] = {
     val threshold = SQLConf.get.autoBroadcastJoinThreshold
     val keys = equiKeys(fact, dim, cond)
-    if (keys.isEmpty || threshold <= 0 ||
-        dim.stats.sizeInBytes <= threshold)   // main join must shuffle the dim
-      return None
+    if (keys.isEmpty) return None
     val factSub = keyOwningSubtree(fact, keys.map(_._1))
     def keysProjSize = Project(keys.map(_._1), factSub).stats.sizeInBytes
     val ok =
@@ -398,7 +448,7 @@ object AutoSemiReduction extends Rule[LogicalPlan] with PredicateHelper {
       // streaming sources also carry huge default stats, but that is an
       // accident, not a guarantee)
       case j @ Join(left, right, Inner, Some(cond), _)
-          if cond.deterministic && !j.isStreaming =>
+          if cond.deterministic && !j.isStreaming && plannerShuffles(j) =>
         if (eligible(left, right, cond))
           j.copy(left = reduce(left, right, cond))
         else if (eligible(right, left, cond))

@@ -10,17 +10,21 @@ import graft.sources.Tables
   * `SmallToLargePredTransOrder.cpp`).
   *
   * Spark-native layering:
-  *  1. single-hop transfer is ON in the engine session —
-  *     `spark.sql.optimizer.runtime.bloomFilter.enabled` injects a bloom
-  *     filter from the filtered build side into the probe-side scan
-  *     (`InjectRuntimeFilter`), exactly the reference's
-  *     BloomFilterCreate/Use pair around one join (SURVEY.md §2.2);
+  *  1. automatic transfer, for any query, is the injected
+  *     [[AutoSemiReduction]] rule, on joins the planner shuffles.
+  *     The engine session also enables Spark's runtime bloom filters
+  *     (`InjectRuntimeFilter`, the analog of the reference's
+  *     BloomFilterCreate/Use pair, SURVEY.md §2.2), but Spark injects one
+  *     only into an application side scanning over
+  *     `runtime.bloomFilter.applicationSideScanSizeThreshold` (10 GB by
+  *     default), so below that they never fire;
   *  2. multi-hop, small→large transfer is this utility: reduce the fact
   *     table with `left_semi` joins against each (already-filtered)
   *     dimension, smallest first, before the real joins run. Catalyst
   *     plans each reduction as a broadcast semi join when the dim is
   *     small — a map-side filter over the fact scan with no shuffle —
-  *     and layer 1 then adds blooms on what remains.
+  *     and, on tables over that threshold, the bloom filters of layer 1
+  *     act on what remains.
   *
   * Semantics-preserving by construction (a semi join never adds or
   * duplicates fact rows), which the oracle check proves: the transferred
@@ -84,10 +88,10 @@ object PredicateTransfer {
     * `BFSPredTransOrder.cpp:176-186`). Catalyst prunes the fact side to
     * the join keys (column pruning through semi joins), plans broadcast
     * when the surviving key set is small (AQE re-plans at runtime), and
-    * the engine session's runtime bloom filters
-    * (`InjectRuntimeFilter`) give the bloom-not-semi physical variant
-    * where the semi would shuffle — the same lattice the reference picks
-    * from. Semantics-preserving by construction: a semi join by the
+    * on an application side scanning over 10 GB the engine session's
+    * runtime bloom filters (`InjectRuntimeFilter`) give the
+    * bloom-not-semi physical variant where the semi would shuffle — the
+    * same lattice the reference picks from. Semantics-preserving by construction: a semi join by the
     * join's own keys removes only dim rows the inner join would drop,
     * and never duplicates (the oracle entries hash-match untransferred
     * SQL).

@@ -76,10 +76,13 @@ object Tables {
   // 118-132`); this memo gives the DataFrame path the same catalogue
   // discipline: one resolution per (session, dir, table), the ANALYZED
   // frame reused afterwards. Plan-metadata caching only — no rows are
-  // cached, every execution still scans the files. Safe because the
-  // named tables are immutable testdata/fixture inputs; a writer to one
-  // of these paths would call [[invalidate]] (none exists today — all
-  // writers target derived copies under their own names). Self-joins of
+  // cached, every execution still scans the files. Safe while the named
+  // tables' files do not change under a session. A writer to one of these
+  // paths must call [[invalidate]] for every session that read it:
+  // `Sink.mergeInto` rewrites a table in place (a directory swap) and
+  // does not, so a session that merged into a table it has read keeps
+  // resolving the replaced files until it calls [[invalidate]] and
+  // re-registers its views. Self-joins of
   // one memoized frame are de-duplicated by Catalyst's
   // DeduplicateRelations, same as two references to one registered view.
   // Retention is BOUNDED, not weak (r18, r17 ADVICE): a weak session key

@@ -228,6 +228,130 @@ class AutoSemiReductionSpec extends SparkSpec {
       s"broadcastable dims must not be semi-reduced:\n${joined.queryExecution.optimizedPlan}")
   }
 
+  /** Spark jobs started while `f` runs (listener bus flushed on both
+    * sides, so jobs of earlier work are not counted). */
+  private def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.GraftCoreBridge.flushListenerBus(sc)
+    sc.addSparkListener(l)
+    try { f; org.apache.spark.GraftCoreBridge.flushListenerBus(sc) }
+    finally sc.removeSparkListener(l)
+    n.get()
+  }
+
+  test("backward leg: a broadcastable copied fact is left alone, with no plan-time probe") {
+    import spark.implicits._
+    // the q10 shape: a filtered lineitem against a customer ⋈ orders
+    // side. Size-only stats put the composite side far over the default
+    // threshold, but the pruned, filtered lineitem is under it, so
+    // JoinSelection builds the broadcast on the FACT and neither side is
+    // shuffled — the backward leg must refuse the edge before its
+    // selectivity probe runs
+    val co = Tables.customer(spark, sfDir).join(
+      Tables.orders(spark, sfDir).filter($"o_orderdate" >= "1996-10-01" &&
+        $"o_orderdate" < "1997-01-01"), $"c_custkey" === $"o_custkey")
+    val li = Tables.lineitem(spark, sfDir)
+      .filter($"l_returnflag" === "R" && $"l_discount" < 0.03)
+    val df = co.join(li, $"o_orderkey" === $"l_orderkey")
+      .groupBy($"c_custkey").agg(sum($"l_extendedprice").as("revenue"))
+    val jobs = jobsDuring(df.queryExecution.optimizedPlan)
+    assert(jobs == 0, s"optimizing ran $jobs Spark job(s): a selectivity probe for a " +
+      s"join the planner broadcasts:\n${df.queryExecution.optimizedPlan}")
+    assert(semiJoins(df) == 0,
+      s"a broadcast join must not be semi-reduced:\n${df.queryExecution.optimizedPlan}")
+  }
+
+  test("the probe key ignores IsNotNull guards: a guarded filter reuses the measured ratio") {
+    import spark.implicits._
+    // the optimizer runs the rule before InferFiltersFromConstraints adds
+    // isnotnull guards and again after; a hand-written guard stands in
+    // for the inferred one. The same sample must be probed once.
+    def build(guarded: Boolean): DataFrame = {
+      val nk = $"s_nationkey" === 3L
+      val sup = Tables.supplier(spark, sfDir)
+        .filter(if (guarded) $"s_nationkey".isNotNull && nk else nk)
+      Tables.lineitem(spark, sfDir).join(sup, $"l_suppkey" === $"s_suppkey")
+        .groupBy($"s_nationkey").agg(sum($"l_quantity").as("q"))
+    }
+    withShuffledDim(() => build(guarded = false)) {
+      val plain = build(guarded = false)
+      assert(jobsDuring(plain.queryExecution.optimizedPlan) > 0,
+        "the first optimization must probe the dim's selectivity")
+      assert(semiJoins(plain) == 1, plain.queryExecution.optimizedPlan.toString)
+      val guarded = build(guarded = true)
+      val jobs = jobsDuring(guarded.queryExecution.optimizedPlan)
+      assert(jobs == 0, s"an IsNotNull guard re-probed the same sample ($jobs jobs)")
+      assert(semiJoins(guarded) == 1, guarded.queryExecution.optimizedPlan.toString)
+    }
+  }
+
+  test("rule switches: only a case-insensitive 'false' turns a leg off") {
+    import spark.implicits._
+    def forward(): DataFrame = {
+      val li = Tables.lineitem(spark, sfDir)
+      val sup = Tables.supplier(spark, sfDir).filter($"s_nationkey" === 1L)
+      li.join(sup, $"l_suppkey" === $"s_suppkey")
+        .groupBy($"s_nationkey").agg(sum($"l_quantity").as("q"))
+    }
+    def backward(): DataFrame = {
+      val li = Tables.lineitem(spark, sfDir).filter($"l_quantity" < 10)
+      li.join(Tables.orders(spark, sfDir), $"l_orderkey" === $"o_orderkey")
+        .groupBy($"o_orderpriority").agg(count(lit(1)).as("n"))
+    }
+    def semisWith(key: String, value: String, build: () => DataFrame): Int = {
+      spark.conf.set(key, value)
+      try semiJoins(build()) finally spark.conf.unset(key)
+    }
+    withShuffledDim(forward) {
+      for (v <- Seq("on", "1", "TRUE", "yes"))
+        assert(semisWith("spark.graft.autoSemiReduction", v, forward) == 1,
+          s"autoSemiReduction='$v' must keep the rule on")
+      for (v <- Seq("FALSE", " false "))
+        assert(semisWith("spark.graft.autoSemiReduction", v, forward) == 0,
+          s"autoSemiReduction='$v' must turn the rule off")
+    }
+    withShuffledDim(backward) {
+      assert(semisWith("spark.graft.autoSemiReduction.backward", "on", backward) == 1,
+        "backward='on' must keep the leg on")
+      assert(semisWith("spark.graft.autoSemiReduction.backward", "False", backward) == 0,
+        "backward='False' must turn the leg off")
+    }
+  }
+
+  test("an unusable maxSelectivity falls back to 0.5 instead of failing the query") {
+    import spark.implicits._
+    def selective(): DataFrame = {
+      val sup = Tables.supplier(spark, sfDir).filter($"s_nationkey" === 3L)
+      Tables.lineitem(spark, sfDir).join(sup, $"l_suppkey" === $"s_suppkey")
+        .groupBy($"s_nationkey").agg(sum($"l_quantity").as("q"))
+    }
+    // keeps every row: admitted only by a bound of 1.0 or more
+    def weak(): DataFrame = {
+      val sup = Tables.supplier(spark, sfDir).filter($"s_suppkey" >= 0L)
+      Tables.lineitem(spark, sfDir).join(sup, $"l_suppkey" === $"s_suppkey")
+        .groupBy($"s_nationkey").agg(sum($"l_quantity").as("q"))
+    }
+    val key = "spark.graft.semiReduction.maxSelectivity"
+    for (v <- Seq("abc", "1.5", "-0.1", "NaN")) {
+      spark.conf.set(key, v)
+      try {
+        withShuffledDim(selective) {
+          assert(semiJoins(selective()) == 1, s"maxSelectivity='$v' → 0.5 admits the selective dim")
+          assert(selective().collect().toSeq ==
+            withRule(on = false)(selective().collect().toSeq))
+        }
+        withShuffledDim(weak) {
+          assert(semiJoins(weak()) == 0, s"maxSelectivity='$v' → 0.5 refuses a ratio of 1")
+        }
+      } finally spark.conf.unset(key)
+    }
+  }
+
   test("weakly-selective filter is not transferred (measured, not assumed)") {
     import spark.implicits._
     // a real predicate that keeps every row: the boolean filtered-at-all
