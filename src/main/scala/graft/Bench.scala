@@ -153,13 +153,12 @@ object Bench {
   }
 
   /** ONE throttle bracket for every throttled-store measurement — the
-    * bench blocks (store_modes AND partition_router) and the dev probes
-    * (ProbePartitionBench): reset → per-stream bw
+    * bench blocks store_modes AND partition_router: reset → per-stream bw
     * (SPARK_GRAFT_STORE_MBPS, default 2 MB/s) + 5 ms GET + optional
     * aggregate cap → body → record secs + FS-truth MB → unthrottle. A
     * hand-kept copy per caller is exactly how two measurements drift
     * onto different store physics (r12 review merged the two bench
-    * blocks' copies; r13 review moved it here so probes reuse it too). */
+    * blocks' copies; r13 review moved it to object level). */
   private[graft] def throttledPass(
       out: scala.collection.mutable.ArrayBuffer[(String, Double)],
       family: String, label: String, totalMbps: Long = 0L)(body: => Unit): Unit = {
@@ -495,7 +494,7 @@ object Bench {
     // reruns it on the instrumented mockfs scheme with per-stream
     // bandwidth throttled (SPARK_GRAFT_STORE_MBPS, default 2 MB/s — the
     // measured crossover regime where hybrid's byte savings repay the
-    // zip premium 1.6x; ProfileStoreModes carries the full 32/8/2 sweep)
+    // zip premium 1.6x; r10's store-modes sweep measured 32/8/2 MB/s)
     // plus 5 ms/GET, and records, per pass, wall seconds AND the
     // megabytes that crossed the simulated store boundary — the quantity
     // a 100 TB deployment is billed in. Pullup is omitted: it moves the

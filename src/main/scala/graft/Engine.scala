@@ -18,12 +18,16 @@ import graft.sources.Tables
 object Engine {
 
   /** Per-session registration state: the directory whose tables this
-    * session's views point at, used as both record and lock. Registration
-    * re-reads every table's footer (10 schema fetches), which at q32's
-    * size was most of the query's wall time; the reference caches its
-    * catalogue the same way (one fetch per connection, `Client.cpp:
-    * 118-132`). Weak keys: a stopped session must not be pinned. */
-  private[graft] final class Registration { var dir: String = null }
+    * session's views point at and each view's [[Tables.writeMark]] when
+    * it was pointed, used as both record and lock. Registration re-reads
+    * every table's footer (10 schema fetches), which at q32's size was
+    * most of the query's wall time; the reference caches its catalogue
+    * the same way (one fetch per connection, `Client.cpp:118-132`). Weak
+    * keys: a stopped session must not be pinned. */
+  private[graft] final class Registration {
+    var dir: String = null
+    var marks: Map[String, Long] = Map.empty
+  }
   private val reg = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, Registration])
 
@@ -246,14 +250,25 @@ object Engine {
     * dir's artifact — a non-CTE query naming partsupp would silently
     * read stale rows (the exact mixed-views hazard the lock exists to
     * prevent). The artifact itself stays cached under its
-    * (session, olddir) key. */
+    * (session, olddir) key. On an unchanged dir, only a table graft's
+    * writers rewrote since its view was pointed (`Sink.mergeInto`,
+    * `compact`) is re-pointed — its old view would read replaced files.
+    * Marks are read BEFORE the load, so a write racing the re-point is
+    * caught on the next query. */
   private def ensureRegistered(spark: SparkSession, dir: String,
       r: Registration): Unit =
     if (r.dir != dir) {
+      r.marks = Tables.all.map(n => n -> Tables.writeMark(dir, n)).toMap
       Tables.registerAll(spark, dir)
       try spark.catalog.dropTempView("partsupp")
       catch { case _: Throwable => () }
       r.dir = dir
+    } else Tables.all.foreach { n =>
+      val m = Tables.writeMark(dir, n)
+      if (m != r.marks(n)) {
+        r.marks += n -> m
+        Tables.load(spark, dir, n).createOrReplaceTempView(n)
+      }
     }
 
   /** The per-session registration lock (spec hook: stripe assertions). */

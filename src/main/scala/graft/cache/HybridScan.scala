@@ -61,12 +61,8 @@ object HybridScan {
     * pay it four times per routing decision (it is ONE `listStatus`, the
     * same class of work the scan's own file index performs). */
   final case class TableListing(files: Seq[(String, Long, Long)]) {
-    lazy val fingerprint: String = {
-      val lines = files.map { case (p, len, mt) => s"$p|$len|$mt" }
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(lines.mkString("\n").getBytes("UTF-8"))
-        .map(b => f"${b & 0xff}%02x").mkString.take(8)
-    }
+    lazy val fingerprint: String =
+      shortDigest(files.map { case (p, len, mt) => s"$p|$len|$mt" }.mkString("\n"))
     /** True when every path in this listing has a distinct `xxhash64` —
       * the zip may then use the fixed-width hash as its file key.
       * Checked DETERMINISTICALLY driver-side (the listing is already
@@ -105,6 +101,12 @@ object HybridScan {
     }
 
   }
+
+  /** The first `n` hex digits of `text`'s MD5 — the short digest behind
+    * listing fingerprints, shard segment keys and routed-leaf names. */
+  private[graft] def shortDigest(text: String, n: Int = 8): String =
+    java.security.MessageDigest.getInstance("MD5").digest(text.getBytes("UTF-8"))
+      .map(b => f"${b & 0xff}%02x").mkString.take(n)
 
   /** Listing invocations since JVM start — spec hook proving the hybrid
     * path lists once per (query, table), not once per sub-scan. */
@@ -301,25 +303,20 @@ object HybridScan {
     }
     // cached base relations over the path go with the listings (their
     // embedded file index is the same metadata)
-    baseFrames.synchronized {
-      baseFrames.keySet.removeIf(k => related(k._2.takeWhile(_ != '#')))
-    }
-    shardFrames.synchronized {
-      shardFrames.keySet.removeIf(k => related(k._2.takeWhile(_ != '#')))
-    }
+    dropFrames(k => related(k._2.takeWhile(_ != '#')))
   }
+
+  private def dropFrames(drop: ((SparkSession, String)) => Boolean): Unit =
+    Seq(baseFrames, shardFrames).foreach(f => f.synchronized {
+      f.keySet.removeIf(drop(_))
+    })
 
   /** Drop every cached listing for `s` (full refresh). */
   def refreshListings(s: SparkSession): Unit = {
     listingEpoch.incrementAndGet() // fence in-flight listings here too
     val m = sessionListings.get(s)
     if (m != null) m.clear()
-    baseFrames.synchronized {
-      baseFrames.keySet.removeIf(_._1 eq s)
-    }
-    shardFrames.synchronized {
-      shardFrames.keySet.removeIf(_._1 eq s)
-    }
+    dropFrames(_._1 eq s)
   }
 
   /** [[listTable]] for an arbitrary table root path — the entry point a
@@ -646,7 +643,7 @@ object HybridScan {
     * O(10^5) files). The r10 raw-path key fixed that but priced the zip
     * key at the PATH STRING's width — through the fetch-side exchange on
     * every query, and in the plan-stats size the cache's admission
-    * compares against capacity (ProfileCacheSweep measured zip-capable
+    * compares against capacity (r10's capacity sweep measured zip-capable
     * segments refused admission at capacities their compressed bytes fit
     * comfortably). The hash key keeps everything that made the path key
     * right — file-count-independent, pure projection (a broadcast id
@@ -673,6 +670,21 @@ object HybridScan {
       col("_metadata.row_index").as(PosCol) +:
       cols.map(col): _*)
   }
+
+  /** The zip-capable segment form of `cols`: the ordinal scan
+    * partitioned by the FULL zip key (pos, file), in join-key order —
+    * EnsureRequirements shuffles the fetch side by the complete join key
+    * set, and only an identically-keyed stored partitioning is
+    * co-partition-compatible with it (a pos-only subset partitioning
+    * would force the wide cached side through a second Exchange) — then
+    * pre-SORTED by (pos, file), so a sort-requiring join plan is
+    * satisfied as-is. The wide cached columns pay neither an exchange
+    * NOR a sort at query time (spec-pinned). */
+  private def ordinalSegment(s: SparkSession, path: String, cols: Seq[String],
+      listing: TableListing): DataFrame =
+    ordinalScanPath(s, path, cols, listing)
+      .repartition(col(PosCol), col(FileCol))
+      .sortWithinPartitions(col(PosCol), col(FileCol))
 
   /** MergeKernel: rows = cache-resident columns ⋈ ordinal-zipped storage
     * fetch of the missing columns, predicate pushed into the fetch scan.
@@ -736,22 +748,8 @@ object HybridScan {
         listPathSession(s, path)
       else listPath(s, path))
     val fp = tl.fingerprint
-    val seg = cache.get(ordinalKey(segName, fp, cachedCols)) {
-      // partition by the FULL zip key (pos, file), in join-key order:
-      // EnsureRequirements shuffles the fetch side by the complete join
-      // key set, and only an identically-keyed stored partitioning is
-      // co-partition-compatible with it — a pos-only subset partitioning
-      // would force the wide cached side through a second Exchange
-      // (measured when the path column replaced the r9 literal id, whose
-      // constant-folding used to shrink the key set to {pos})
-      // ...then pre-SORT by (pos, file): if a sort-requiring join were
-      // ever planned the persisted ordering satisfies its requiredOrdering
-      // as-is. The wide cached columns pay neither an exchange NOR a sort
-      // at query time (spec-pinned).
-      ordinalScanPath(s, path, cachedCols, tl)
-        .repartition(col(PosCol), col(FileCol))
-        .sortWithinPartitions(col(PosCol), col(FileCol))
-    }
+    val seg = cache.get(ordinalKey(segName, fp, cachedCols))(
+      ordinalSegment(s, path, cachedCols, tl))
     val fetched0 = ordinalScanPath(s, path, fetchCols, tl)
     val fetched = fetchPredicate.fold(fetched0)(fetched0.filter)
     // Zip strategy by the planner's own size logic: a fetch side under
@@ -1118,17 +1116,190 @@ object HybridScan {
     private def dataCols(k: SegmentKey): Seq[String] =
       k.columns.filterNot(c => c == FileCol || c == PosCol)
 
-    /** Pullup segment key: data columns CANONICALIZED (sorted) so two
-      * requests for the same column set in different projection orders
-      * share one segment instead of double-loading storage (coverage
-      * checks are set-based, so correctness never depended on order —
-      * capacity did). Ordinal keys keep their declared order: the zip
-      * build's partition/sort shape is part of what the key describes. */
-    private def pullupKey(table: String, need: Seq[String]): SegmentKey =
-      SegmentKey(table, need.sorted)
+    /** The plain pullup segment of `need` over `src`, keyed with the
+      * data columns CANONICALIZED (sorted) so two requests for the same
+      * column set in different projection orders share one segment
+      * instead of double-loading storage (coverage checks are set-based,
+      * so correctness never depended on order — capacity did). Ordinal
+      * keys keep their declared order: the zip build's partition/sort
+      * shape is part of what the key describes. */
+    private def pullupSegment(table: String, need: Seq[String])(
+        src: => DataFrame): DataFrame =
+      cache.get(SegmentKey(table, need.sorted))(
+        src.select(need.sorted.map(col): _*))
 
     private def noopLease(df: DataFrame, route: Route) =
       new ScanLease(df, route, () => ())
+
+    private def slotRelease(acquired: Boolean): () => Unit =
+      if (acquired) () => slots.release() else () => ()
+
+    /** One routing request: the unit name its decision line and heat keys
+      * carry, the projection and the predicate. `need` is every column
+      * the scan must produce BEFORE the filter runs — the projection plus
+      * any predicate-only columns; coverage decisions (and the pullup
+      * segment) are made on this set, so a predicate on a column outside
+      * the projection still routes correctly. */
+    private final class Req(val unit: String, val cols: Seq[String],
+        val predicate: Column) {
+      val need: Seq[String] =
+        cols ++ referencedCols(predicate).toSeq.sorted.filterNot(cols.contains)
+      /** Predicate pushed into `df`'s scan, then the projection. */
+      def push(df: DataFrame): DataFrame =
+        df.filter(predicate).select(cols.map(col): _*)
+      /** Raw `need` columns up, predicate compute-side. */
+      def pull(df: DataFrame): DataFrame = push(df.select(need.map(col): _*))
+    }
+
+    /** Count one routing decision on its route and log it. */
+    private def record(route: Route, req: Req, reason: String): Unit = {
+      (route match {
+        case Pushdown  => pushdownN
+        case Pullup    => pullupN
+        case CacheOnly => cacheOnlyN
+        case Hybrid    => hybridN
+      }).incrementAndGet()
+      logDecision(req.unit, req.need, route, reason)
+    }
+
+    /** The forced-mode arms every entry point shares, over the unit's
+      * whole plain scan `src`. `ModePullup`: raw columns up, filter
+      * compute-side, no cache participation (neither lookup nor
+      * admission). `ModePushdownOnly` cannot fall back: a saturated store
+      * QUEUES bounded-time for a slot ([[acquireForced]] — the reference's
+      * gate queues, it never bypasses) and only past the wait is admitted
+      * over budget, counted and logged, never blocked on forever. None for
+      * the cache-consulting modes. */
+    private def forcedArm(mode: ScanMode, req: Req, pullupWhy: String,
+        pushdownWhy: String)(src: => DataFrame): Option[ScanLease] =
+      mode match {
+        case ModePullup =>
+          record(Pullup, req, pullupWhy)
+          Some(noopLease(req.pull(src), Pullup))
+        case ModePushdownOnly =>
+          val (acquired, suffix) = acquireForced()
+          record(Pushdown, req, pushdownWhy + suffix)
+          Some(new ScanLease(req.push(src), Pushdown, slotRelease(acquired)))
+        case _ => None
+      }
+
+    /** The cache REFUSED an admission. Under a LAZY policy the refused
+      * frame was never executed; under an EAGER one (MeasuredWLFU) it is
+      * already materialized, and discarding it for another route would
+      * re-read storage — so a caller whose lease spans execution may
+      * serve it once under a pin (`Some(release)`). A plan-only caller
+      * would unpersist it before it ever executes: that wasted eager load
+      * is freed NOW (it was never handed out) and the caller falls back. */
+    private def refusedLease(seg: DataFrame,
+        leaseSpansExecution: Boolean): Option[() => Unit] =
+      if (leaseSpansExecution) cache.leaseRefused(seg)
+      else { cache.leaseRefused(seg).foreach(_.apply()); None }
+
+    /** Release for a frame SERVED from `cache.get`: an eager policy may
+      * have refused it after materializing, so pin the condemned frame
+      * until the lease closes — a concurrent miss can then never
+      * unpersist it mid-execution. Plan-only callers close before
+      * execution, where the pin would become an unpersist-before-execute:
+      * there the frame is left to the aged drain. */
+    private def servePin(seg: DataFrame, leaseSpansExecution: Boolean): () => Unit =
+      if (leaseSpansExecution) cache.leaseRefused(seg).getOrElse(() => ())
+      else () => ()
+
+    /** One unit of [[routeUnits]]: a hive value tuple or a shard file.
+      * `label` names it in the decision line; `region` keys its segments
+      * and heat; `keyTable` is its fingerprinted segment-table name (None:
+      * the unit cannot be fingerprinted, so it must never become resident
+      * — a stale segment would be undetectable — and rides the cold
+      * side); `build(cols)` reads its rows from storage. */
+    private final class ScanUnit(val label: String, val region: String,
+        val keyTable: Option[String], val build: Seq[String] => DataFrame)
+
+    /** The per-unit route lattice behind [[scanPartitionedMode]] and
+      * [[scanShardedMode]] — the reference's per-segment mode choice
+      * (`SegmentKey.h`: (partition, column, range);
+      * `PrePToS3PTransformer.cpp:66-77`). Each unit, in order:
+      *  - ticks its heat under `kind|unit|cols,region` (the `part|…` and
+      *    `shard|…` keys `spark.graft.heatPath` snapshots carry);
+      *  - serves cache-side from a resident segment covering `need`;
+      *  - or, hot past `hotAdmitAfter` (every unit under caching-only), is
+      *    admitted as its OWN region-keyed segment — its own bytes,
+      *    eviction priority and fingerprint. A refusal resets the unit's
+      *    heat (it re-earns admission instead of re-attempting it every
+      *    access) and serves an eager frame once ([[refusedLease]]);
+      *    failing that, caching-only (which cannot push down) serves the
+      *    unadmitted frame compute-side, any other mode goes cold;
+      *  - or goes cold.
+      * Union-width cap: past `maxHotRegions` hot legs, further units ride
+      * the cold side even when resident or eligible — a 5000-unit hot span
+      * would otherwise plan a 5000-way union of InMemoryRelations. Not a
+      * mode violation for caching-only: the overflow legs are the same
+      * compute-side raw scan its refusal arm serves.
+      *
+      * The cold side leases a pushdown slot only for KNOWN cold work, in a
+      * mode that may push down, when the store has one (pullup otherwise);
+      * `coldSide(hot, cold, acquired)` builds its frame (None: no storage
+      * side). Hot legs filter post-serve; everything unions into ONE lease
+      * whose route is Hybrid, CacheOnly, or the cold side's, logged as one
+      * `logHead` + `cache=[…] storage=[…]` decision line. */
+    private def routeUnits(kind: String, req: Req, mode: ScanMode,
+        leaseSpansExecution: Boolean, units: Seq[ScanUnit], logHead: String,
+        noColdNote: String)(coldSide: (Seq[ScanUnit], Seq[ScanUnit], Boolean) =>
+          Option[DataFrame]): ScanLease = {
+      val needSorted = req.need.sorted
+      val hot = scala.collection.mutable.Buffer.empty[(ScanUnit, DataFrame)]
+      val cold = scala.collection.mutable.Buffer.empty[ScanUnit]
+      val releases = scala.collection.mutable.Buffer.empty[() => Unit]
+      // one snapshot of the resident key set, grouped by (table, region):
+      // O(1) amortized per unit instead of a cache.keys scan per unit
+      // (r14 verdict item 7 — O(units × resident keys) at 5k units)
+      val residentByKey: Map[(String, String), Seq[SegmentKey]] =
+        cache.keys.groupBy(k => (k.table, k.region))
+      units.foreach { u => u.keyTable match {
+        case None => cold += u
+        case Some(keyTable) =>
+          val heatKey = needSorted :+ u.region
+          val heat = countAccess(kind, req.unit, heatKey)
+          val capped = hot.size >= maxHotRegions
+          val resident = if (capped) None else
+            residentByKey.getOrElse((keyTable, u.region), Nil)
+              .find(k => req.need.forall(k.columns.contains))
+          resident match {
+            case Some(k) => hot += u -> cache.get(k)(u.build(k.columns))
+            case None if !capped && (mode == ModeCachingOnly ||
+                (hotAdmitAfter > 0 && heat >= hotAdmitAfter)) =>
+              val k = SegmentKey(keyTable, needSorted, u.region)
+              val seg = cache.get(k)(u.build(needSorted))
+              if (cache.keys.contains(k)) hot += u -> seg
+              else {
+                resetAccess(kind, req.unit, heatKey)
+                refusedLease(seg, leaseSpansExecution) match {
+                  case Some(rel) => hot += u -> seg; releases += rel
+                  case None =>
+                    if (mode == ModeCachingOnly) hot += u -> seg else cold += u
+                }
+              }
+            case None => cold += u
+          }
+      }}
+      val acquired = cold.nonEmpty && mode != ModeCachingOnly && slots.tryAcquire()
+      val coldRoute: Option[Route] =
+        if (cold.isEmpty) None else Some(if (acquired) Pushdown else Pullup)
+      val frames = hot.map { case (_, seg) => req.push(seg) } ++
+        coldSide(hot.map(_._1).toSeq, cold.toSeq, acquired)
+      val route = (hot.nonEmpty, coldRoute) match {
+        case (true, Some(_))  => Hybrid
+        case (true, None)     => CacheOnly
+        case (false, Some(r)) => r
+        case (false, None)    => Pushdown // no unit at all
+      }
+      record(route, req, logHead +
+        s"cache=[${hot.map(_._1.label).mkString(",")}] " +
+        s"storage=[${cold.map(_.label).mkString(",")}]" +
+        coldRoute.fold(noColdNote)(r => s" (cold side ${r.toString.toLowerCase})"))
+      new ScanLease(frames.reduce(_ unionByName _), route, () => {
+        releases.foreach(_.apply()); if (acquired) slots.release()
+      })
+    }
 
     /** Build the scan on the best route the cache contents and the
       * store's admission state allow, preference-ordered exactly like the
@@ -1153,8 +1324,13 @@ object HybridScan {
       *    storage (slot-leased, like the full lattice's pushdown route);
       *  - `ModeCachingOnly`: serve from resident segments, load on miss,
       *    never push down (the cache-only + pullup-load branches);
-      *  - `ModeHybrid`: the full preference lattice (default). */
-    /** @param leaseSpansExecution true (default) when the caller closes
+      *  - `ModeHybrid`: the full preference lattice (default).
+      * The whole table is the one unit with row ordinals, so it keeps its
+      * own hybrid arms (the ordinal zip and hot-set promotion); the forced
+      * modes and refused admissions share the per-unit lattice's helpers
+      * ([[forcedArm]], [[refusedLease]]).
+      *
+      * @param leaseSpansExecution true (default) when the caller closes
       *        the returned lease AFTER executing the frame (the
       *        runQueryMode bracket): a refused-but-materialized eager
       *        frame may then be SERVED under the lease's pin. False for
@@ -1167,90 +1343,44 @@ object HybridScan {
     def scanMode(s: SparkSession, dir: String, table: String,
         cols: Seq[String], predicate: Column, mode: ScanMode,
         leaseSpansExecution: Boolean = true): ScanLease = {
-      // every column the scan must produce BEFORE the filter runs: the
-      // projection plus any predicate-only columns — coverage decisions
-      // (and the pullup segment) are made on this set, so a predicate on
-      // a column outside the projection still routes correctly
-      val need = (cols ++ referencedCols(predicate).toSeq.sorted.filterNot(cols.contains))
-
+      val req = new Req(table, cols, predicate)
+      val need = req.need
+      val path = Tables.path(dir, table)
       // memoized relation (r18, r17 verdict item 4): a fresh
       // `read.parquet` here re-paid listing + footer resolution on EVERY
-      // routing decision — per leaf, per query, per run (~20-70 ms each;
-      // on the throttled store legs, footer bytes through the throttle
-      // too). The router scans only the catalogue's immutable base
-      // tables through this path, so Tables.load's plan-metadata memo is
-      // exactly as safe here as it is for the DataFrame operators. The
-      // hybrid/ordinal FETCH sides deliberately stay freshly-resolved:
-      // their listing fingerprint must rotate on an external same-name
-      // rewrite (spec-pinned), which a memoized relation would defeat.
+      // routing decision (~20-70 ms each; on the throttled store legs,
+      // footer bytes through the throttle too). The memo is exactly as
+      // safe here as for the DataFrame operators: graft's writers drop a
+      // rewritten table's entries ([[Tables.wrote]]). The hybrid/ordinal
+      // FETCH sides deliberately stay freshly-resolved: their listing
+      // fingerprint must rotate on an external same-name rewrite
+      // (spec-pinned), which a memoized relation would defeat.
       def plainScan() = Tables.load(s, dir, table)
 
-      def pushdownLease(reason: String): ScanLease = {
-        // pushdown-only mode cannot fall back: a saturated store QUEUES
-        // bounded-time for a slot (acquireForced — the reference's gate
-        // queues, it never bypasses) and only past the wait is admitted
-        // over budget — recorded in the counter and the decision log
-        // (never silent), never blocked on forever (a zero-slot router
-        // in this mode must not hang)
-        val (acquired, suffix) = acquireForced()
-        pushdownN.incrementAndGet()
-        logDecision(table, need, Pushdown, reason + suffix)
-        new ScanLease(
-          plainScan().filter(predicate).select(cols.map(col): _*),
-          Pushdown, if (acquired) () => slots.release() else () => ())
-      }
-
       def pullupLoad(reason: String): ScanLease = {
-        pullupN.incrementAndGet()
-        logDecision(table, need, Pullup, reason)
-        val seg = cache.get(pullupKey(table, need)) {
-          plainScan().select(need.sorted.map(col): _*)
-        }
-        // an eager policy may have REFUSED admission after materializing
-        // `seg` — pin the condemned frame until this lease closes, so a
-        // concurrent miss can never unpersist it mid-execution. Plan-only
-        // callers close before execution: there the pin would become an
-        // unpersist-before-execute, so the frame is left to the aged drain.
-        val rel =
-          if (leaseSpansExecution) cache.leaseRefused(seg).getOrElse(() => ())
-          else () => ()
-        new ScanLease(seg.filter(predicate).select(cols.map(col): _*), Pullup, rel)
+        record(Pullup, req, reason)
+        val seg = pullupSegment(table, need)(plainScan())
+        new ScanLease(req.push(seg), Pullup, servePin(seg, leaseSpansExecution))
       }
 
       def cacheOnly(k: SegmentKey, reason: String): ScanLease = {
-        cacheOnlyN.incrementAndGet()
-        logDecision(table, need, CacheOnly, reason)
+        record(CacheOnly, req, reason)
         val seg = cache.get(k) {
           // race-rebuild must reproduce the key's exact shape: ordinal
-          // segments rebuild through the mergedScan builder (partition +
-          // sort by the zip keys), plain ones as a bare projection
+          // segments rebuild through the zip-segment builder, plain ones
+          // as a bare projection
           if (k.columns.contains(FileCol))
-            ordinalScan(s, dir, table, dataCols(k),
-              listPathSession(s, Tables.path(dir, table)))
-              .repartition(col(PosCol), col(FileCol))
-              .sortWithinPartitions(col(PosCol), col(FileCol))
+            ordinalSegment(s, path, dataCols(k), listPathSession(s, path))
           else
             plainScan().select(dataCols(k).map(col): _*)
         }
-        // same pin-vs-aged-drain rule as pullupLoad
-        val rel =
-          if (leaseSpansExecution) cache.leaseRefused(seg).getOrElse(() => ())
-          else () => ()
-        new ScanLease(seg.filter(predicate).select(cols.map(col): _*), CacheOnly, rel)
+        new ScanLease(req.push(seg), CacheOnly, servePin(seg, leaseSpansExecution))
       }
 
-      mode match {
-        case ModePullup =>
-          // the reference's PULLUP: raw bytes up, filter compute-side, no
-          // cache participation at all (neither lookup nor admission)
-          pullupN.incrementAndGet()
-          logDecision(table, need, Pullup,
-            "mode=pullup: raw columns up, filter compute-side, no cache participation")
-          noopLease(plainScan().select(need.map(col): _*)
-            .filter(predicate).select(cols.map(col): _*), Pullup)
-        case ModePushdownOnly =>
-          pushdownLease("mode=pushdown: filter+projection pushed to storage")
-        case ModeCachingOnly =>
+      forcedArm(mode, req,
+        "mode=pullup: raw columns up, filter compute-side, no cache participation",
+        "mode=pushdown: filter+projection pushed to storage")(plainScan())
+        .getOrElse(if (mode == ModeCachingOnly) {
           // cache-resident when covered, load-and-admit when not — the
           // fingerprint/listing machinery is not consulted because this
           // mode never zips (plain segments carry no ordinals)
@@ -1261,14 +1391,14 @@ object HybridScan {
             case None    => pullupLoad(
               s"no covering segment: loading [${need.sorted.mkString(",")}]")
           }
-        case ModeHybrid =>
+        } else {
           // ONE listing serves the fingerprint check here AND the merged
           // scan's segment key below — the router must not multiply
           // listings per routing decision (listingCalls spec-pinned), and
           // it comes from the SESSION listing cache (r12): a conf-mode
           // workload lists each table once per session, not once per
           // query; graft's writers invalidate (see listPathSession)
-          val tl = listPathSession(s, Tables.path(dir, table))
+          val tl = listPathSession(s, path)
           // resident = plain pullup segments (unfingerprinted) plus
           // ordinal segments built under the CURRENT file listing; an
           // ordinal segment whose layout fingerprint no longer matches is
@@ -1288,7 +1418,6 @@ object HybridScan {
           // implies is persistently worse than this zip)
           def hybridZip(k: SegmentKey, overlap: Seq[String],
               notePrefix: String = ""): ScanLease = {
-            hybridN.incrementAndGet()
             val fetchCols = need.filterNot(overlap.contains)
             // push-vs-post at CONJUNCT granularity: every AND-part that
             // references only fetched columns executes at storage (the
@@ -1304,7 +1433,7 @@ object HybridScan {
             val fetchPred = pushParts
               .reduceOption(org.apache.spark.sql.catalyst.expressions.And)
               .map(org.apache.spark.sql.GraftBridge.column)
-            logDecision(table, need, Hybrid,
+            record(Hybrid, req,
               notePrefix +
               s"partial segment [${overlap.mkString(",")}] resident; " +
               s"fetching [${fetchCols.mkString(",")}] from storage " +
@@ -1314,6 +1443,29 @@ object HybridScan {
             val filtered =
               if (postParts.isEmpty) merged else merged.filter(predicate)
             noopLease(filtered.select(cols.map(col): _*), Hybrid)
+          }
+          // load-and-admit the zip-capable ordinal form of `need` (same
+          // build as mergedScan's segment, so later wider scans merge
+          // against it with no exchange on this side). A refusal resets
+          // the `kind` counter so the set re-earns its heat, then serves
+          // an eager frame once or takes `fallback(note)`.
+          def admitOrdinal(kind: String, admitted: String, refusedNote: String)(
+              fallback: String => ScanLease): ScanLease = {
+            val k = ordinalKey(table, tl.fingerprint, need.sorted)
+            val seg = cache.get(k)(ordinalSegment(s, path, need.sorted, tl))
+            if (cache.keys.contains(k)) {
+              record(Pullup, req, admitted)
+              noopLease(req.push(seg), Pullup)
+            } else {
+              resetAccess(kind, table, need)
+              refusedLease(seg, leaseSpansExecution) match {
+                case Some(rel) =>
+                  record(Pullup, req,
+                    refusedNote + "serving the already-materialized frame once")
+                  new ScanLease(req.push(seg), Pullup, rel)
+                case None => fallback(refusedNote)
+              }
+            }
           }
           full match {
             case Some(k) => cacheOnly(k,
@@ -1328,117 +1480,36 @@ object HybridScan {
                 // so promotion takes one more signal than a miss), admit
                 // full residency and stop paying. The narrower segment it
                 // zipped against goes cold and ages out by policy.
-                val fk = ordinalKey(table, tl.fingerprint, need.sorted)
-                val seg = cache.get(fk) {
-                  ordinalScan(s, dir, table, need.sorted, tl)
-                    .repartition(col(PosCol), col(FileCol))
-                    .sortWithinPartitions(col(PosCol), col(FileCol))
-                }
-                if (cache.keys.contains(fk)) {
-                  pullupN.incrementAndGet()
-                  logDecision(table, need, Pullup,
-                    s"hot zipped set: promoting [${need.sorted.mkString(",")}] " +
-                    s"to full residency (was zipping against [${overlap.mkString(",")}])")
-                  noopLease(seg.filter(predicate).select(cols.map(col): _*), Pullup)
-                } else {
-                  // admission REFUSED (capacity/policy): reset the counter
-                  // so the set re-earns promotion instead of re-attempting
-                  // it every access. Under a LAZY policy the refused frame
-                  // was never executed — its build was plan-only work, so
-                  // serve by the zip the promotion preempted. Under an
-                  // EAGER policy (MeasuredWLFU) the frame is ALREADY
-                  // materialized (the measure-load ran before admission):
-                  // discarding it for a zip would re-read storage — serve
-                  // this one query FROM the condemned frame, released when
-                  // the lease closes.
-                  resetAccess("zip", table, need)
-                  val lease =
-                    if (leaseSpansExecution) cache.leaseRefused(seg) else None
-                  lease match {
-                    case Some(rel) =>
-                      pullupN.incrementAndGet()
-                      logDecision(table, need, Pullup,
-                        "promotion refused by cache admission (zip counter " +
-                        "reset); serving the already-materialized frame once")
-                      new ScanLease(
-                        seg.filter(predicate).select(cols.map(col): _*),
-                        Pullup, rel)
-                    case None =>
-                      // plan-only caller: free the wasted eager load NOW
-                      // (it was never handed out) instead of aging it
-                      if (!leaseSpansExecution)
-                        cache.leaseRefused(seg).foreach(_.apply())
-                      hybridZip(k, overlap, notePrefix =
-                        "promotion refused by cache admission (zip counter reset); ")
-                  }
-                }
+                admitOrdinal("zip",
+                  s"hot zipped set: promoting [${need.sorted.mkString(",")}] " +
+                  s"to full residency (was zipping against [${overlap.mkString(",")}])",
+                  "promotion refused by cache admission (zip counter reset); ")(
+                  hybridZip(k, overlap, _))
               case Some((k, overlap)) => hybridZip(k, overlap)
               case None =>
                 val seen = countAccess("miss", table, need)
-                lazy val k = ordinalKey(table, tl.fingerprint, need.sorted)
-                lazy val seg = cache.get(k) {
-                  ordinalScan(s, dir, table, need.sorted, tl)
-                    .repartition(col(PosCol), col(FileCol))
-                    .sortWithinPartitions(col(PosCol), col(FileCol))
-                }
-                if (hotAdmitAfter > 0 && seen >= hotAdmitAfter &&
-                    { seg; cache.keys.contains(k) }) {
-                  // hot set: load-and-admit the zip-capable ordinal form
-                  // (same build as mergedScan's segment: partitioned and
-                  // sorted by the zip key, so later wider scans merge
-                  // against it with no exchange on this side)
-                  pullupN.incrementAndGet()
-                  logDecision(table, need, Pullup,
-                    s"hot column set (access #$seen ≥ $hotAdmitAfter): " +
-                    s"loading zip-capable segment [${need.sorted.mkString(",")}]")
-                  noopLease(
-                    seg.filter(predicate).select(cols.map(col): _*), Pullup)
-                } else {
-                  // either not yet hot, or the hot admission was REFUSED —
-                  // then reset the counter and route like a cold miss (an
-                  // unpersisted repartition+sort frame would be strictly
-                  // worse than a straight pushdown scan). Exception, as in
-                  // the promotion branch: an EAGER policy already
-                  // materialized the refused frame — serve this one query
-                  // from it under a lease instead of re-reading storage.
-                  val refused = hotAdmitAfter > 0 && seen >= hotAdmitAfter
-                  val refusedLease =
-                    if (refused && leaseSpansExecution) cache.leaseRefused(seg)
-                    else None
-                  if (refused && !leaseSpansExecution)
-                    cache.leaseRefused(seg).foreach(_.apply())
-                  val refusedNote =
-                    if (refused) {
-                      resetAccess("miss", table, need)
-                      "hot-set admission refused by cache (miss counter reset); "
-                    } else ""
-                  if (refusedLease.isDefined) {
-                    pullupN.incrementAndGet()
-                    logDecision(table, need, Pullup, refusedNote +
-                      "serving the already-materialized frame once")
-                    new ScanLease(
-                      seg.filter(predicate).select(cols.map(col): _*),
-                      Pullup, refusedLease.get)
-                  } else if (slots.tryAcquire()) {
-                    pushdownN.incrementAndGet()
-                    logDecision(table, need, Pushdown, refusedNote +
+                // not yet hot, or the hot admission was refused: route like
+                // a cold miss (an unpersisted repartition+sort frame would
+                // be strictly worse than a straight pushdown scan)
+                def coldMiss(note: String): ScanLease =
+                  if (slots.tryAcquire()) {
+                    record(Pushdown, req, note +
                       s"no usable segment (access #$seen); pushdown slot acquired")
-                    new ScanLease(
-                      plainScan().filter(predicate).select(cols.map(col): _*),
-                      Pushdown, () => slots.release())
-                  } else pullupLoad(refusedNote +
+                    new ScanLease(req.push(plainScan()), Pushdown,
+                      () => slots.release())
+                  } else pullupLoad(note +
                     "no usable segment and the store is saturated: pullup load")
-                }
+                if (hotAdmitAfter > 0 && seen >= hotAdmitAfter)
+                  admitOrdinal("miss",
+                    s"hot column set (access #$seen ≥ $hotAdmitAfter): " +
+                    s"loading zip-capable segment [${need.sorted.mkString(",")}]",
+                    "hot-set admission refused by cache (miss counter reset); ")(
+                    coldMiss)
+                else coldMiss("")
             }
           }
-      }
+        })
     }
-
-    /** [[scanPartitionedMode]] on the full lattice. */
-    def scanPartitioned(s: SparkSession, path: String, segName: String,
-        cols: Seq[String], predicate: Column, partitionCol: String): ScanLease =
-      scanPartitionedMode(s, path, segName, cols, predicate, partitionCol,
-        ModeHybrid)
 
     /** Single-partition-column [[scanPartitionedMode]] — the common lake
       * layout; the multi-column overload carries the semantics. */
@@ -1448,29 +1519,25 @@ object HybridScan {
       scanPartitionedMode(s, path, segName, cols, predicate,
         Seq(partitionCol), mode, leaseSpansExecution, PartitionedRead.Parquet)
 
-    /** Per-PARTITION route lattice over a hive-partitioned layout (r12) —
-      * the reference's ACTUAL cache granularity: its `SegmentKey` is
+    /** Per-PARTITION routing over a hive-partitioned layout (r12) — the
+      * reference's ACTUAL cache granularity: its `SegmentKey` is
       * (partition, column, range) and its hybrid transformer wires
       * CACHING vs PUSHDOWN independently per partition
       * (`PrePToS3PTransformer.cpp:197-460`). [[scanMode]]'s whole-table
       * admission is right for flat tables; at 100 TB "the hot table" is
-      * never hot uniformly — the hot DAYS/REGIONS are — and a whole-table
-      * promotion is a full-table load triggered by the third access. Here
-      * every touched partition value earns heat separately
-      * (`hotAdmitAfter` accesses, same scan-resistant rule), is admitted
-      * as its OWN region-keyed segment (its own bytes, its own eviction
-      * priority, its own per-partition listing fingerprint), and serves
-      * cache-side while the still-cold partitions scan storage in one
-      * partition-pruned, predicate-pushed pass. Admission never costs
-      * more than one partition's load; eviction under pressure sheds the
-      * coldest DAYS, not the table.
+      * never hot uniformly — the hot DAYS/REGIONS are. Each touched
+      * partition value is one unit of the shared per-unit lattice
+      * ([[routeUnits]]): it earns heat, is admitted and evicted on its
+      * own, and serves cache-side while the still-cold partitions scan
+      * storage in one partition-pruned, predicate-pushed pass.
       *
-      * Partition-only predicate conjuncts select the touched values
-      * driver-side (over the listing's directory names — no file I/O);
-      * the remaining conjuncts push into the cold scan and filter the
-      * cached side post-serve. Partitions are disjoint, so the
-      * cache/storage union is exact by construction — every route is
-      * result-identical, the [[ScanMode]] contract.
+      * This adapter owns what belongs to the layout: partition-only
+      * predicate conjuncts select the touched values driver-side (over
+      * the listing's directory names — no file I/O); the remaining
+      * conjuncts push into the cold scan and filter the cached side
+      * post-serve. Partitions are disjoint, so the cache/storage union is
+      * exact by construction — every route is result-identical, the
+      * [[ScanMode]] contract.
       *
       * MULTI-LEVEL layouts (r13): `partitionCols` may name several hive
       * partition columns (`date=…/region=…`) — the routing unit is then
@@ -1487,41 +1554,23 @@ object HybridScan {
         mode: ScanMode, leaseSpansExecution: Boolean,
         readSpec: PartitionedRead): ScanLease = {
       require(partitionCols.nonEmpty, "partitionCols must be non-empty")
-      val need =
-        (cols ++ referencedCols(predicate).toSeq.sorted.filterNot(cols.contains))
+      val req = new Req(segName, cols, predicate)
       // ONE relation resolution per (session, path, spec) — not per
-      // decision: every derived frame (mode early-returns, region
-      // builds, the cold scan) filters/selects off this base, and the
-      // resolution itself (Spark's InMemoryFileIndex partition
+      // decision: every derived frame filters/selects off this base, and
+      // the resolution itself (Spark's InMemoryFileIndex partition
       // discovery, a parallel listing job at 5k+ directories) is cached
       // through [[baseFrameSession]] under the same writer-invalidation
-      // contract as the table listings — a fresh read per decision paid
-      // the whole discovery once per QUERY (r14 verdict item 2).
-      // readSpec carries the leaf's format/schema/options, so CSV and
-      // JSONL lake tables route per partition exactly like parquet.
+      // contract as the table listings (r14 verdict item 2). readSpec
+      // carries the leaf's format/schema/options, so CSV and JSONL lake
+      // tables route per partition exactly like parquet.
       val base = baseFrameSession(s, path, readSpec)
-      def plainScan() = base
-      mode match {
-        case ModePullup =>
-          pullupN.incrementAndGet()
-          logDecision(segName, need, Pullup,
-            "mode=pullup: raw partitions up, filter compute-side")
-          return noopLease(plainScan().select(need.map(col): _*)
-            .filter(predicate).select(cols.map(col): _*), Pullup)
-        case ModePushdownOnly =>
-          // same queue-then-admit discipline as the whole-table arm
-          val (acquired, suffix) = acquireForced()
-          pushdownN.incrementAndGet()
-          logDecision(segName, need, Pushdown,
-            "mode=pushdown: partition-pruned, predicate pushed" + suffix)
-          return new ScanLease(
-            plainScan().filter(predicate).select(cols.map(col): _*),
-            Pushdown, if (acquired) () => slots.release() else () => ())
-        case _ => ()
-      }
+      val forced = forcedArm(mode, req,
+        "mode=pullup: raw partitions up, filter compute-side",
+        "mode=pushdown: partition-pruned, predicate pushed")(base)
+      if (forced.nonEmpty) return forced.get
       val tl = listPathSession(s, path)
       val dtypes = partitionCols.map(pc =>
-        pc -> plainScan().schema(pc).dataType).toMap
+        pc -> base.schema(pc).dataType).toMap
       // Directory renderings are Hive-ESCAPED and may be the
       // default-partition sentinel for NULL: match rows by the UNESCAPED
       // value (null for the sentinel) under null-safe equality, or the
@@ -1628,33 +1677,25 @@ object HybridScan {
       if (uncastable.nonEmpty) {
         val acquired = mode != ModeCachingOnly && slots.tryAcquire()
         val route = if (acquired) Pushdown else Pullup
-        (if (acquired) pushdownN else pullupN).incrementAndGet()
-        logDecision(segName, need, route,
+        record(route, req,
           "partition values not exactly renderable as " +
           s"[${partitionCols.map(pc => dtypes(pc).simpleString).mkString(",")}] " +
           s"(${uncastable.take(3).mkString(",")}): per-partition route " +
           "refused, serving one partition-pruned storage scan")
         // route-true shapes: only an acquired slot earns the
         // predicate-pushed scan; the fallback pulls raw columns up
-        val df =
-          if (acquired) plainScan().filter(predicate).select(cols.map(col): _*)
-          else plainScan().select(need.map(col): _*).filter(predicate)
-            .select(cols.map(col): _*)
-        return new ScanLease(df, route,
-          if (acquired) () => slots.release() else () => ())
+        return new ScanLease(if (acquired) req.push(base) else req.pull(base),
+          route, slotRelease(acquired))
       }
       // touched partition tuples: already evaluated in the single
       // collect above (IS NULL keeps the sentinel partition; with no
       // partition-only conjuncts every tuple is touched)
       val touched: Seq[String] = collected.collect { case (k, _, true) => k }
       if (touched.isEmpty) {
-        pushdownN.incrementAndGet()
-        logDecision(segName, need, Pushdown,
+        record(Pushdown, req,
           "no partition matches the predicate: empty partition-pruned scan")
-        return noopLease(
-          plainScan().filter(predicate).select(cols.map(col): _*), Pushdown)
+        return noopLease(req.push(base), Pushdown)
       }
-      val needSorted = need.sorted
       // collapse directory rendering TUPLES to TYPED value tuples: two
       // renderings can cast to ONE value (k=1 vs k=01, 2024-1-5 vs
       // 2024-01-05) and row matching is by VALUE — ungrouped, two hot
@@ -1665,167 +1706,64 @@ object HybridScan {
       // group keys on None — typed tuples group directly, no sentinel.
       val typedOf: Map[String, Seq[Option[String]]] =
         collected.map { case (k, typed, _) => k -> typed }.toMap
-      val groups: Seq[(Seq[Option[String]], Seq[String])] = {
+      val groups: Seq[Seq[String]] = {
         val byTyped = touched.groupBy(typedOf)
-        touched.map(typedOf).distinct.map(t => t -> byTyped(t).sorted)
+        touched.map(typedOf).distinct.map(t => byTyped(t).sorted)
       }
-      // group fingerprints hash path-sorted file rows across every
-      // member rendering's files, deterministic across rendering order
-      // (filesByTuple was built in ONE listing pass above)
-      def groupFp(members: Seq[String]): String =
-        TableListing(members.flatMap(k =>
-          filesByTuple.getOrElse(tupleOfKey(k), Nil))
-          .sortBy(_._1)).fingerprint
       def tupleMatch(t: Seq[String]): Column =
         partitionCols.zip(t).map { case (pc, v) =>
           col(pc) <=> partLit(pc, v) }.reduce(_ && _)
-      def buildRegion(canon: Seq[String], cs: Seq[String]) =
-        plainScan().filter(tupleMatch(canon)).select(cs.map(col): _*)
-      // hotTuples is triple-duty: the complement's hot disjunction (the
-      // correctness-critical use), the route decision, and the log line
-      val hotTuples = scala.collection.mutable.Buffer.empty[Seq[String]]
-      val hotFrames = scala.collection.mutable.Buffer.empty[DataFrame]
-      val releases = scala.collection.mutable.Buffer.empty[() => Unit]
-      val coldVals = scala.collection.mutable.Buffer.empty[String]
-      // one snapshot of the resident key set, grouped by (table, region):
-      // the per-group lookup below is O(1) amortized instead of scanning
-      // cache.keys once per touched group (r14 verdict item 7's note —
-      // O(groups × resident keys) at a 5k-partition table)
-      val residentByKey: Map[(String, String), Seq[SegmentKey]] =
-        cache.keys.groupBy(k => (k.table, k.region))
-      groups.foreach { case (_, members) =>
+      val units = groups.map { members =>
         val canon = tupleOfKey(members.head)
-        val label = canon.mkString("/")
-        val region = partitionCols.zip(canon)
-          .map { case (pc, v) => s"$pc=$v" }.mkString("/")
-        val keyTable = s"$segName@${groupFp(members)}"
-        val heat = countAccess("part", segName, needSorted :+ region)
-        // union-width cap: past `maxHotRegions` hot legs, further values
-        // ride the complement even when resident/eligible — a
-        // 5000-partition hot span would otherwise plan a 5000-way union
-        // of InMemoryRelations (driver planning blowup for marginal byte
-        // savings; the §19.4 scale note made a knob). Not a mode
-        // violation for caching-only: the overflow legs are the same
-        // compute-side raw scan its refusal arm serves.
-        val hotCapped = hotTuples.size >= maxHotRegions
-        val resident = if (hotCapped) None else
-          residentByKey.getOrElse((keyTable, region), Nil)
-            .find(k => need.forall(k.columns.contains))
-        def serveHot(seg: DataFrame): Unit = {
-          hotTuples += canon; hotFrames += seg
-        }
-        def admitRegion(): Unit = {
-          val k = SegmentKey(keyTable, needSorted, region)
-          val seg = cache.get(k)(buildRegion(canon, needSorted))
-          if (cache.keys.contains(k)) serveHot(seg)
-          else {
-            resetAccess("part", segName, needSorted :+ region)
-            val relOpt = if (leaseSpansExecution) cache.leaseRefused(seg) else None
-            relOpt match {
-              case Some(rel) => // eager refusal: serve this once under lease
-                serveHot(seg); releases += rel
-              case None =>
-                if (!leaseSpansExecution) cache.leaseRefused(seg).foreach(_.apply())
-                if (mode == ModeCachingOnly) {
-                  // caching-only cannot push down: serve the unadmitted
-                  // frame compute-side (pullup semantics for this region)
-                  serveHot(seg)
-                } else coldVals += label
-            }
-          }
-        }
-        resident match {
-          case Some(k) =>
-            serveHot(cache.get(k)(buildRegion(canon, k.columns)))
-          case None =>
-            if (hotCapped) coldVals += label
-            else if (mode == ModeCachingOnly ||
-                (hotAdmitAfter > 0 && heat >= hotAdmitAfter)) admitRegion()
-            else coldVals += label
-        }
+        // group fingerprints hash path-sorted file rows across every
+        // member rendering's files, deterministic across rendering order
+        val fp = TableListing(members.flatMap(k =>
+          filesByTuple.getOrElse(tupleOfKey(k), Nil)).sortBy(_._1)).fingerprint
+        new ScanUnit(canon.mkString("/"),
+          partitionCols.zip(canon).map { case (pc, v) => s"$pc=$v" }.mkString("/"),
+          Some(s"$segName@$fp"),
+          cs => base.filter(tupleMatch(canon)).select(cs.map(col): _*))
       }
-      val frames = scala.collection.mutable.Buffer.empty[DataFrame]
-      hotFrames.foreach(seg =>
-        frames += seg.filter(predicate).select(cols.map(col): _*))
-      var release: () => Unit = () => releases.foreach(_.apply())
-      // The storage side is the COMPLEMENT of the hot values, not an
-      // explicit cold-value disjunction (r12 review): a listing the
-      // session cache served STALE can be missing whole partitions, and
-      // an enumerated cold side would silently drop their rows where
-      // pullup/pushdown (fresh relation) return them. The complement
-      // carries the full predicate — known cold partitions are pruned
-      // into it natively, listing-unknown partitions fall through to
-      // storage, and when everything touched is hot it prunes to zero
-      // files. The partition unit here is the typed VALUE (groups,
-      // above), so the staleness guarantee is value-space: rows of a
-      // VALUE the listing has never seen always reach the result via
-      // the complement; new bytes landing in an already-HOT value's
-      // value-space (another rendering of it included) are an in-place
-      // rewrite of that partition — REFRESH semantics, Spark's own
-      // catalog-cache contract. Staleness therefore costs ROUTING or a
-      // REFRESH, never rows of an unseen value.
-      val hotDisj = hotTuples.toSeq match {
-        case Seq() => lit(false)
-        case ts    => ts.map(tupleMatch).reduce(_ || _)
-      }
-      // a slot is leased only for KNOWN cold work; the all-hot case's
-      // complement normally prunes to zero files (listing-unknown
-      // partitions ride it unmetered — rare, and tiny by definition of
-      // "the cache had never heard of them")
-      val acquired = coldVals.nonEmpty && mode != ModeCachingOnly &&
-        slots.tryAcquire()
-      val coldRoute: Option[Route] =
-        if (coldVals.nonEmpty) Some(if (acquired) Pushdown else Pullup) else None
-      val coldScan =
-        if (acquired) plainScan().filter(!hotDisj && predicate)
+      routeUnits("part", req, mode, leaseSpansExecution, units,
+          "per-partition: ", " (storage side is the safety complement)") {
+          (hot, _, acquired) =>
+        // The storage side is the COMPLEMENT of the hot values, not an
+        // explicit cold-value disjunction (r12 review): a listing the
+        // session cache served STALE can be missing whole partitions, and
+        // an enumerated cold side would silently drop their rows where
+        // pullup/pushdown (fresh relation) return them. The complement
+        // carries the full predicate — known cold partitions are pruned
+        // into it natively, listing-unknown partitions fall through to
+        // storage (unmetered when no known cold work took a slot — rare,
+        // and tiny by definition), and when everything touched is hot it
+        // prunes to zero files. The staleness guarantee is value-space:
+        // rows of a VALUE the listing has never seen always reach the
+        // result via the complement; new bytes landing in an already-HOT
+        // value's value-space are an in-place rewrite of that partition —
+        // REFRESH semantics, Spark's own catalog-cache contract.
+        val hotDisj = hot.map(u => tupleMatch(tupleOfKey(u.label)))
+          .reduceOption(_ || _).getOrElse(lit(false))
+        Some(if (acquired) base.filter(!hotDisj && predicate)
           .select(cols.map(col): _*)
-        else plainScan().filter(!hotDisj).select(need.map(col): _*)
-          .filter(predicate).select(cols.map(col): _*)
-      frames += coldScan
-      if (acquired) {
-        val r0 = release; release = () => { r0(); slots.release() }
+        else req.pull(base.filter(!hotDisj)))
       }
-      val route = (hotTuples.nonEmpty, coldRoute) match {
-        case (true, Some(_)) => Hybrid
-        case (true, None)    => CacheOnly
-        case (false, Some(r)) => r
-        case (false, None)    => Pushdown // touched all refused plan-only
-      }
-      route match {
-        case Hybrid    => hybridN.incrementAndGet()
-        case CacheOnly => cacheOnlyN.incrementAndGet()
-        case Pushdown  => pushdownN.incrementAndGet()
-        case Pullup    => pullupN.incrementAndGet()
-      }
-      logDecision(segName, need, route,
-        s"per-partition: cache=[${hotTuples.map(_.mkString("/")).mkString(",")}] " +
-        s"storage=[${coldVals.mkString(",")}]" +
-        coldRoute.fold(" (storage side is the safety complement)")(r =>
-          s" (cold side ${r.toString.toLowerCase})"))
-      new ScanLease(frames.reduce(_ unionByName _), route, release)
     }
 
-    /** Per-SHARD route lattice over a zone-mapped sharded flat table
-      * (r14) — the reference's OTHER partition shape: its catalogue
-      * enumerates a table as numbered shard FILES (`T.csv.0 … T.csv.N`,
+    /** Per-SHARD routing over a zone-mapped sharded flat table (r14) —
+      * the reference's OTHER partition shape: its catalogue enumerates a
+      * table as numbered shard FILES (`T.csv.0 … T.csv.N`,
       * `README.md:57-59`) whose Partition metadata carries zone maps
       * (`fpdb-catalogue/include/fpdb/catalogue/Partition.h:23-41`), and
-      * the third component of its `SegmentKey` is exactly this RANGE —
-      * per-shard caching over a layout with no directory structure at
-      * all. [[scanPartitionedMode]] needs hive directories; this is the
-      * same admission ladder with the zone-map SIDECAR as the partition
-      * authority, composing the two pruning layers the reference
-      * composes (`PartitionPruner.cpp:23-51` prunes partitions by zone
-      * map at plan construction; the cache tier then routes what
-      * survives):
-      *
-      *  - `zonePreds` prune the shard list FIRST — a zone-pruned shard
-      *    is never read, never heated, never admitted;
-      *  - each surviving shard earns heat separately and is admitted as
-      *    its own region-keyed segment (`shard=<file>`, fingerprinted
-      *    by (path, size, mtime) so an in-place rewrite rotates it);
-      *  - the still-cold shards ride ONE multi-path scan (slot-leased
-      *    when the store admits it, pullup otherwise).
+      * the third component of its `SegmentKey` is exactly this RANGE.
+      * Each shard file that survives zone pruning is one unit of the
+      * shared per-unit lattice ([[routeUnits]]), region-keyed
+      * `shard=<file>` and fingerprinted by (path, size, mtime) so an
+      * in-place rewrite rotates it. This adapter composes the two pruning
+      * layers the reference composes (`PartitionPruner.cpp:23-51` prunes
+      * partitions by zone map at plan construction; the cache tier then
+      * routes what survives): `zonePreds` prune the shard list FIRST — a
+      * zone-pruned shard is never read, never heated, never admitted —
+      * and the still-cold shards ride ONE explicit multi-path scan.
       *
       * The explicit cold-PATH enumeration is row-safe where the
       * partitioned path needed a value-space complement: the sidecar IS
@@ -1845,16 +1783,16 @@ object HybridScan {
       * OLD segment is plan-equal to the re-keyed rebuild, and without
       * the refresh the CacheManager would materialize the rebuild FROM
       * it; ShardRouterSpec's rewrite test pins both halves). Graft's own
-      * writers do this; a missed refresh costs catalog-grade staleness,
-      * the same as any Spark table. */
+      * writers do both through one hook ([[graft.sources.Tables.wrote]]);
+      * a missed refresh costs catalog-grade staleness, the same as any
+      * Spark table. */
     def scanShardedMode(s: SparkSession, spec: graft.sources.TableSpec,
         segName: String, shards: Seq[graft.sources.ShardZoneMap],
         zonePreds: Seq[graft.sources.ZoneMapPruner.RangePred],
         cols: Seq[String], predicate: Column, mode: ScanMode,
         leaseSpansExecution: Boolean = true): ScanLease = {
       import graft.sources.{Catalog, ZoneMapPruner}
-      val need =
-        (cols ++ referencedCols(predicate).toSeq.sorted.filterNot(cols.contains))
+      val req = new Req(segName, cols, predicate)
       val surviving = ZoneMapPruner.prune(shards, zonePreds).sortBy(_.path)
       val prunedNote = s"${surviving.size}/${shards.size} shards after zone pruning"
       // multi-path reads are session-cached per (parent dir, spec,
@@ -1866,10 +1804,8 @@ object HybridScan {
       // writer-invalidation hooks drop them ([[invalidateListings]]).
       def readPaths(paths: Seq[String]) = {
         val parent = new org.apache.hadoop.fs.Path(paths.head).getParent.toString
-        val digest = java.security.MessageDigest.getInstance("MD5")
-          .digest((spec.copy(paths = Nil).toString + paths.mkString("\u0000"))
-            .getBytes("UTF-8"))
-          .map(b => f"${b & 0xff}%02x").mkString.take(16)
+        val digest = shortDigest(
+          spec.copy(paths = Nil).toString + paths.mkString("\u0000"), 16)
         cachedFrame(s, s"${listingKey(parent)}#shards:$digest")(
           Catalog.read(s, spec.copy(paths = paths)))
       }
@@ -1877,45 +1813,21 @@ object HybridScan {
       // a reader over every path would pay the full O(#shards) path
       // checks for zero rows
       def emptyScan() = readPaths(spec.paths.take(1)).limit(0)
-      mode match {
-        case ModePullup =>
-          pullupN.incrementAndGet()
-          logDecision(segName, need, Pullup,
-            s"mode=pullup: $prunedNote, raw shards up, filter compute-side")
-          val src = if (surviving.isEmpty) emptyScan()
-                    else readPaths(surviving.map(_.path))
-          return noopLease(src.select(need.map(col): _*)
-            .filter(predicate).select(cols.map(col): _*), Pullup)
-        case ModePushdownOnly =>
-          // an all-pruned scan holds no slot and never queues: nothing
-          // will be pushed to the store (r14 ADVICE — acquireForced
-          // before this check could park an empty scan for forcedWaitMs
-          // and pin a slot until lease close)
-          if (surviving.isEmpty) {
-            pushdownN.incrementAndGet()
-            logDecision(segName, need, Pushdown,
-              s"mode=pushdown: $prunedNote (all shards zone-pruned: " +
-              "empty scan, no slot)")
-            return noopLease(
-              emptyScan().filter(predicate).select(cols.map(col): _*), Pushdown)
-          }
-          val (acquired, suffix) = acquireForced()
-          pushdownN.incrementAndGet()
-          logDecision(segName, need, Pushdown,
-            s"mode=pushdown: $prunedNote" + suffix)
-          return new ScanLease(
-            readPaths(surviving.map(_.path))
-              .filter(predicate).select(cols.map(col): _*),
-            Pushdown, if (acquired) () => slots.release() else () => ())
-        case _ => ()
+      if (surviving.isEmpty && mode != ModePullup) {
+        // nothing will be pushed to the store: no slot, and pushdown-only
+        // never queues for one (r14 ADVICE — acquireForced before this
+        // check could park an empty scan for forcedWaitMs)
+        record(Pushdown, req,
+          if (mode == ModePushdownOnly) s"mode=pushdown: $prunedNote " +
+            "(all shards zone-pruned: empty scan, no slot)"
+          else "all shards zone-pruned: empty scan")
+        return noopLease(req.push(emptyScan()), Pushdown)
       }
-      if (surviving.isEmpty) {
-        pushdownN.incrementAndGet()
-        logDecision(segName, need, Pushdown,
-          "all shards zone-pruned: empty scan")
-        return noopLease(
-          emptyScan().filter(predicate).select(cols.map(col): _*), Pushdown)
-      }
+      val forced = forcedArm(mode, req,
+        s"mode=pullup: $prunedNote, raw shards up, filter compute-side",
+        s"mode=pushdown: $prunedNote")(
+        if (surviving.isEmpty) emptyScan() else readPaths(surviving.map(_.path)))
+      if (forced.nonEmpty) return forced.get
       // per-shard (size, mtime) fingerprints off ONE listing per parent
       // directory (session-cached): rewriting a shard in place must
       // rotate its segment, never serve the old bytes. Keys are
@@ -1923,110 +1835,31 @@ object HybridScan {
       // `file:/x` forms while sidecars may carry bare `/x` (first run of
       // ShardRouterSpec caught the mismatch: every shard degraded to one
       // constant "unlisted" fingerprint and a rewrite served stale bytes)
-      def pathKey(p: String): String =
-        new org.apache.hadoop.fs.Path(p).toUri.getPath
       val parents = surviving.map(z =>
         new org.apache.hadoop.fs.Path(z.path).getParent.toString).distinct
       val fileInfo: Map[String, (Long, Long)] = parents.flatMap(p =>
-        listPathSession(s, p).files.map(f => pathKey(f._1) -> ((f._2, f._3))))
+        listPathSession(s, p).files.map(f =>
+          invalidationKey(f._1) -> ((f._2, f._3))))
         .toMap
-      val needSorted = need.sorted
-      val hotNames = scala.collection.mutable.Buffer.empty[String]
-      val hotFrames = scala.collection.mutable.Buffer.empty[DataFrame]
-      val releases = scala.collection.mutable.Buffer.empty[() => Unit]
-      val coldPaths = scala.collection.mutable.Buffer.empty[String]
-      // resident snapshot keyed by (table, region): O(1) amortized per
-      // shard instead of a cache.keys scan per shard (r14 verdict item 7
-      // — O(shards × resident keys) at a 5k-shard table)
-      val residentByKey: Map[(String, String), Seq[SegmentKey]] =
-        cache.keys.groupBy(k => (k.table, k.region))
-      surviving.foreach { z =>
+      // a shard the parent listing does not show gets no key table: it
+      // rides the cold scan, which fails as loudly as a plain read if the
+      // file is gone
+      val units = surviving.map { z =>
         val name = new org.apache.hadoop.fs.Path(z.path).getName
-        val region = s"shard=$name"
-        val fpOpt = fileInfo.get(pathKey(z.path))
-          .map { case (len, mt) => s"$len:$mt" }
-        // a shard the parent listing does not show cannot be
-        // rewrite-fingerprinted — it must never become resident (a
-        // stale segment would be undetectable); it rides the cold scan,
-        // which fails as loudly as a plain read if the file is gone
-        if (fpOpt.isEmpty) { coldPaths += z.path }
+        new ScanUnit(name, s"shard=$name",
+          fileInfo.get(invalidationKey(z.path)).map { case (len, mt) =>
+            s"$segName@${shortDigest(s"${invalidationKey(z.path)}|$len:$mt")}" },
+          cs => readPaths(Seq(z.path)).select(cs.map(col): _*))
+      }
+      val pathOf = units.zip(surviving.map(_.path)).toMap
+      routeUnits("shard", req, mode, leaseSpansExecution, units,
+          s"per-shard: $prunedNote; ", "") { (_, cold, acquired) =>
+        if (cold.isEmpty) None
         else {
-        val digest = java.security.MessageDigest.getInstance("MD5")
-          .digest(s"${pathKey(z.path)}|${fpOpt.get}".getBytes("UTF-8"))
-          .map(b => f"${b & 0xff}%02x").mkString.take(8)
-        val keyTable = s"$segName@$digest"
-        val heat = countAccess("shard", segName, needSorted :+ region)
-        val hotCapped = hotNames.size >= maxHotRegions
-        val resident = if (hotCapped) None else
-          residentByKey.getOrElse((keyTable, region), Nil)
-            .find(k => need.forall(k.columns.contains))
-        def buildShard(cs: Seq[String]) =
-          readPaths(Seq(z.path)).select(cs.map(col): _*)
-        def serveHot(seg: DataFrame): Unit = {
-          hotNames += name; hotFrames += seg
-        }
-        def admitShard(): Unit = {
-          val k = SegmentKey(keyTable, needSorted, region)
-          val seg = cache.get(k)(buildShard(needSorted))
-          if (cache.keys.contains(k)) serveHot(seg)
-          else {
-            resetAccess("shard", segName, needSorted :+ region)
-            val relOpt = if (leaseSpansExecution) cache.leaseRefused(seg) else None
-            relOpt match {
-              case Some(rel) => serveHot(seg); releases += rel
-              case None =>
-                if (!leaseSpansExecution) cache.leaseRefused(seg).foreach(_.apply())
-                if (mode == ModeCachingOnly) serveHot(seg)
-                else coldPaths += z.path
-            }
-          }
-        }
-        resident match {
-          case Some(k) => serveHot(cache.get(k)(buildShard(k.columns)))
-          case None =>
-            if (hotCapped) coldPaths += z.path
-            else if (mode == ModeCachingOnly ||
-                (hotAdmitAfter > 0 && heat >= hotAdmitAfter)) admitShard()
-            else coldPaths += z.path
-        }
+          val src = readPaths(cold.map(pathOf))
+          Some(if (acquired) req.push(src) else req.pull(src))
         }
       }
-      val frames = scala.collection.mutable.Buffer.empty[DataFrame]
-      hotFrames.foreach(seg =>
-        frames += seg.filter(predicate).select(cols.map(col): _*))
-      var release: () => Unit = () => releases.foreach(_.apply())
-      val acquired = coldPaths.nonEmpty && mode != ModeCachingOnly &&
-        slots.tryAcquire()
-      val coldRoute: Option[Route] =
-        if (coldPaths.nonEmpty) Some(if (acquired) Pushdown else Pullup) else None
-      if (coldPaths.nonEmpty) {
-        frames +=
-          (if (acquired) readPaths(coldPaths.toSeq)
-            .filter(predicate).select(cols.map(col): _*)
-          else readPaths(coldPaths.toSeq).select(need.map(col): _*)
-            .filter(predicate).select(cols.map(col): _*))
-      }
-      if (acquired) {
-        val r0 = release; release = () => { r0(); slots.release() }
-      }
-      val route = (hotNames.nonEmpty, coldRoute) match {
-        case (true, Some(_))  => Hybrid
-        case (true, None)     => CacheOnly
-        case (false, Some(r)) => r
-        case (false, None)    => Pushdown // touched all refused plan-only
-      }
-      route match {
-        case Hybrid    => hybridN.incrementAndGet()
-        case CacheOnly => cacheOnlyN.incrementAndGet()
-        case Pushdown  => pushdownN.incrementAndGet()
-        case Pullup    => pullupN.incrementAndGet()
-      }
-      logDecision(segName, need, route,
-        s"per-shard: $prunedNote; cache=[${hotNames.mkString(",")}] " +
-        s"storage=[${coldPaths.map(p =>
-          new org.apache.hadoop.fs.Path(p).getName).mkString(",")}]" +
-        coldRoute.fold("")(r => s" (cold side ${r.toString.toLowerCase})"))
-      new ScanLease(frames.reduce(_ unionByName _), route, release)
     }
 
     // ---- the reference's actual admission estimate
@@ -2183,26 +2016,24 @@ object HybridScan {
       * pullup estimate, else fall back to pullup immediately. */
     def execute[T](s: SparkSession, dir: String, table: String,
         cols: Seq[String], predicate: Column)(action: DataFrame => T): (T, Route) = {
+      val req = new Req(table, cols, predicate)
+      def plain() = s.read.parquet(Tables.path(dir, table))
       def runPushdown(): (T, Route) = {
         pushdownN.incrementAndGet()
         val t0 = System.nanoTime()
-        try (action(s.read.parquet(Tables.path(dir, table))
-          .filter(predicate).select(cols.map(col): _*)), Pushdown)
+        try (action(req.push(plain())), Pushdown)
         finally { slots.release(); observe(Pushdown, System.nanoTime() - t0) }
       }
       def runPullup(): (T, Route) = {
         pullupN.incrementAndGet()
         pullupInFlight.incrementAndGet()
-        val need = (cols ++ referencedCols(predicate).toSeq.sorted.filterNot(cols.contains))
         val t0 = System.nanoTime()
         var releaseRefused: () => Unit = () => ()
         try {
-          val seg = cache.get(pullupKey(table, need)) {
-            s.read.parquet(Tables.path(dir, table)).select(need.sorted.map(col): _*)
-          }
+          val seg = pullupSegment(table, req.need)(plain())
           // pin a refused-but-materialized frame for exactly this bracket
-          releaseRefused = cache.leaseRefused(seg).getOrElse(() => ())
-          (action(seg.filter(predicate).select(cols.map(col): _*)), Pullup)
+          releaseRefused = servePin(seg, leaseSpansExecution = true)
+          (action(req.push(seg)), Pullup)
         } finally {
           releaseRefused()
           pullupInFlight.decrementAndGet()

@@ -322,6 +322,10 @@ class SegmentCache(val capacityBytes: Long, val policy: CachePolicy = LRU) {
     }
   }
 
+  /** Refused frames still pinned by an open [[leaseRefused]] lease —
+    * zero once every lease a caller took has closed (spec hook). */
+  private[graft] def leasedRefusals: Int = synchronized(condemned.count(_.leased))
+
   private def drainCondemned(): Unit = {
     // The plan canonicalization behind sameResult is the expensive part
     // and must not run under the monitor (the hit path takes it) — but

@@ -428,8 +428,7 @@ object BloomPruner {
     val cols = buildMulti(Catalog.read(s, template.copy(paths = files)),
       keys, expectedItems)
     writeSidecar(s, dir, cols)
-    graft.cache.HybridScan.invalidateListings(dir)
-    s.catalog.refreshByPath(dir)
+    Tables.wrote(s, dir)
     cols
   }
 

@@ -34,7 +34,7 @@ import org.apache.hadoop.fs.{FileStatus, FSDataInputStream, Path, PositionedRead
   * The throttle models the store regime the reference is designed for:
   * [[bytesPerSec]] simulates bounded store→compute bandwidth (bytes
   * sleep proportionally as they cross), [[openLatencyMs]] a per-GET
-  * first-byte latency. `ProfileStoreModes` uses it to reproduce the
+  * first-byte latency. The bench's `store_modes` block uses it to reproduce the
   * reference's fig-1 economics — caching/hybrid beating pullup once
   * bytes are the bottleneck — on a sandbox with no real S3 endpoint.
   *

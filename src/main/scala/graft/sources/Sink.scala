@@ -17,7 +17,7 @@ object Sink {
   /** Persist `df` as parquet partitioned by `cols` (Hive-style layout). */
   def writePartitioned(df: DataFrame, path: String, cols: String*): Unit = {
     df.write.mode(SaveMode.Overwrite).partitionBy(cols: _*).parquet(path)
-    graft.cache.HybridScan.invalidateListings(path) // writer invalidation (r12)
+    Tables.wrote(df.sparkSession, path)
   }
 
   /** Read a partitioned table back; filters on the partition columns
@@ -100,10 +100,11 @@ object Sink {
       sys.error(s"mergeInto: cannot swap in $tmp")
     }
     fs.delete(bak, true)
-    // the table's files just changed under any session listing cache —
-    // graft's own writers invalidate (external writers call
-    // HybridScan.invalidateListings themselves, the REFRESH TABLE analog)
-    graft.cache.HybridScan.invalidateListings(path)
+    // the table's files just changed under every listing, relation memo,
+    // view and cached segment over it (external writers call
+    // HybridScan.invalidateListings + refreshByPath themselves, the
+    // REFRESH TABLE analog)
+    Tables.wrote(spark, path)
     rezone(spark, path, zoneCols)
     rebloom(spark, path, bloomKeys)
   }
@@ -176,7 +177,7 @@ object Sink {
       sys.error(s"compact: cannot swap in $tmp")
     }
     fs.delete(bak, true)
-    graft.cache.HybridScan.invalidateListings(path) // writer invalidation (r12)
+    Tables.wrote(spark, path)
     rezone(spark, path, zoneCols)
     rebloom(spark, path, bloomKeys)
     (before.length, afterCount)

@@ -76,13 +76,10 @@ object Tables {
   // 118-132`); this memo gives the DataFrame path the same catalogue
   // discipline: one resolution per (session, dir, table), the ANALYZED
   // frame reused afterwards. Plan-metadata caching only — no rows are
-  // cached, every execution still scans the files. Safe while the named
-  // tables' files do not change under a session. A writer to one of these
-  // paths must call [[invalidate]] for every session that read it:
-  // `Sink.mergeInto` rewrites a table in place (a directory swap) and
-  // does not, so a session that merged into a table it has read keeps
-  // resolving the replaced files until it calls [[invalidate]] and
-  // re-registers its views. Self-joins of
+  // cached, every execution still scans the files. A writer that rewrites
+  // one of these paths calls [[wrote]], which drops every session's
+  // entries for it (and Engine re-points that table's view on the
+  // session's next query). Self-joins of
   // one memoized frame are de-duplicated by Catalyst's
   // DeduplicateRelations, same as two references to one registered view.
   // Retention is BOUNDED, not weak (r18, r17 ADVICE): a weak session key
@@ -105,6 +102,48 @@ object Tables {
         size() > MaxEntries
     }
 
+  /** Write sequence: bumped by [[wrote]] AFTER it drops memo entries, so
+    * a relation resolved before a write is served once but never cached
+    * past it (the listing-epoch fence of `HybridScan.listPathSession`). */
+  private val writeSeq = new java.util.concurrent.atomic.AtomicLong(0)
+  /** Per table path (scheme-less URI path): the write sequence of its
+    * last rewrite through [[wrote]]. */
+  private val writeMarks =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private def pathKey(p: String): String =
+    new org.apache.hadoop.fs.Path(p).toUri.getPath.stripSuffix("/")
+
+  /** Graft's writer hook: the files under `path` were just rewritten
+    * (Sink's maintenance ops, sidecar rebuilds). Everything that
+    * remembers the old files forgets them:
+    *  - the router's session listings and resolved frames
+    *    (`HybridScan.invalidateListings`);
+    *  - Spark's file indexes and cached data over the path
+    *    (`refreshByPath`) — a persisted hybrid segment of the old files
+    *    is plan-equal to its rebuild under the rotated fingerprint
+    *    (`InMemoryFileIndex` equality is by root paths), so without the
+    *    refresh the CacheManager would serve the replaced rows;
+    *  - this memo's entries for the path, across sessions, and the
+    *    path's [[writeMark]], which `Engine` compares to re-point only
+    *    the rewritten table's view. */
+  private[graft] def wrote(spark: SparkSession, path: String): Unit = {
+    graft.cache.HybridScan.invalidateListings(path)
+    spark.catalog.refreshByPath(path)
+    val k = pathKey(path)
+    relCache.synchronized {
+      relCache.keySet.removeIf { case (_, key) =>
+        val i = key.lastIndexOf('#')
+        pathKey(this.path(key.take(i), key.drop(i + 1))) == k
+      }
+    }
+    writeMarks.put(k, writeSeq.incrementAndGet())
+  }
+
+  /** Write sequence of the last [[wrote]] over `dir`'s table `name`
+    * (0 when it was never rewritten in this JVM). */
+  private[graft] def writeMark(dir: String, name: String): Long =
+    writeMarks.getOrDefault(pathKey(path(dir, name)), 0L)
+
   /** Drop a session's memoized relations (all of them — this is a rare
     * safety hatch, not a hot path). */
   def invalidate(spark: SparkSession): Unit = relCache.synchronized {
@@ -121,11 +160,13 @@ object Tables {
     // build OUTSIDE the monitor (file listing + footer read can take
     // ~100 ms; concurrent sessions must not serialize on it); racing
     // builders are benign — both frames are equivalent plan metadata,
-    // first insert wins
+    // first insert wins; a build that raced a write is not kept
+    val seq0 = writeSeq.get
     val v = build(spark, dir, name)
     relCache.synchronized {
       val cur = relCache.get(k)
-      if (cur != null) cur else { relCache.put(k, v); v }
+      if (cur != null) cur
+      else { if (writeSeq.get == seq0) relCache.put(k, v); v }
     }
   }
 

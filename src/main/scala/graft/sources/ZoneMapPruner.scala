@@ -433,8 +433,7 @@ object ZoneMapPruner {
     require(files.nonEmpty, s"rebuildSidecar: no data files under $dir")
     val zones = build(Catalog.read(s, template.copy(paths = files)), columns)
     writeSidecar(s, dir, zones)
-    graft.cache.HybridScan.invalidateListings(dir)
-    s.catalog.refreshByPath(dir)
+    Tables.wrote(s, dir)
     zones
   }
 

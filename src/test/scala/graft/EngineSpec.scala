@@ -140,4 +140,32 @@ class EngineSpec extends SparkSpec {
     // (ModeExecSpec measured zero file scans) until released here
     cache.invalidateAll()
   }
+
+  test("mergeInto re-points the writing session's orders view on its next query") {
+    import org.apache.spark.sql.functions._
+    // a private copy of the sf dir: the merge rewrites orders in place
+    val src = java.nio.file.Paths.get(dirA)
+    val dir = java.nio.file.Files.createTempDirectory("graft-engine-merge")
+    java.nio.file.Files.walk(src).forEach { f =>
+      val to = dir.resolve(src.relativize(f).toString)
+      if (java.nio.file.Files.isDirectory(f)) java.nio.file.Files.createDirectories(to)
+      else java.nio.file.Files.copy(f, to)
+    }
+    val s = spark.newSession()
+    val sql = "SELECT o_orderstatus, count(*) AS n, " +
+      "CAST(sum(CAST(o_totalprice AS DECIMAL(25,6))) AS DOUBLE) AS total " +
+      "FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus"
+    def rows(sess: org.apache.spark.sql.SparkSession) =
+      Engine.executeQuery(sess, dir.toString, sql).collect().map(_.toSeq).toSeq
+    val before = rows(s)
+    val path = s"$dir/orders.parquet"
+    val updates = s.read.parquet(path).filter(col("o_orderkey") <= 100)
+      .withColumn("o_orderstatus", lit("X"))
+    graft.sources.Sink.mergeInto(s, path, updates, "o_orderkey", "o_orderkey")
+    val after = rows(s)
+    val fresh = rows(spark.newSession())
+    assert(fresh.exists(_.head == "X") && fresh != before,
+      "the merge must change the answer for this test to bite")
+    assert(after == fresh, s"writing session read stale orders: $after vs $fresh")
+  }
 }

@@ -462,4 +462,35 @@ class SourcesSpec extends SparkSpec {
     // unknown column stays conservative
     assert(ZoneMapPruner.prune(shards, Seq(Ge("y", 99.0))).size == 2)
   }
+
+  test("mergeInto refreshes hybrid segments admitted over the table") {
+    import graft.cache.{LRU, SegmentCache}
+    import graft.cache.HybridScan.{AdaptiveScanRouter, ModeHybrid}
+    val dir = Files.createTempDirectory("graft-merge-segment").toString
+    spark.read.parquet(s"$sfDir/orders.parquet").write.parquet(s"$dir/orders.parquet")
+    val path = s"$dir/orders.parquet"
+    val cols = Seq("o_orderkey", "o_orderstatus", "o_totalprice")
+    val pred = col("o_orderkey") <= 2000
+    val cache = new SegmentCache(1L << 30, LRU)
+    // hotAdmitAfter = 1: the first miss admits a zip-capable segment
+    val router = new AdaptiveScanRouter(cache, pushdownSlots = 8, hotAdmitAfter = 1)
+    def routed() = {
+      val lease = router.scanMode(spark, dir, "orders", cols, pred, ModeHybrid)
+      try lease.df.collect().map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long])
+      finally lease.close()
+    }
+    def oracle() = spark.read.parquet(path).filter(pred).select(cols.map(col): _*)
+      .collect().map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long])
+    try {
+      assert(routed() == oracle())
+      assert(cache.keys.exists(_.table.startsWith("orders@")),
+        "the first read must admit an orders segment")
+      val updates = spark.read.parquet(path).filter(col("o_orderkey") <= 100)
+        .withColumn("o_orderstatus", lit("X"))
+      graft.sources.Sink.mergeInto(spark, path, updates, "o_orderkey", "o_orderkey")
+      val want = oracle()
+      assert(want.exists(_(1) == "X"), "the merge must change rows for this test to bite")
+      assert(routed() == want, "a hybrid read after mergeInto served replaced rows")
+    } finally cache.invalidateAll()
+  }
 }
