@@ -18,10 +18,15 @@ import graft.sources.Tables
   *    materialized (a bare `count()` would let Catalyst prune the very
   *    work being measured) without collect() driver pressure;
   *  - a RECORDED WARM-UP PASS over the whole suite first (r15 verdict
-  *    items 1 and 6), excluded from every statistic: it absorbs JVM/
-  *    codegen first-compiles, fixture first-touch, page-cache warming,
-  *    AND every shared family-artifact build (dup groups, IVF/PQ
-  *    indexes), so the counted passes all run steady-state. Its
+  *    items 1 and 6), excluded from every statistic: it absorbs JVM
+  *    class loading and JIT warm-up, fixture first-touch, page-cache
+  *    warming, AND every shared family-artifact build (dup groups,
+  *    IVF/PQ indexes), so the counted passes run with every artifact
+  *    resident. It does NOT absorb codegen compiles: Spark's generated-
+  *    class cache holds 100 entries (`spark.sql.codegen.cache.maxEntries`),
+  *    far fewer than the suite's distinct pipelines (about 430 classes
+  *    compiled per 28-text TPC-H round in the perfbench window), so
+  *    every counted pass recompiles most of its classes. Its
   *    per-entry times are in BENCH_DETAIL.json (`runs_warmup`) — the
   *    cold/build costs stay visible in the record, they just stop
   *    polluting the statistics. Rationale: r15's official record showed

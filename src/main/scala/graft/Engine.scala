@@ -19,11 +19,13 @@ object Engine {
 
   /** Per-session registration state: the directory whose tables this
     * session's views point at and each view's [[Tables.writeMark]] when
-    * it was pointed, used as both record and lock. Registration re-reads
-    * every table's footer (10 schema fetches), which at q32's size was
-    * most of the query's wall time; the reference caches its catalogue
-    * the same way (one fetch per connection, `Client.cpp:118-132`). Weak
-    * keys: a stopped session must not be pinned. */
+    * it was pointed, used as both record and lock. Registration resolves
+    * 10 relations (a file listing each, plus a schema-inference job per
+    * table the first time any session sees that version of it), which at
+    * q32's size was most of the query's wall time; the reference caches
+    * its catalogue the same way (one fetch per connection,
+    * `Client.cpp:118-132`). Weak keys: a stopped session must not be
+    * pinned. */
   private[graft] final class Registration {
     var dir: String = null
     var marks: Map[String, Long] = Map.empty
@@ -40,14 +42,17 @@ object Engine {
   // CTE references rather than materializing them) — structurally 2× the
   // reference's work, which scans partsupp as a base table. So the engine
   // treats derived-partsupp the way the reference treats the real table:
-  // materialized ONCE per (session, dir) as a localCheckpointed session
-  // artifact (the t12/IVF discipline — released at SessionCache release
-  // points), registered as a `partsupp` view, and the CTE prefix stripped
-  // from the Spark-side text. The ORACLE text is untouched: DuckDB still
-  // runs the CTE, and the rows are identical by construction (the
-  // artifact IS the CTE body, evaluated once). The block is extracted
-  // from the shipped q11.sql resource, not duplicated here, so a corpus
-  // edit can never silently diverge from the rewrite.
+  // materialized ONCE per version of lineitem (and per digest of the
+  // session's row-changing confs) as a localCheckpointed artifact shared
+  // by every session of the SparkContext ([[graft.util.Artifacts]]: a
+  // `lineitem` rewrite rotates the key, a session's release point drops
+  // its view and its use, the blocks go with the last use), registered
+  // as a `partsupp` view, and the CTE prefix stripped from the
+  // Spark-side text. The ORACLE text is untouched: DuckDB still runs the
+  // CTE, and the rows are identical by construction (the artifact IS the
+  // CTE body, evaluated once). The block is extracted from the shipped
+  // q11.sql resource, not duplicated here, so a corpus edit can never
+  // silently diverge from the rewrite.
   private lazy val partsuppCte: Option[(String, String)] = {
     val in = getClass.getResourceAsStream("/graft/tpch/q11.sql")
     if (in == null) None
@@ -59,37 +64,31 @@ object Engine {
     }
   }
 
-  // Release must ALSO drop the temp view: after the checkpoint blocks are
-  // unpersisted they cannot be recomputed, so a view still pointing at the
-  // dead artifact would fail with missing-block errors instead of
-  // resolving-or-rebuilding. With the view gone, a CTE query re-registers
-  // (getOrBuild rebuilds) and a direct `partsupp` reference fails honestly
-  // at analysis ("table not found") rather than mid-execution. The drop is
-  // CONDITIONAL on the view actually pointing at the released frame: the
-  // build now runs outside the registration lock, so a losing racer's
-  // release (SessionCache frees the duplicate) must not drop the view the
-  // winner just registered.
-  private val partsuppCache = new graft.util.SessionCache[DataFrame](
-    releaseValue = { df =>
-      graft.util.SessionCache.releaseFrame(df)
-      try {
-        val cur = df.sparkSession.table("partsupp")
-        if (cur.queryExecution.analyzed.sameResult(df.queryExecution.analyzed))
-          df.sparkSession.catalog.dropTempView("partsupp")
-      } catch { case _: Throwable => () }
-    })
+  /** The base table the derived partsupp aggregates. */
+  private val PartsuppSource = "lineitem"
+
+  /** The session's derived partsupp over `dir`, bound to `spark`; `body`
+    * (the analyzed CTE body) is materialized only when no session has
+    * this version yet. */
+  private def partsupp(spark: SparkSession, dir: String, body: => DataFrame): DataFrame =
+    graft.util.Artifacts.getOrBuild(spark, "partsupp", Seq(dir -> PartsuppSource))(
+      body.localCheckpoint())
 
   /** Materialize the session's derived artifacts and register their
     * views — currently the derived-partsupp table. Used by the CTE
     * rewrite below and by [[Server]], whose JDBC clients query
     * `partsupp` as a base table the way the reference's clients do.
-    * Requires the session's views to already point at `dir`. */
-  private[graft] def registerDerived(spark: SparkSession, dir: String): Unit =
-    partsuppCte.foreach { case (_, body) =>
-      partsuppCache
-        .getOrBuild(spark, s"$dir#partsupp")(spark.sql(body).localCheckpoint())
-        .createOrReplaceTempView("partsupp")
+    * Registers the session's views over `dir` first when they point
+    * elsewhere. */
+  private[graft] def registerDerived(spark: SparkSession, dir: String): Unit = {
+    val r = lockFor(spark)
+    r.synchronized {
+      ensureRegistered(spark, dir, r)
+      partsuppCte.foreach { case (_, body) =>
+        partsupp(spark, dir, spark.sql(body)).createOrReplaceTempView("partsupp")
+      }
     }
+  }
 
   // ---- co-join probe spread (r18, r17 verdict item 1) -------------------
   // The reference's synthetic co-join corpus (hv01/hv02 =
@@ -130,17 +129,31 @@ object Engine {
     * co-join probes. Caller holds the registration lock; the plain view
     * is restored before returning (analysis is eager, so the returned
     * frame keeps the spread plan while no other query can observe the
-    * swapped view). */
+    * swapped view). A restore that fails is logged and leaves the
+    * session unregistered (`r.dir` reset, so its next query re-points
+    * every view); an analysis failure still surfaces as itself. */
   private def analyzeWithProbeSpread(spark: SparkSession, dir: String,
-      original: String, analyzeSql: String): DataFrame =
+      r: Registration, original: String, analyzeSql: String): DataFrame =
     if (!coJoinTexts.contains(original)) spark.sql(analyzeSql)
     else {
       Tables.spread(Tables.lineitem(spark, dir))
         .createOrReplaceTempView("lineitem")
       try spark.sql(analyzeSql)
-      finally Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
+      finally {
+        try restoreProbeView(spark, dir)
+        catch { case t: Throwable =>
+          org.slf4j.LoggerFactory.getLogger("graft.Engine").warn(
+            s"restoring the lineitem view over $dir failed; its views are re-pointed " +
+              "on the session's next query", t)
+          r.dir = null
+        }
+      }
     }
 
+  /** Re-point the session's lineitem view at the plain relation (a spec
+    * hook replaces it to force a failing restore). */
+  @volatile private[graft] var restoreProbeView: (SparkSession, String) => Unit =
+    (spark, dir) => Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
 
   /** Register the scale-factor directory's tables (skipped when this
     * session's views already point at `dir`) and run one SQL query.
@@ -216,30 +229,31 @@ object Engine {
       case None =>
         r.synchronized {
           ensureRegistered(spark, dir, r)
-          analyzeWithProbeSpread(spark, dir, sql, sql)
+          analyzeWithProbeSpread(spark, dir, r, sql, sql)
         }
       case Some((block, body)) =>
-        // ANALYZE the CTE body under the lock (cheap plan resolution;
-        // once analyzed it is immune to later view swaps) but run the
-        // expensive materialization OUTSIDE it — the first CTE query
-        // used to hold the registration lock for the entire lineitem
-        // aggregation, stalling even a concurrent SELECT 1 at planning.
-        // Same-key racing builds are safe: SessionCache keeps one
-        // winner, and the conditional view-drop above keeps a losing
-        // racer's release from touching the winner's view.
-        val bodyPlan = r.synchronized {
+        // register BEFORE the artifact key is taken: registration sets
+        // session confs the key digests (events' nanosAsLong), so a key
+        // taken before it would differ from every later query's and
+        // build the artifact twice. A miss ANALYZES the CTE body under
+        // the lock (cheap plan resolution; once analyzed it is immune to
+        // later view swaps) but runs the expensive materialization
+        // OUTSIDE it — the first CTE query used to hold the registration
+        // lock for the entire lineitem aggregation, stalling even a
+        // concurrent SELECT 1 at planning. Same-key racing builds are
+        // safe: Artifacts keeps one winner and releases the other.
+        r.synchronized(ensureRegistered(spark, dir, r))
+        val art = partsupp(spark, dir, r.synchronized {
           ensureRegistered(spark, dir, r)
           spark.sql(body)
-        }
-        val art = partsuppCache
-          .getOrBuild(spark, s"$dir#partsupp")(bodyPlan.localCheckpoint())
+        })
         r.synchronized {
           // a concurrent query may have flipped the session to another
           // dir (dropping the view) between the brackets — re-point at
           // `dir` before registering the view and analyzing the text
           ensureRegistered(spark, dir, r)
           art.createOrReplaceTempView("partsupp")
-          analyzeWithProbeSpread(spark, dir, sql, sql.replace(block, ""))
+          analyzeWithProbeSpread(spark, dir, r, sql, sql.replace(block, ""))
         }
     }
   }
@@ -249,27 +263,32 @@ object Engine {
     * derived partsupp view must not survive pointing at the PREVIOUS
     * dir's artifact — a non-CTE query naming partsupp would silently
     * read stale rows (the exact mixed-views hazard the lock exists to
-    * prevent). The artifact itself stays cached under its
-    * (session, olddir) key. On an unchanged dir, only a table graft's
-    * writers rewrote since its view was pointed (`Sink.mergeInto`,
-    * `compact`) is re-pointed — its old view would read replaced files.
+    * prevent). The artifact itself stays registered under its
+    * (old lineitem version) key. On an unchanged dir, only a table
+    * graft's writers rewrote since its view was pointed (`Sink.mergeInto`,
+    * `compact`) is re-pointed — its old view would read replaced files —
+    * and a rewritten lineitem drops the partsupp view derived from it.
     * Marks are read BEFORE the load, so a write racing the re-point is
     * caught on the next query. */
   private def ensureRegistered(spark: SparkSession, dir: String,
-      r: Registration): Unit =
+      r: Registration): Unit = {
+    def dropPartsupp(): Unit =
+      try spark.catalog.dropTempView("partsupp")
+      catch { case _: Throwable => () }
     if (r.dir != dir) {
       r.marks = Tables.all.map(n => n -> Tables.writeMark(dir, n)).toMap
       Tables.registerAll(spark, dir)
-      try spark.catalog.dropTempView("partsupp")
-      catch { case _: Throwable => () }
+      dropPartsupp()
       r.dir = dir
     } else Tables.all.foreach { n =>
       val m = Tables.writeMark(dir, n)
       if (m != r.marks(n)) {
         r.marks += n -> m
         Tables.load(spark, dir, n).createOrReplaceTempView(n)
+        if (n == PartsuppSource) dropPartsupp()
       }
     }
+  }
 
   /** The per-session registration lock (spec hook: stripe assertions). */
   private[graft] def lockFor(spark: SparkSession): Registration =

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.hive.thriftserver.HiveThriftServer2
-import graft.sources.Tables
 
 /** Long-running SQL server — the engine's analog of the reference's
   * client/server deployment (`fpdb-main/src/Server.cpp`: a thrift
@@ -55,17 +54,12 @@ object Server {
     System.setProperty("derby.stream.error.file", "/tmp/graft-derby/derby.log")
     spark.sqlContext.setConf("hive.server2.thrift.bind.host", "localhost")
     spark.sqlContext.setConf("hive.server2.thrift.port", port.toString)
-    // register under the ENGINE's per-session record, not beside it: with
-    // the dir unrecorded, the first Engine.executeQuery on this session
-    // (an attached shell, an embedded caller) would re-register and drop
-    // the partsupp view every JDBC client depends on — and pay a
-    // redundant 10-footer registerAll for the same dir
-    val r = Engine.lockFor(spark)
-    r.synchronized {
-      Tables.registerAll(spark, dir)
-      Engine.registerDerived(spark, dir) // partsupp, materialized once
-      r.dir = dir
-    }
+    // register through the ENGINE's per-session record (dir and write
+    // marks), not beside it: with the dir unrecorded, the first
+    // Engine.executeQuery on this session (an attached shell, an embedded
+    // caller) would re-register and drop the partsupp view every JDBC
+    // client depends on
+    Engine.registerDerived(spark, dir) // the views, then partsupp
     HiveThriftServer2.startWithContext(spark.sqlContext)
   }
 

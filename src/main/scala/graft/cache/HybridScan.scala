@@ -429,7 +429,9 @@ object HybridScan {
     *  - `spark.graft.cachePolicy`    (lru | lfu | lfu-s | w-lfu;
     *    w-lfu is [[MeasuredWLFU]] — the measured-weight, measured-SIZE
     *    admission variant; default lru)
-    * A bad value fails loudly at first use, never silently defaults. */
+    * A policy name the engine does not know fails loudly at first use; an
+    * unusable capacity (unparsable or negative) falls back to the
+    * default with one warning per value ([[graft.util.Conf.parsed]]). */
   private val caches = new SessionCache[SegmentCache](
     maxEntries = 4, releaseValue = (_: SegmentCache).invalidateAll())
 
@@ -445,9 +447,9 @@ object HybridScan {
 
   def segmentCache(s: SparkSession, dir: String): SegmentCache =
     caches.getOrBuild(s, s"hybrid-cache:$dir") {
-      val cap = s.conf.getOption("spark.graft.cacheCapacity")
-        .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-        .getOrElse(1L << 30)
+      val cap = graft.util.Conf.parsed("spark.graft.cacheCapacity",
+        s.conf.getOption("spark.graft.cacheCapacity"), 1L << 30, "a byte size")(
+        graft.util.Conf.bytes)
       val pol = s.conf.getOption("spark.graft.cachePolicy")
         .map(parsePolicy).getOrElse(LRU)
       new SegmentCache(capacityBytes = cap, policy = pol)
@@ -467,13 +469,15 @@ object HybridScan {
     *    budget, the reference's adaptive-pushdown parallel degree;
     *    default 64)
     *  - `spark.graft.hotAdmitAfter` (admission-loop threshold; ≤0
-    *    disables self-warming; default 2) */
+    *    disables self-warming; default 2)
+    * A value that is not an integer falls back to the default with one
+    * warning per value. */
   def sessionRouter(s: SparkSession, dir: String): AdaptiveScanRouter =
     routers.getOrBuild(s, s"hybrid-router:$dir") {
-      val slots = s.conf.getOption("spark.graft.pushdownSlots")
-        .map(_.trim.toInt).getOrElse(64)
-      val hot = s.conf.getOption("spark.graft.hotAdmitAfter")
-        .map(_.trim.toInt).getOrElse(2)
+      def int(key: String, default: Int): Int =
+        graft.util.Conf.parsed(key, s.conf.getOption(key), default, "an integer")(_.toIntOption)
+      val slots = int("spark.graft.pushdownSlots", 64)
+      val hot = int("spark.graft.hotAdmitAfter", 2)
       // storeKey: the SESSION router's slot pool is the STORE's, shared
       // JVM-wide by every session routing over this dir (r13 verdict
       // item 3) — heat and admission state below stay per-session
@@ -969,7 +973,7 @@ object HybridScan {
       initialPullupEstNanos: Double = 0.0,
       pullupWeight: Double = 1.0,
       maxPullupReqs: Int = 10,
-      hotAdmitAfter: Int = 2,
+      private[graft] val hotAdmitAfter: Int = 2,
       maxHotRegions: Int = 256,
       storeKey: Option[String] = None,
       forcedWaitMs: Long = 1000) {

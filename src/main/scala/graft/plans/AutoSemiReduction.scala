@@ -76,24 +76,14 @@ object AutoSemiReduction extends Rule[LogicalPlan] with PredicateHelper
       SQLConf.get.getConfString("spark.graft.autoSemiReduction.backward", "true"))
 
   private val DefaultMaxSelectivity = 0.5
-  /** The last unusable maxSelectivity value warned about — one warning
-    * per bad value, not one per optimizer pass. */
-  @volatile private var warnedSelectivity: String = null
-
   /** `spark.graft.semiReduction.maxSelectivity`, a fraction in [0, 1];
     * anything else (unparsable, NaN, out of range) falls back to the
     * default rather than failing every query the session optimizes. */
   private def maxSelectivity: Double = {
-    val raw = SQLConf.get.getConfString("spark.graft.semiReduction.maxSelectivity",
-      DefaultMaxSelectivity.toString)
-    raw.trim.toDoubleOption.filter(v => v >= 0.0 && v <= 1.0).getOrElse {
-      if (raw != warnedSelectivity) {
-        warnedSelectivity = raw
-        logWarning(s"spark.graft.semiReduction.maxSelectivity='$raw' is not a " +
-          s"fraction in [0, 1]; using $DefaultMaxSelectivity")
-      }
-      DefaultMaxSelectivity
-    }
+    val key = "spark.graft.semiReduction.maxSelectivity"
+    graft.util.Conf.parsed(key, Option(SQLConf.get.getConfString(key, null)),
+      DefaultMaxSelectivity, "a fraction in [0, 1]")(
+      _.toDoubleOption.filter(v => v >= 0.0 && v <= 1.0))
   }
 
   /** Would JoinSelection plan `j` with an exchange under BOTH inputs? It

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Catalog layer: named parquet tables under a scale-factor directory.
   *
@@ -76,12 +77,15 @@ object Tables {
   // 118-132`); this memo gives the DataFrame path the same catalogue
   // discipline: one resolution per (session, dir, table), the ANALYZED
   // frame reused afterwards. Plan-metadata caching only — no rows are
-  // cached, every execution still scans the files. A writer that rewrites
-  // one of these paths calls [[wrote]], which drops every session's
-  // entries for it (and Engine re-points that table's view on the
-  // session's next query). Self-joins of
-  // one memoized frame are de-duplicated by Catalyst's
-  // DeduplicateRelations, same as two references to one registered view.
+  // cached, every execution still scans the files. The resolution
+  // itself is cheap after the first session: the inferred schema is
+  // shared SparkContext-wide ([[schemas]]), so a new session lists the
+  // files but runs no inference job. A writer that rewrites one of
+  // these paths calls [[wrote]], which drops every session's entries
+  // for it (and Engine re-points that table's view on the session's
+  // next query). Self-joins of one memoized frame are de-duplicated by
+  // Catalyst's DeduplicateRelations, same as two references to one
+  // registered view.
   // Retention is BOUNDED, not weak (r18, r17 ADVICE): a weak session key
   // does not work when the value is a DataFrame — the frame strongly
   // references its SparkSession, which re-reaches the key through the
@@ -99,6 +103,26 @@ object Tables {
       16, 0.75f, /*accessOrder=*/ true) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[(SparkSession, String), DataFrame]): Boolean =
+        size() > MaxEntries
+    }
+
+  // Inferred schemas, shared by every session of the SparkContext (the
+  // reference loads its catalogue once and never infers per client,
+  // PAPER.md "Schema system"). Inference is a Spark job per table
+  // (parquet footers are read by tasks): ten of them made a fresh
+  // session's registration cost ~1 s on a dir another session already
+  // served. Keyed on (table path, [[writeMark]], the session's
+  // `Artifacts.confDigest` — `legacy.parquet.nanosAsLong` changes what
+  // events infers to); the value carries the listing fingerprint it was
+  // inferred over, and a relation whose own listing fingerprints
+  // differently (an external same-path rewrite) re-infers. Each session
+  // still builds its own relation over the path, so its confs govern
+  // its scans. Bounded like the memo; a schema holds no session.
+  private val schemas =
+    new java.util.LinkedHashMap[(String, Long, String), (String, StructType)](
+      16, 0.75f, /*accessOrder=*/ true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, Long, String), (String, StructType)]): Boolean =
         size() > MaxEntries
     }
 
@@ -171,8 +195,42 @@ object Tables {
   }
 
   private def build(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") buildEvents(spark, dir)
-    else spark.read.parquet(path(dir, name))
+    if (name == "events") buildEvents(spark, dir) else read(spark, dir, name)
+
+  /** `spark.read.parquet` over the table, with the schema taken from
+    * [[schemas]] when this version of the table was inferred before. */
+  private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val p = path(dir, name)
+    val k = (p, writeMark(dir, name), graft.util.Artifacts.confDigest(spark))
+    val known = schemas.synchronized(Option(schemas.get(k))).flatMap { case (fp, schema) =>
+      Some(spark.read.schema(schema).parquet(p)).filter(listing(_).fingerprint == fp)
+    }
+    known.getOrElse {
+      val df = spark.read.parquet(p)
+      schemas.synchronized(schemas.put(k, (listing(df).fingerprint, df.schema)))
+      df
+    }
+  }
+
+  /** The data files `df`'s file relation resolved to, from its own file
+    * index (no new listing). */
+  private def listing(df: DataFrame): graft.cache.HybridScan.TableListing = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val files = df.queryExecution.analyzed.collect {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => h.location.listFiles(Nil, Nil).flatMap(_.files)
+        case _ => Nil
+      }
+    }.flatten.map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+    graft.cache.HybridScan.TableListing(files.sortBy(_._1))
+  }
+
+  /** The version of `dir`'s table `name` that `spark` reads: its path,
+    * [[writeMark]] and the fingerprint of the files the session's
+    * relation listed (so an external same-path rewrite rotates it too).
+    * Derived artifacts key on it (`graft.util.Artifacts`). */
+  private[graft] def version(spark: SparkSession, dir: String, name: String): String =
+    s"${path(dir, name)}@${writeMark(dir, name)}:${listing(load(spark, dir, name)).fingerprint}"
 
   // Typed accessors — keeps query code terse and typo-proof.
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
@@ -213,7 +271,7 @@ object Tables {
     // error on nanos data (and the testdata's events is the only nanos
     // producer in scope).
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventTime(s.read.parquet(path(d, "events")))
+    normalizeEventTime(read(s, d, "events"))
   }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")

@@ -5,6 +5,15 @@ import org.apache.spark.sql.execution.LogicalRDD
 
 /** Small bounded per-(session, key) artifact cache.
   *
+  * Its values are built and held per session: a second session asking
+  * for the same key builds its own. That fits state that IS per session
+  * (a router's heat, a segment cache's admissions) and the operator
+  * artifacts not yet moved; an artifact every session would compute
+  * alike from the same source files belongs in [[Artifacts]], which
+  * builds it once per source version and keeps each session's use of it
+  * in one of these caches (so [[SessionCache.releaseAll]] releases those
+  * uses too).
+  *
   * Weak session keys do NOT work when the cached value is a DataFrame:
   * the value strongly references its SparkSession, which re-reaches the
   * key through the map and pins the entry forever (the WeakHashMap

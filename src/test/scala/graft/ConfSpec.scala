@@ -36,4 +36,21 @@ class ConfSpec extends SparkSpec {
       "broadcastVocab='False' must drop the vocabulary hint")
     assert(off.collect().toSeq == expected, "the gate never changes rows")
   }
+
+  test("hybrid numeric confs: an unusable value falls back to the default") {
+    import graft.cache.HybridScan
+    val keys = Seq("spark.graft.pushdownSlots", "spark.graft.hotAdmitAfter",
+      "spark.graft.cacheCapacity")
+    // each router gets a store key no other router declared a slot budget for
+    def routed(values: Seq[String]): (Int, Int, Long) = {
+      val s = spark.newSession()
+      keys.zip(values).foreach { case (k, v) => s.conf.set(k, v) }
+      val dir = s"/graft-conf-spec/${java.util.UUID.randomUUID}"
+      val r = HybridScan.sessionRouter(s, dir)
+      (r.availableSlots, r.hotAdmitAfter, HybridScan.segmentCache(s, dir).capacityBytes)
+    }
+    for (v <- Seq("abc", "12x", "", "1.5", "-1 GB"))
+      assert(routed(Seq(v, v, v)) == ((64, 2, 1L << 30)), s"'$v' must read as the defaults")
+    assert(routed(Seq(" 7 ", "0", "64m")) == ((7, 0, 64L << 20)), "usable values read as given")
+  }
 }

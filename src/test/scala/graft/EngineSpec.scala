@@ -168,4 +168,66 @@ class EngineSpec extends SparkSpec {
       "the merge must change the answer for this test to bite")
     assert(after == fresh, s"writing session read stale orders: $after vs $fresh")
   }
+
+  /** A private copy of a testdata dir (graft writers rewrite in place). */
+  private def copyOf(src: String): String = {
+    val from = java.nio.file.Paths.get(src)
+    val to = java.nio.file.Files.createTempDirectory("graft-engine-copy")
+    java.nio.file.Files.walk(from).forEach { f =>
+      val t = to.resolve(from.relativize(f).toString)
+      if (java.nio.file.Files.isDirectory(f)) java.nio.file.Files.createDirectories(t)
+      else java.nio.file.Files.copy(f, t)
+    }
+    to.toString
+  }
+
+  test("a lineitem rewrite rotates the derived partsupp: q11 reads the new version") {
+    import org.apache.spark.sql.functions._
+    val dir = copyOf(dirB)
+    val q11 = operators.TpchCorpus.sql(11)
+    val s = spark.newSession()
+    def viaEngine() = Engine.executeQuery(s, dir, q11).collect().map(_.toSeq).toSeq
+    // ground truth: the corpus text, CTE and all, over the dir's current files
+    def viaCte() = {
+      val f = spark.newSession()
+      graft.sources.Tables.registerAll(f, dir)
+      f.sql(q11).collect().map(_.toSeq).toSeq
+    }
+    val before = viaEngine()
+    assert(before == viaCte())
+    val path = s"$dir/lineitem.parquet"
+    val updates = s.read.parquet(path).filter(col("l_orderkey") <= 2000)
+      .withColumn("l_quantity", col("l_quantity") * 50)
+    graft.sources.Sink.mergeInto(s, path, updates, "l_orderkey", "l_linenumber")
+    val expected = viaCte()
+    assert(expected != before, "the rewrite must change q11's answer for this test to bite")
+    assert(viaEngine() == expected, "q11 read the partsupp of the replaced lineitem")
+  }
+
+  test("a failed lineitem restore after the hv02 spread keeps the analysis error and re-registers") {
+    val hv02 = {
+      val in = getClass.getResourceAsStream("/graft/tpch/hv02.sql")
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+    }
+    val expected = Engine.executeQuery(spark.newSession(), dirA, hv02).collect().toSeq
+    val s = spark.newSession()
+    Engine.executeQuery(s, dirA, "SELECT 1").collect()
+    // analysis of hv02 fails (a view it reads is gone) AND the restore of
+    // the plain lineitem view fails after it
+    s.catalog.dropTempView("orders")
+    val restore = Engine.restoreProbeView
+    Engine.restoreProbeView = (_, _) => throw new IllegalStateException("restore failed")
+    try {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        Engine.executeQuery(s, dirA, hv02)
+      }
+      assert(e.getMessage.contains("orders"), e.getMessage)
+    } finally Engine.restoreProbeView = restore
+    assert(Engine.lockFor(s).dir == null, "a failed restore must leave the session unregistered")
+    // the next query re-points every view: hv02 answers, lineitem is plain
+    assert(Engine.executeQuery(s, dirA, hv02).collect().toSeq == expected)
+    assert(s.table("lineitem").queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r
+    }.isEmpty, "the spread lineitem view must not outlive the query")
+  }
 }
