@@ -675,7 +675,7 @@ object Bench {
 
     // ---- per-SHARD router economics on the throttled store (r14): the
     // reference's SegmentKey RANGE leg. A 16-shard range-sharded CSV
-    // orders copy (zone-map sidecar built at write) on the instrumented
+    // orders copy (shard summary built at write) on the instrumented
     // scheme, same per-stream + aggregate physics as the other blocks:
     //  - noprune vs prune (pushdown-only, same query): the BYTES the
     //    zone sidecar alone removes — this is z01's claim with wall time
@@ -691,12 +691,12 @@ object Bench {
         import org.apache.spark.sql.functions.{col, lit, count => fCount, sum => fSum}
         spark.sparkContext.hadoopConfiguration
           .set("fs.mockfs.impl", classOf[MockObjectFs].getName)
-        val (localSpec, localZones) =
+        val (localSpec, localSummary) =
           ZoneMapPruner.shardedOrdersN(spark, sfDir, 16, "orders_zonemap_csv_x16")
         def m(p: String) =
           "mockfs:" + new org.apache.hadoop.fs.Path(p).toUri.getPath
         val spec = localSpec.copy(paths = localSpec.paths.map(m))
-        val zones = localZones.map(z => z.copy(path = m(z.path)))
+        val zones = localSummary.zones.map(z => z.copy(path = m(z.path)))
           .sortBy(_.ranges("o_orderkey")._1)
         // thresholds derived from the zones themselves (scale-free):
         // narrow keeps ~2/16 shards, wide ~5/16. Indices CLAMPED: a
@@ -748,9 +748,9 @@ object Bench {
         // with and without the string zone predicate — z09's claim with
         // FS-truth bytes attached (the numeric twin is noprune/prune
         // above). Fresh routers: both passes must pay storage.
-        val (sSpecL, sZonesL) = ZoneMapPruner.statusShardedOrders(spark, sfDir)
+        val (sSpecL, sSummaryL) = ZoneMapPruner.statusShardedOrders(spark, sfDir)
         val sSpec = sSpecL.copy(paths = sSpecL.paths.map(m))
-        val sZones = sZonesL.map(z => z.copy(path = m(z.path)))
+        val sZones = sSummaryL.zones.map(z => z.copy(path = m(z.path)))
         def sPass(label: String,
             zonePreds: Seq[ZoneMapPruner.RangePred]): Unit =
           throttledPass(out, "shard-router", label, totalMbps) {
@@ -770,12 +770,13 @@ object Bench {
         // prune NOTHING (every shard spans the key domain) — byte legs
         // without the sketch, with it (z02's ~1-of-8 claim), and the IN
         // shape (z15's per-member union, ~2-of-8). Zones are synthesized
-        // bound-free exactly as the conf route does for bloom-only
-        // directories; the kept list is pre-filtered by membership, the
+        // bound-free exactly as the conf route does for a summary with no
+        // zone columns; the kept list is pre-filtered by membership, the
         // same decision [[graft.plans.ModeExec.bloomKeeps]] makes.
         // Fresh routers: every pass must pay storage.
         import graft.sources.BloomPruner
-        val (bSpecL, bBlooms) = BloomPruner.shardedByCustkey(spark, sfDir)
+        val (bSpecL, bSummary) = BloomPruner.shardedByCustkey(spark, sfDir)
+        val bBlooms = bSummary.blooms.head.shards
         val bSpec = bSpecL.copy(paths = bSpecL.paths.map(m))
         val bZonesAll = bSpecL.paths.map(p =>
           graft.sources.ShardZoneMap(m(p), Map.empty))

@@ -17,7 +17,7 @@ import graft.cache.{HybridScan, LRU, SegmentCache}
 import graft.cache.HybridScan.{AdaptiveScanRouter, ModeCachingOnly, ModeHybrid,
   ModePullup, ModePushdownOnly, ScanLease, ScanMode}
 import graft.operators.SsbCorpus
-import graft.sources.{Tables, ZoneMapPruner}
+import graft.sources.{ShardSummary, TableSpec, Tables, ZoneMapPruner}
 
 /** Whole-suite execution modes — the reference's evaluation discipline.
   *
@@ -206,130 +206,48 @@ object ModeExec extends PredicateHelper {
       })
   }
 
-  /** A zone-mapped SHARDED flat leaf (r14; r15 widened to all four
-    * formats): a single-root, unpartitioned parquet/ORC/CSV/JSONL
-    * relation whose directory carries graft's persisted zone-map
-    * sidecar ([[graft.sources.ZoneMapPruner.SidecarName]] — the
-    * reference's `zoneMap.json`, which its catalogue keeps next to the
-    * data, `Partition.h:23-41`). Detection makes
+  /** A SHARDED flat leaf (r14; r15 widened to all four formats): a
+    * single-root, unpartitioned parquet/ORC/CSV/JSONL relation whose
+    * directory carries a [[graft.sources.ShardSummary]] — per-shard zone
+    * maps and bloom sketches, the reference's catalogue partition record
+    * kept next to the data (`Partition.h:23-41`). Detection makes
     * [[AdaptiveScanRouter.scanShardedMode]] DEPLOYMENT-reachable:
     * `SET spark.graft.scanMode` + a plain view over the directory
-    * routes per shard with zone pruning composed in, no library call.
+    * routes per shard with zone and bloom pruning composed in, no
+    * library call. A summary with no zone columns routes with bound-free
+    * zones, so only its sketches prune.
     *
     * The substitution re-reads through [[graft.sources.Catalog.read]]
     * with the relation's OWN schema AND reader options carried verbatim
     * (`TableSpec.relationOptions`), so the re-read parses identically
     * by construction — header'd CSV, timestamp columns, and custom
-    * formats all qualify (r14's conservative option/type gates are
-    * gone). Two hard gates remain: no partition columns (that is
-    * [[partitionedLeaf]]'s shape), and the sidecar's file-name set must
-    * EQUAL the relation's input files — a sidecar that has drifted from
-    * the directory (new shard landed, sidecar not rebuilt) leaves the
-    * leaf unrouted (logged + counted, rebuild via
-    * [[graft.sources.ZoneMapPruner.rebuildSidecar]]) rather than
-    * dropping the unlisted shard's rows. Anything else: plain plan. */
-  /** Per-leaf bloom attachment: one [[graft.sources.BloomPruner
-    * .ColumnBlooms]] per declared key column, when the directory carries
-    * a [[graft.sources.BloomPruner.SidecarName]] sidecar whose shard
-    * paths EQUAL the relation's files (a drifted bloom is ignored —
-    * pruning is optional, the zone/name gate is what decides routing). */
-  private type LeafBlooms = Seq[graft.sources.BloomPruner.ColumnBlooms]
-
-  private def shardedLeaf(s: SparkSession)(p: LogicalPlan): Option[
-      (String, graft.sources.TableSpec, Seq[graft.sources.ShardZoneMap],
-        Option[LeafBlooms])] = {
-    def ofRelation(h: HadoopFsRelation): Option[
-        (String, graft.sources.TableSpec, Seq[graft.sources.ShardZoneMap],
-          Option[LeafBlooms])] = {
-      if (h.partitionSchema.nonEmpty || h.location.rootPaths.size != 1)
-        return None
-      // r15 (r14 verdict item 4): the substitution re-reads with the
-      // relation's OWN options carried VERBATIM (TableSpec
-      // .relationOptions — none of Catalog.read's pinned defaults), so
-      // the parse is identical by construction: header'd CSV, custom
-      // timestamp/date formats, and the JSONL/ORC arms all qualify
-      // where r14's gate had to refuse them. Options that could alter
-      // the FILE SET (pathGlobFilter, modifiedAfter…) are self-guarding:
-      // the sidecar's name set must EQUAL the relation's input files, so
-      // a filtered relation simply fails the equality and stays
-      // unrouted.
-      val format = formatOf(h)
-      if (format.isEmpty) return None
-      val root = h.location.rootPaths.head
-      val relFiles = h.location.inputFiles
-        .map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
-      // bloom sidecar (r16; multi-key + relative-path gate r17):
-      // attached when its shard ROOT-RELATIVE paths equal the
-      // relation's files (relative, not basenames — nested layouts
-      // repeat part-file basenames and a name-set gate collapses them);
-      // a drifted bloom is dropped from PRUNING (the routing decision
-      // below is the zone/name gate's) but counted and logged like a
-      // drifted zone sidecar — silent capability loss was exactly the
-      // r14 lesson
-      val relUriFiles = h.location.inputFiles
-        .flatMap(f => graft.sources.BloomPruner.relPath(root, f)).toSet
-      val blooms: Option[LeafBlooms] =
-        graft.sources.BloomPruner.readSidecar(s, root.toString).flatMap {
-          cols =>
-            val rels = cols.headOption.map(_.shards.flatMap(x =>
-              graft.sources.BloomPruner.relPath(root, x.path)).toSet)
-              .getOrElse(Set.empty)
-            if (cols.nonEmpty && rels.nonEmpty && rels == relUriFiles &&
-                relUriFiles.size == h.location.inputFiles.length) Some(cols)
-            else {
-              // the operator must learn WHICH sidecar drifted and the
-              // RIGHT repair (r16 review: the zone-worded message sent
-              // them to rebuild the wrong artifact; r17: the repair is
-              // now one call)
-              graft.sources.ZoneMapPruner.noteDrift(root.toString,
-                relUriFiles, rels, kind = "bloom",
-                repair = "BloomPruner.rebuildSidecar",
-                consequence = "point-lookup pruning lost")
-              None
-            }
+    * formats all qualify. Two hard gates remain: no partition columns
+    * (that is [[partitionedLeaf]]'s shape), and the summary's
+    * (relative path, length, mtime) set must EQUAL the statuses the
+    * relation itself listed. A new shard, a deleted one, or one
+    * rewritten in place under the same name leaves the leaf unrouted
+    * (logged and counted, repaired by
+    * [[graft.sources.ShardSummary.rebuild]]) rather than losing rows to
+    * stale bounds. Reader options that alter the FILE SET
+    * (pathGlobFilter, modifiedAfter…) fail the equality the same way.
+    * Anything else: plain plan. */
+  private def shardedLeaf(s: SparkSession)(p: LogicalPlan)
+      : Option[(String, TableSpec, ShardSummary)] =
+    fsRelation(p).filter(h =>
+        h.partitionSchema.isEmpty && h.location.rootPaths.size == 1)
+      .flatMap(h => formatOf(h).map(h -> _))
+      .flatMap { case (h, format) =>
+        val root = h.location.rootPaths.head
+        val files = h.location.listFiles(Nil, Nil).flatMap(_.files)
+          .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        ShardSummary.matching(s, root, files).map { summary =>
+          val opts = h.options.map { case (k, v) => k.toLowerCase -> v }
+          val delim = opts.get("sep").orElse(opts.get("delimiter")).getOrElse(",")
+          (root.toString, TableSpec(root.getName, format,
+            summary.zones.map(_.path).sorted, Some(h.dataSchema), delim,
+            relationOptions = Some(h.options.toMap)), summary)
         }
-      def specOf(paths: Seq[String]): graft.sources.TableSpec = {
-        val opts = h.options.map { case (k, v) => k.toLowerCase -> v }
-        val delim = opts.get("sep").orElse(opts.get("delimiter")).getOrElse(",")
-        graft.sources.TableSpec(root.getName, format.get, paths.sorted,
-          Some(h.dataSchema), delim, relationOptions = Some(h.options.toMap))
       }
-      def bloomOnly: Option[
-          (String, graft.sources.TableSpec, Seq[graft.sources.ShardZoneMap],
-            Option[LeafBlooms])] = blooms.map { cols =>
-          // BLOOM-ONLY routing (r16): the bloom path gate already held
-          // (the filter above), so the leaf routes per shard with
-          // membership pruning; zones are synthesized bound-free (no
-          // range pruning, every other part of the per-shard
-          // machinery — fingerprints, region keys, admission — works
-          // unchanged)
-          val zones = cols.head.shards.map(x =>
-            graft.sources.ShardZoneMap(x.path, Map.empty))
-          (root.toString, specOf(zones.map(_.path)), zones, Some(cols))
-      }
-      graft.sources.ZoneMapPruner.readSidecar(s, root.toString) match {
-        case Some(zones) =>
-          val zoneNames = zones
-            .map(z => new org.apache.hadoop.fs.Path(z.path).getName).toSet
-          if (relFiles == zoneNames && zones.nonEmpty)
-            Some((root.toString, specOf(zones.map(_.path)), zones, blooms))
-          else {
-            // correct but previously invisible (r14 verdict item 5): the
-            // sidecar has drifted from the directory — count and log it so
-            // an operator learns the table needs a sidecar rebuild instead
-            // of silently losing per-shard routing. A VALID bloom sidecar
-            // on the same directory still routes bloom-only (r16 review:
-            // a drifted zone file must not cost MORE capability than
-            // deleting it would)
-            graft.sources.ZoneMapPruner.noteDrift(root.toString,
-              relFiles, zoneNames)
-            bloomOnly
-          }
-        case None => bloomOnly
-      }
-    }
-    fsRelation(p).flatMap(ofRelation)
-  }
 
   /** The zone-prunable subset of a conjunction — plain
     * attribute-vs-numeric-literal comparisons, both orientations (the
@@ -532,7 +450,7 @@ object ModeExec extends PredicateHelper {
     *    conjunct on this column vetoes the whole disjunction for it
     *    (that branch could match anywhere — union with "all" is "all");
     *  - several constrained conjuncts/columns INTERSECT (conjunction
-    *    semantics — the multi-key sidecar prunes on each key it
+    *    semantics — a multi-key summary prunes on each key it
     *    carries);
     *  - anything non-extractable contributes nothing: fewer constraints
     *    only under-prune, and the full predicate still runs as the
@@ -633,12 +551,12 @@ object ModeExec extends PredicateHelper {
     }
 
     // one classification per node — partitionedLeaf/shardedLeaf do
-    // filesystem work (sidecar open/read, inputFiles enumeration), so a
+    // filesystem work (summary stat/read, file-status enumeration), so a
     // pattern-guard + body pair evaluating them twice doubled that I/O
     // per routed leaf per query (r14 ADVICE). MEMOIZED per rewrite pass
     // (r15 ADVICE): the Filter arm's None branch recurses into the same
     // child node, which would classify it a second time — doubling the
-    // sidecar/FS I/O for unroutable leaves and firing noteDrift twice
+    // summary/FS I/O for unroutable leaves and counting drift twice
     // per drifted leaf (driftCount inflated 2×, duplicate WARNs).
     // lazy: a plain val between `goSubqueries` and `go` trips the
     // forward-reference rule for the mutually-recursive defs around it
@@ -663,7 +581,7 @@ object ModeExec extends PredicateHelper {
             substitute(p, pred, req)(router.scanPartitionedMode(s, path,
               segNameOf(path), _, _, partCols, mode, leasesSpanExecution,
               readSpec)) })
-        .orElse(shardedLeaf(s)(p).map { case (root, spec, zones, blooms) =>
+        .orElse(shardedLeaf(s)(p).map { case (root, spec, summary) =>
           (pred: Option[Expression], req: AttributeSet) =>
             // the zone-prunable conjuncts of the SAME predicate the router
             // also applies in full (fewer zone preds is always sound); bloom
@@ -672,8 +590,8 @@ object ModeExec extends PredicateHelper {
             // surviving zones feed the per-shard lattice unchanged
             val zonePreds = pred.map(e =>
               rangePreds(splitConjunctivePredicates(e))).getOrElse(Nil)
-            val kept = blooms.flatMap(bloomKeeps(_, zonePreds)).fold(zones)(keep =>
-              zones.filter(z =>
+            val kept = bloomKeeps(summary.blooms, zonePreds).fold(summary.zones)(keep =>
+              summary.zones.filter(z =>
                 keep.contains(new org.apache.hadoop.fs.Path(z.path).toUri.getPath)))
             substitute(p, pred, req)(router.scanShardedMode(s, spec,
               segNameOf(root), kept, zonePreds, _, _, mode, leasesSpanExecution)) })
@@ -910,26 +828,14 @@ object ModeExec extends PredicateHelper {
     * (pushdown → load → resident) with identical rows at every rung —
     * exactly the order-independence the entry contract requires. */
   private def dm10ConfMode(s: SparkSession, dir: String): DataFrame =
-    underHybridConf(s)(Engine.executeQuery(s, dir, SsbCorpus.sql("2_1")))
-
-  /** Run `body` with `spark.graft.scanMode=hybrid`, restoring the
-    * session's previous value after. */
-  private def underHybridConf[T](s: SparkSession)(body: => T): T = {
-    val prev = s.conf.getOption("spark.graft.scanMode")
-    s.conf.set("spark.graft.scanMode", "hybrid")
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set("spark.graft.scanMode", v)
-      case None    => s.conf.unset("spark.graft.scanMode")
-    }
-  }
+    ZoneMapPruner.withScanMode(s, "hybrid")(Engine.executeQuery(s, dir, SsbCorpus.sql("2_1")))
 
   /** The deployment-path shape of dm13–dm16 under hybrid conf: two
     * heating queries walk the session router's per-unit admission ladder
     * (plan-time routing; the conf route closes plan-time leases itself),
     * then the reported, wider query runs. */
   private def heatThenRun(s: SparkSession, dir: String, heat: String,
-      report: String): DataFrame = underHybridConf(s) {
+      report: String): DataFrame = ZoneMapPruner.withScanMode(s, "hybrid") {
     (1 to 2).foreach(_ => Engine.executeQuery(s, dir, heat))
     Engine.executeQuery(s, dir, report)
   }
@@ -1006,17 +912,14 @@ object ModeExec extends PredicateHelper {
     * deployment path — a plain user view over the zone-mapped sharded
     * CSV directory (no partition dirs, no library call) +
     * `SET spark.graft.scanMode=hybrid`. [[shardedLeaf]] detects the
-    * persisted sidecar, zone-prunes, and routes per shard file: two
+    * persisted shard summary, zone-prunes, and routes per shard file: two
     * heating queries over the low-key window walk the per-shard
     * admission ladder; the reported query spans a wider key range, hot
     * shards cache-side, cold shards one multi-path scan. The oracle
     * runs the same predicate over the parquet ORIGINAL (format, layout,
     * and routing change bytes, never rows). */
   private def dm15ConfSharded(s: SparkSession, dir: String): DataFrame = {
-    val (spec, _) = graft.sources.ZoneMapPruner.shardedOrders(s, dir)
-    val root = new org.apache.hadoop.fs.Path(spec.paths.head).getParent.toString
-    s.read.schema(spec.schema.get).option("delimiter", "|").csv(root)
-      .createOrReplaceTempView("orders_sharded_csv")
+    graft.sources.Fixtures.viewOver(s, ZoneMapPruner.shardedOrders(s, dir)._1, "orders_sharded_csv")
     heatThenRun(s, dir, shardSql("orders_sharded_csv", 1000),
       shardSql("orders_sharded_csv", 3000))
   }
@@ -1034,10 +937,7 @@ object ModeExec extends PredicateHelper {
     * so the routed parse is the user's parse by construction. Same
     * heat-then-wide shape as dm15; oracle = the parquet original. */
   private def dm16ConfShardedJsonl(s: SparkSession, dir: String): DataFrame = {
-    val (spec, _) = graft.sources.ZoneMapPruner.shardedOrdersJsonl(s, dir)
-    val root = new org.apache.hadoop.fs.Path(spec.paths.head).getParent.toString
-    s.read.schema(spec.schema.get).json(root)
-      .createOrReplaceTempView("orders_sharded_jsonl")
+    graft.sources.Fixtures.viewOver(s, ZoneMapPruner.shardedOrdersJsonl(s, dir)._1, "orders_sharded_jsonl")
     heatThenRun(s, dir, shardSql("orders_sharded_jsonl", 1000),
       shardSql("orders_sharded_jsonl", 3000))
   }

@@ -5,33 +5,26 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
-/** Per-shard Bloom-filter sidecar: plan-time shard pruning for EQUALITY
+/** Per-shard Bloom sketches: plan-time shard pruning for EQUALITY
   * lookups on columns with no range correlation to the shard layout —
   * exactly where [[ZoneMapPruner]] is blind. A hash-bucketed table (the
   * common data-lake layout) gives every shard a (min, max) spanning the
   * whole key domain, so zone maps prune nothing; but each key lives in
   * few shards, so a membership sketch prunes almost all of them. The two
-  * sidecars are complements: zone maps answer range predicates on
-  * range-correlated layouts, blooms answer point predicates on hashed
-  * layouts. Reference analog: the same `zoneMap.json`-style
-  * catalogue-sidecar slot (`fpdb-catalogue/include/fpdb/catalogue/
-  * Partition.h:23-41`), with a sketch instead of min/max scalars.
+  * are complements: zone maps answer range predicates on range-correlated
+  * layouts, blooms answer point predicates on hashed layouts, and one
+  * [[ShardSummary]] persists both per shard. Reference analog: the
+  * catalogue's partition metadata slot (`fpdb-catalogue/include/fpdb/
+  * catalogue/Partition.h:23-41`), with a sketch instead of min/max
+  * scalars.
   *
-  * At 100 TB the sidecar stays tiny relative to data (1 bloom per file
+  * At 100 TB the sketches stay tiny relative to data (1 bloom per file
   * per key, ~100 KB at 1% fpp for 100k keys) and pruning happens before
   * the file list reaches `spark.read` — skipped shards never become input
   * splits, the same contract as the reference's plan-construction-time
   * pruner (`fpdb-executor/src/physical/prune/PartitionPruner.cpp:23-51`).
-  *
-  * r17: the sidecar carries a sketch set PER COLUMN (the zone sidecar's
-  * per-column shape — a table with two lookup keys, order id AND
-  * customer id, prunes on both), persists ROOT-RELATIVE file paths
-  * (v=2 — basenames collapse on nested layouts with repeated part-file
-  * names), and has the full lifecycle the zone sidecar got in r15:
-  * [[rebuildSidecar]] as the one-call drift repair, and regeneration
-  * around [[Sink.compact]]/[[Sink.mergeInto]]'s directory swaps (the
-  * reference regenerates partition metadata with the data — the sidecar
-  * IS the catalogue slot, `Partition.h:23-41`).
+  * This object keeps the key encodings and the pruning reads; the
+  * summary owns persistence, drift checks and rebuilds.
   */
 object BloomPruner {
 
@@ -48,9 +41,9 @@ object BloomPruner {
   case object LongKey extends KeyKind("long")
   case object StringKey extends KeyKind("string")
 
-  /** One column's per-shard sketches — the unit the multi-key sidecar
-    * stores one of per lookup column (r17, mirroring the zone sidecar's
-    * bounds-per-column shape). */
+  /** One column's per-shard sketches — a [[ShardSummary]] carries one
+    * per lookup column (r17, mirroring the zone map's bounds-per-column
+    * shape). */
   case class ColumnBlooms(keyCol: String, kind: KeyKind,
       shards: Seq[ShardBloom])
 
@@ -76,32 +69,31 @@ object BloomPruner {
     }
   }
 
+  /** The `BloomFilterAggregate` over one key column — Spark's own
+    * expression behind runtime join filters — inserting [[encFor]]. */
+  private[sources] def bloomAgg(df: DataFrame, keyCol: String, kind: KeyKind,
+      expectedItems: Long): Column =
+    GraftBridge.column(new BloomFilterAggregate(
+      GraftBridge.expression(encFor(df, keyCol, kind)), expectedItems)
+      .toAggregateExpression())
+
+  /** A shard's sketch from its [[bloomAgg]] bytes. An all-NULL shard gets
+    * an EMPTY bloom (the aggregate returns null when nothing was
+    * inserted): it rejects every key, which is sound — equality is
+    * null-rejecting, no row there can match. */
+  private[sources] def bloomOf(bytes: Array[Byte]): BloomFilter =
+    if (bytes == null) BloomFilter.create(1) else BloomFilter.readFrom(bytes)
+
   /** Build per-shard blooms for SEVERAL key columns in ONE distributed
-    * pass: Spark's own `BloomFilterAggregate` (the expression behind
-    * runtime join filters), one aggregate per key, grouped by
-    * `input_file_name()` — no per-file driver loop and no per-key
-    * re-scan, so ingest cost is a single scan however many shards or
-    * keys exist. An all-NULL shard gets an EMPTY bloom (the aggregate
-    * returns null when nothing inserted): it rejects every key, which
-    * is sound — equality is null-rejecting, no row there can match. */
+    * pass grouped by `input_file_name()` ([[ShardSummary.aggregate]]) —
+    * no per-file driver loop and no per-key re-scan, so ingest cost is a
+    * single scan however many shards or keys exist. */
   def buildMulti(df: DataFrame, keys: Seq[(String, KeyKind)],
       expectedItems: Long = 100000L): Seq[ColumnBlooms] = {
     require(keys.nonEmpty, "buildMulti: no key columns")
-    val aggs = keys.zipWithIndex.map { case ((c, k), i) =>
-      GraftBridge.column(
-        new BloomFilterAggregate(GraftBridge.expression(encFor(df, c, k)),
-          expectedItems).toAggregateExpression()).as(s"__bloom_$i")
-    }
-    val rows = df.groupBy(input_file_name().as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect() // one row per shard — sidecar construction, not a data path
+    val rows = ShardSummary.aggregate(df, Nil, keys, expectedItems)
     keys.zipWithIndex.map { case ((c, k), i) =>
-      ColumnBlooms(c, k, rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](s"__bloom_$i")
-        ShardBloom(r.getAs[String]("__file"), c,
-          if (bytes == null) BloomFilter.create(1) // all-NULL shard: admits nothing
-          else BloomFilter.readFrom(bytes))
-      }.toSeq)
+      ColumnBlooms(c, k, rows.map { case (z, bs) => ShardBloom(z.path, c, bs(i)) })
     }
   }
 
@@ -215,262 +207,19 @@ object BloomPruner {
     }
   }
 
-  // ---- persisted sidecar (r16; multi-key v=2 in r17) ----------------------
-
-  /** The bloom sidecar's file name — underscore-prefixed like the zone
-    * sidecar so file indexes skip it as data; same catalogue-sidecar
-    * slot as the reference's partition metadata (`Partition.h:23-41`).
-    *
-    * v=2 format (r17): header `v=2<TAB>keys=<col>:<kind>,<col>:<kind>…`,
-    * then one line per shard: `relativePath<TAB>base64(bloom₁)<TAB>…`
-    * with one blob per declared key, in header order. Paths are
-    * ROOT-RELATIVE (not basenames — r16 ADVICE: on a nested layout with
-    * repeated part-file basenames a name-set gate collapses duplicates
-    * and `Path(root, name)` resolves wrongly), so the directory can
-    * still move as a unit. v=1 single-key files (older writers) still
-    * parse. */
-  val SidecarName = "_graft_bloom"
-
-  /** `file`'s path relative to `root`, or None when `file` is not under
-    * `root` — both compared by URI path, so `file:/x` and `file:///x`
-    * spellings agree. The write side refuses a None (a sidecar must
-    * describe its own directory); the routing gate treats a None as
-    * drift. */
-  private[graft] def relPath(root: org.apache.hadoop.fs.Path,
-      file: String): Option[String] = {
-    val r = root.toUri.getPath.stripSuffix("/")
-    val f = new org.apache.hadoop.fs.Path(file).toUri.getPath
-    if (f.startsWith(r + "/")) Some(f.substring(r.length + 1)) else None
-  }
-
-  /** Persist per-column blooms as `dir/_graft_bloom` (tmp + rename —
-    * readers never see a torn file). Every column must cover the SAME
-    * file set (one build pass does this by construction), every file
-    * must live under `dir`, and key-column names must be free of the
-    * format's own delimiters. */
-  def writeSidecar(s: SparkSession, dir: String,
-      cols: Seq[ColumnBlooms]): Unit = {
-    require(cols.nonEmpty, "writeSidecar: no column blooms")
-    cols.foreach(cb => require(!cb.keyCol.exists(c =>
-      c == ':' || c == ',' || c == '\t' || c == '\n'),
-      s"writeSidecar: key column name '${cb.keyCol}' contains a delimiter"))
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def relsOf(cb: ColumnBlooms): Map[String, ShardBloom] =
-      cb.shards.map { b =>
-        relPath(root, b.path).getOrElse(sys.error(
-          s"writeSidecar: ${b.path} is not under $dir")) -> b
-      }.toMap
-    val byCol = cols.map(relsOf)
-    val rels = byCol.head.keySet
-    require(byCol.forall(_.keySet == rels),
-      s"writeSidecar: column blooms cover different file sets under $dir")
-    val tmp = new org.apache.hadoop.fs.Path(root,
-      s".${SidecarName}.tmp.${System.nanoTime}")
-    val target = new org.apache.hadoop.fs.Path(root, SidecarName)
-    val text = new StringBuilder("v=2\tkeys=")
-      .append(cols.map(cb => s"${cb.keyCol}:${cb.kind.name}").mkString(","))
-      .append('\n')
-    rels.toSeq.sorted.foreach { rel =>
-      text.append(rel)
-      byCol.foreach { m =>
-        val buf = new java.io.ByteArrayOutputStream()
-        m(rel).bloom.writeTo(buf)
-        text.append('\t')
-          .append(java.util.Base64.getEncoder.encodeToString(buf.toByteArray))
-      }
-      text.append('\n')
-    }
-    val out = fs.create(tmp, true)
-    try out.write(text.toString.getBytes("UTF-8")) finally out.close()
-    fs.delete(target, false)
-    if (!fs.rename(tmp, target))
-      sys.error(s"could not publish bloom sidecar $target")
-  }
-
-  /** Single-key convenience over the multi-column [[writeSidecar]]. */
-  def writeSidecar(s: SparkSession, dir: String, keyCol: String,
-      kind: KeyKind, blooms: Seq[ShardBloom]): Unit =
-    writeSidecar(s, dir, Seq(ColumnBlooms(keyCol, kind, blooms)))
-
-  // Parsed-sidecar memo keyed by (fully-qualified sidecar path, len,
-  // mtime) — fully-qualified (r16 ADVICE: a bare uri path drops the
-  // filesystem scheme/authority, so two tables at the same path on
-  // different filesystems could serve each other's parses) and
-  // SELF-invalidating: any rewrite changes (len, mtime) and misses, so
-  // no writer hook is needed (the conf route classifies per query per
-  // leaf, and re-decoding base64 sketches of 5k shards per query is
-  // exactly the per-decision cost the r15 driver-cheap work removed;
-  // one stat per query replaces the full decode). Bounded LRU; values
-  // are immutable parses, nothing to release on eviction.
-  private val SidecarCacheMax = 64
-  private val sidecarCache = new java.util.LinkedHashMap[
-      (String, Long, Long), Option[Seq[ColumnBlooms]]](
-      16, 0.75f, /*accessOrder=*/ true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-        (String, Long, Long), Option[Seq[ColumnBlooms]]]): Boolean =
-      size() > SidecarCacheMax
-  }
-
-  /** Load `dir/_graft_bloom` if present: one [[ColumnBlooms]] per
-    * declared key column, shard paths resolved back to absolute under
-    * `dir`. Malformed → None (pruning is an optimization, never a
-    * correctness input). Parses are memoized on the sidecar file's
-    * qualified path + (length, mtime) — see [[sidecarCache]]. */
-  def readSidecar(s: SparkSession, dir: String): Option[Seq[ColumnBlooms]] =
-    try {
-      val root0 = new org.apache.hadoop.fs.Path(dir)
-      val fs0 = root0.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val target0 = new org.apache.hadoop.fs.Path(root0, SidecarName)
-      if (!fs0.exists(target0)) return None
-      val st = fs0.getFileStatus(target0)
-      val ck = (fs0.makeQualified(target0).toString,
-        st.getLen, st.getModificationTime)
-      sidecarCache.synchronized {
-        val hit = sidecarCache.get(ck)
-        if (hit != null) return hit
-      }
-      val parsed = parseSidecar(s, dir)
-      sidecarCache.synchronized { sidecarCache.put(ck, parsed) }
-      parsed
-    } catch { case e: Exception =>
-      org.slf4j.LoggerFactory.getLogger(getClass)
-        .warn(s"ignoring unreadable bloom sidecar under $dir: ${e.getMessage}")
-      None
-    }
-
-  private def kindOf(name: String): Option[KeyKind] = name match {
-    case "long"   => Some(LongKey)
-    case "string" => Some(StringKey)
-    case _        => None
-  }
-
-  private def parseSidecar(s: SparkSession, dir: String)
-      : Option[Seq[ColumnBlooms]] =
-    try {
-      val root = new org.apache.hadoop.fs.Path(dir)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val target = new org.apache.hadoop.fs.Path(root, SidecarName)
-      if (!fs.exists(target)) return None
-      val in = fs.open(target)
-      val text = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](8192)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        new String(buf.toByteArray, "UTF-8")
-      } finally in.close()
-      val lines = text.linesIterator.toSeq
-      val header = lines.headOption.getOrElse(return None).split('\t')
-      def bloom(b64: String): BloomFilter =
-        BloomFilter.readFrom(new java.io.ByteArrayInputStream(
-          java.util.Base64.getDecoder.decode(b64)))
-      header.headOption match {
-        case Some("v=1") => // single-key legacy: name<TAB>b64 lines
-          if (header.length < 3) return None
-          val keyCol = header(1).stripPrefix("keyCol=")
-          val kind = kindOf(header(2).stripPrefix("kind=")).getOrElse(return None)
-          Some(Seq(ColumnBlooms(keyCol, kind,
-            lines.drop(1).filter(_.nonEmpty).map { line =>
-              val Array(name, b64) = line.split('\t')
-              ShardBloom(new org.apache.hadoop.fs.Path(root, name).toString,
-                keyCol, bloom(b64))
-            })))
-        case Some("v=2") => // relPath<TAB>b64 per key, header order
-          if (header.length < 2) return None
-          val keys = header(1).stripPrefix("keys=").split(',').toSeq.map { kv =>
-            val Array(c, k) = kv.split(':')
-            c -> kindOf(k).getOrElse(return None)
-          }
-          val rows = lines.drop(1).filter(_.nonEmpty).map { line =>
-            val parts = line.split('\t')
-            if (parts.length != keys.length + 1) return None
-            (parts.head, parts.tail)
-          }
-          Some(keys.zipWithIndex.map { case ((c, k), i) =>
-            ColumnBlooms(c, k, rows.map { case (rel, blobs) =>
-              ShardBloom(new org.apache.hadoop.fs.Path(root, rel).toString,
-                c, bloom(blobs(i)))
-            })
-          })
-        case _ => None
-      }
-    } catch { case e: Exception =>
-      org.slf4j.LoggerFactory.getLogger(getClass)
-        .warn(s"ignoring unreadable bloom sidecar under $dir: ${e.getMessage}")
-      None
-    }
-
-  /** Rebuild `dir`'s bloom sidecar from the data files currently on
-    * disk — ONE distributed pass ([[buildMulti]], all keys in one scan)
-    * published tmp+rename like [[writeSidecar]], then the
-    * writer-invalidation hooks (the same pair
-    * [[graft.sources.Sink.compact]] fires after its swap) so cached
-    * listings and Spark's file-status/CacheManager state see the new
-    * shard set. This is the one-call repair the drift warning names —
-    * the bloom twin of [[ZoneMapPruner.rebuildSidecar]] (r16 verdict:
-    * a drifted bloom sidecar had no documented fix short of re-running
-    * the build by hand). `template`'s format/schema/options describe how
-    * to parse the shards; its paths are ignored — the DIRECTORY is
-    * listed fresh (underscore/dot names skipped), because a drifted
-    * sidecar is exactly the state where any cached path set is wrong. */
-  def rebuildSidecar(s: SparkSession, dir: String, template: TableSpec,
-      keys: Seq[(String, KeyKind)],
-      expectedItems: Long = 100000L): Seq[ColumnBlooms] = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(root).toSeq
-      .filter(st => st.isFile &&
-        !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .map(_.getPath.toString).sorted
-    require(files.nonEmpty, s"rebuildSidecar: no data files under $dir")
-    val cols = buildMulti(Catalog.read(s, template.copy(paths = files)),
-      keys, expectedItems)
-    writeSidecar(s, dir, cols)
-    Tables.wrote(s, dir)
-    cols
-  }
-
   // ---- end-to-end demonstration entries -----------------------------------
 
-  /** Ingest-once artifact: `orders` hash-sharded 8 ways by o_custkey into
+  import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+
+  /** Ingest-once fixture: `orders` hash-sharded 8 ways by o_custkey into
     * CSV (each custkey lands in exactly one shard; every shard's key
     * RANGE spans the whole domain, so zone maps cannot prune this layout
-    * at all) with one bloom per shard built in a single pass. */
-  private val artifact = new graft.util.SessionCache[(TableSpec, Seq[ShardBloom])]()
-
-  private[graft] def shardedByCustkey(s: SparkSession, dir: String): (TableSpec, Seq[ShardBloom]) =
-    artifact.getOrBuild(s, dir) {
-      // write-once via Fixtures: the old mode("overwrite") into a
-      // dir-keyed /tmp path let a SECOND session on the same dir delete
-      // the part-files the first session's cached spec still points at
-      val out = Fixtures.ensure(s, Fixtures.path(dir, "orders_bloom_csv")) {
-        Tables.orders(s, dir)
-          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("o_orderstatus"))
-          .repartition(8, col("o_custkey"))
-          .write.mode("overwrite")
-          .option("delimiter", "|").option("header", "false")
-          .csv(Fixtures.path(dir, "orders_bloom_csv"))
-      }
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      val files = fs.globStatus(new org.apache.hadoop.fs.Path(out, "part-*"))
-        .map(_.getPath.toString).sorted.toSeq
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("o_orderkey", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("o_custkey", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("o_totalprice", org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("o_orderstatus", org.apache.spark.sql.types.StringType)))
-      val spec = TableSpec("orders_bloom_csv", "csv", files, Some(schema), "|")
-      val blooms = build(Catalog.read(s, spec), "o_custkey")
-      // publish the sidecar next to the data (write-once like the
-      // files): the conf-mode rewriter detects it and prunes point
-      // lookups with no library call (r16)
-      val sidecar = new org.apache.hadoop.fs.Path(out, SidecarName)
-      if (!fs.exists(sidecar))
-        writeSidecar(s, out.toString, "o_custkey", LongKey, blooms)
-      (spec, blooms)
-    }
+    * at all) with one bloom per shard in its [[ShardSummary]]. */
+  private[graft] def shardedByCustkey(s: SparkSession, dir: String): (TableSpec, ShardSummary) =
+    Fixtures.sharded(s, dir, "orders_bloom_csv", "csv", Seq("o_orderkey" -> LongType,
+      "o_custkey" -> LongType, "o_totalprice" -> DoubleType,
+      "o_orderstatus" -> StringType), Nil, Seq("o_custkey" -> LongKey))(
+      _.repartition(8, col("o_custkey")))
 
   /** z02 — bloom-sidecar point lookup end-to-end: `o_custkey = 42`
     * against the hash-sharded CSV table reads only the (expectedly 1 of
@@ -478,8 +227,8 @@ object BloomPruner {
     * bloom admits the key; the result must equal DuckDB running the same
     * predicate over the parquet original. */
   private def z02BloomPrune(s: SparkSession, dir: String): DataFrame = {
-    val (spec, blooms) = shardedByCustkey(s, dir)
-    readPruned(s, spec, blooms, 42L)
+    val (spec, summary) = shardedByCustkey(s, dir)
+    readPruned(s, spec, summary.blooms.head.shards, 42L)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"), Tables.exactSum(col("o_totalprice")).as("total_price"))
       .orderBy(col("o_orderstatus"))
@@ -496,31 +245,12 @@ object BloomPruner {
     * zone maps prune nothing (every shard's string interval spans the
     * domain). */
   private[graft] def shardedByCustId(s: SparkSession, dir: String)
-      : (TableSpec, Seq[ShardBloom]) =
-    artifact.getOrBuild(s, s"$dir#custid") {
-      val out = Fixtures.ensure(s, Fixtures.path(dir, "orders_bloomstr_csv")) {
-        Tables.orders(s, dir)
-          .select(concat(lit("cust-"), col("o_custkey")).as("cust_id"),
-            col("o_totalprice"), col("o_orderstatus"))
-          .repartition(8, col("cust_id"))
-          .write.mode("overwrite")
-          .option("delimiter", "|").option("header", "false")
-          .csv(Fixtures.path(dir, "orders_bloomstr_csv"))
-      }
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      val files = fs.globStatus(new org.apache.hadoop.fs.Path(out, "part-*"))
-        .map(_.getPath.toString).sorted.toSeq
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("cust_id", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("o_totalprice", org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("o_orderstatus", org.apache.spark.sql.types.StringType)))
-      val spec = TableSpec("orders_bloomstr_csv", "csv", files, Some(schema), "|")
-      val blooms = buildString(Catalog.read(s, spec), "cust_id")
-      val sidecar = new org.apache.hadoop.fs.Path(out, SidecarName)
-      if (!fs.exists(sidecar))
-        writeSidecar(s, out.toString, "cust_id", StringKey, blooms)
-      (spec, blooms)
-    }
+      : (TableSpec, ShardSummary) =
+    Fixtures.sharded(s, dir, "orders_bloomstr_csv", "csv", Seq(
+      "cust_id" -> StringType, "o_totalprice" -> DoubleType,
+      "o_orderstatus" -> StringType), Nil, Seq("cust_id" -> StringKey))(
+      _.withColumn("cust_id", concat(lit("cust-"), col("o_custkey")))
+        .repartition(8, col("cust_id")))
 
   /** z13 (r16) — STRING-key bloom point lookup end-to-end:
     * `cust_id = 'cust-42'` against the string-hash-bucketed CSV table
@@ -529,8 +259,8 @@ object BloomPruner {
     * the equivalent numeric predicate over the parquet original
     * ('cust-' || o_custkey = 'cust-42'  ⇔  o_custkey = 42). */
   private def z13BloomStringPrune(s: SparkSession, dir: String): DataFrame = {
-    val (spec, blooms) = shardedByCustId(s, dir)
-    readPrunedString(s, spec, blooms, "cust-42")
+    val (spec, summary) = shardedByCustId(s, dir)
+    readPrunedString(s, spec, summary.blooms.head.shards, "cust-42")
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"), Tables.exactSum(col("o_totalprice")).as("total_price"))
       .orderBy(col("o_orderstatus"))
@@ -542,27 +272,18 @@ object BloomPruner {
 
   /** Run `sql` over a temp view of the string-bucketed bloom directory
     * through the DEPLOYMENT path: `SET spark.graft.scanMode=hybrid`, no
-    * library call anywhere — the conf-mode rewriter detects
-    * `_graft_bloom` and prunes by sketch membership. */
+    * library call anywhere — the conf-mode rewriter reads the
+    * directory's [[ShardSummary]] and prunes by sketch membership. */
   private def confOverCustId(s: SparkSession, dir: String, sql: String): DataFrame = {
-    val (spec, _) = shardedByCustId(s, dir)
-    val root = new org.apache.hadoop.fs.Path(spec.paths.head).getParent.toString
-    s.read.schema(spec.schema.get).option("delimiter", "|").csv(root)
-      .createOrReplaceTempView("orders_bloomstr_csv")
-    val prev = s.conf.getOption("spark.graft.scanMode")
-    s.conf.set("spark.graft.scanMode", "hybrid")
-    try graft.Engine.executeQuery(s, dir, sql)
-    finally prev match {
-      case Some(v) => s.conf.set("spark.graft.scanMode", v)
-      case None    => s.conf.unset("spark.graft.scanMode")
-    }
+    Fixtures.viewOver(s, shardedByCustId(s, dir)._1, "orders_bloomstr_csv")
+    ZoneMapPruner.withScanMode(s, "hybrid")(graft.Engine.executeQuery(s, dir, sql))
   }
 
   /** z14 (r16) — the bloom sidecar through the deployment path: a plain
     * view over the string-hash-bucketed directory + `SET
     * spark.graft.scanMode=hybrid`, no library call anywhere. The
-    * conf-mode rewriter detects `_graft_bloom`, routes the leaf per
-    * shard (zones synthesized bound-free — a hash layout has no ranges
+    * conf-mode rewriter reads the summary, routes the leaf per
+    * shard (zones bound-free — a hash layout has no ranges
     * to prune), and the `cust_id = 'cust-42'` equality drops every
     * shard whose sketch rejects xxhash64('cust-42'). Oracle = the
     * equivalent numeric predicate over the parquet original. */
@@ -596,55 +317,23 @@ object BloomPruner {
       |FROM orders WHERE o_custkey IN (42, 900)
       |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin
 
-  /** TWO-KEY artifact (r17): orders hash-bucketed 8 ways by the string
+  /** TWO-KEY fixture (r17): orders hash-bucketed 8 ways by the string
     * entity id, with blooms on BOTH lookup keys — `o_orderkey` (long)
-    * and `cust_id` (string) — built in ONE pass and persisted as one
-    * v=2 sidecar. The shape a real lake table has: bucketed by one key,
-    * point-looked-up by several. */
-  private val artifact2 =
-    new graft.util.SessionCache[(TableSpec, Seq[ColumnBlooms])]()
-
+    * and `cust_id` (string) — built in ONE pass into one summary. The
+    * shape a real lake table has: bucketed by one key, point-looked-up
+    * by several. */
   private[graft] def shardedTwoKey(s: SparkSession, dir: String)
-      : (TableSpec, Seq[ColumnBlooms]) =
-    artifact2.getOrBuild(s, s"$dir#twokey") {
-      val out = Fixtures.ensure(s, Fixtures.path(dir, "orders_bloom2_csv")) {
-        Tables.orders(s, dir)
-          .select(col("o_orderkey"),
-            concat(lit("cust-"), col("o_custkey")).as("cust_id"),
-            col("o_totalprice"), col("o_orderstatus"))
-          .repartition(8, col("cust_id"))
-          .write.mode("overwrite")
-          .option("delimiter", "|").option("header", "false")
-          .csv(Fixtures.path(dir, "orders_bloom2_csv"))
-      }
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      val files = fs.globStatus(new org.apache.hadoop.fs.Path(out, "part-*"))
-        .map(_.getPath.toString).sorted.toSeq
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("o_orderkey", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("cust_id", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("o_totalprice", org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("o_orderstatus", org.apache.spark.sql.types.StringType)))
-      val spec = TableSpec("orders_bloom2_csv", "csv", files, Some(schema), "|")
-      val cols = buildMulti(Catalog.read(s, spec),
-        Seq("o_orderkey" -> LongKey, "cust_id" -> StringKey))
-      val sidecar = new org.apache.hadoop.fs.Path(out, SidecarName)
-      if (!fs.exists(sidecar)) writeSidecar(s, out.toString, cols)
-      (spec, cols)
-    }
+      : (TableSpec, ShardSummary) =
+    Fixtures.sharded(s, dir, "orders_bloom2_csv", "csv", Seq(
+      "o_orderkey" -> LongType, "cust_id" -> StringType,
+      "o_totalprice" -> DoubleType, "o_orderstatus" -> StringType), Nil,
+      Seq("o_orderkey" -> LongKey, "cust_id" -> StringKey))(
+      _.withColumn("cust_id", concat(lit("cust-"), col("o_custkey")))
+        .repartition(8, col("cust_id")))
 
   private def confOverTwoKey(s: SparkSession, dir: String, sql: String): DataFrame = {
-    val (spec, _) = shardedTwoKey(s, dir)
-    val root = new org.apache.hadoop.fs.Path(spec.paths.head).getParent.toString
-    s.read.schema(spec.schema.get).option("delimiter", "|").csv(root)
-      .createOrReplaceTempView("orders_bloom2_csv")
-    val prev = s.conf.getOption("spark.graft.scanMode")
-    s.conf.set("spark.graft.scanMode", "hybrid")
-    try graft.Engine.executeQuery(s, dir, sql)
-    finally prev match {
-      case Some(v) => s.conf.set("spark.graft.scanMode", v)
-      case None    => s.conf.unset("spark.graft.scanMode")
-    }
+    Fixtures.viewOver(s, shardedTwoKey(s, dir)._1, "orders_bloom2_csv")
+    ZoneMapPruner.withScanMode(s, "hybrid")(graft.Engine.executeQuery(s, dir, sql))
   }
 
   /** z16 (r17) — multi-key sidecar, FIRST key: a point lookup on

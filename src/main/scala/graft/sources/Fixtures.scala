@@ -109,6 +109,42 @@ private[graft] object Fixtures {
     }
   }
 
+  /** A sharded copy of `dir`'s orders: `layout` of the table, projected
+    * to `schema`'s columns and written as `format` ("csv" pipe-delimited
+    * without a header, or "json") under the fixture `name`, plus its
+    * [[ShardSummary]]. The summary is built only when the fixture lacks a
+    * readable one; otherwise it comes through the memoized reader, so a
+    * later session resolving the fixture runs no Spark job. */
+  def sharded(s: SparkSession, dir: String, name: String, format: String,
+      schema: Seq[(String, org.apache.spark.sql.types.DataType)],
+      zoneCols: Seq[String], bloomKeys: Seq[(String, BloomPruner.KeyKind)] = Nil)(
+      layout: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      : (TableSpec, ShardSummary) = {
+    import org.apache.spark.sql.functions.col
+    val out = ensure(s, path(dir, name)) {
+      val w = layout(Tables.orders(s, dir)).select(schema.map(c => col(c._1)): _*)
+        .write.mode("overwrite")
+      if (format == "csv") w.option("delimiter", "|").option("header", "false").csv(path(dir, name))
+      else w.json(path(dir, name))
+    }
+    val spec = TableSpec(name, format, Nil, Some(org.apache.spark.sql.types.StructType(
+      schema.map { case (c, t) => org.apache.spark.sql.types.StructField(c, t) })), "|")
+    val summary = ShardSummary.read(s, out).getOrElse {
+      ShardSummary.write(s, out, ShardSummary.build(s, out, spec, zoneCols, bloomKeys))
+      ShardSummary.read(s, out).getOrElse(sys.error(s"unreadable shard summary under $out"))
+    }
+    (spec.copy(paths = summary.shards.map(_.zone.path)), summary)
+  }
+
+  /** Register `view` as a plain read of a [[sharded]] fixture's
+    * directory, the way a user reaches it before the conf route does. */
+  def viewOver(s: SparkSession, spec: TableSpec, view: String): Unit = {
+    val r = s.read.schema(spec.schema.get)
+    (if (spec.format == "csv") r.option("delimiter", "|") else r).format(spec.format)
+      .load(new org.apache.hadoop.fs.Path(spec.paths.head).getParent.toString)
+      .createOrReplaceTempView(view)
+  }
+
   /** Return `out` with the fixture present: reuse a completed write,
     * else run `write` (which must produce a Spark `_SUCCESS` marker). */
   def ensure(s: SparkSession, out: String)(write: => Unit): String = {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 /** Write-side catalog layer — the engine's sinks, completing the
   * source/sink story: parquet partitioned by a column (directory-pruned on
   * read), alongside `plans.Bucketing.writeBucketed` (co-located joins) and
-  * the sharded CSV + zone-map path (`ZoneMapPruner.shardedOrders`).
+  * the sharded CSV + shard-summary path (`ZoneMapPruner.shardedOrders`).
   *
   * Partitioning by a low-cardinality column bakes the predicate into the
   * directory layout: a reader filtering on it scans only the matching
@@ -81,11 +81,8 @@ object Sink {
     // + two-rename swap (and its crash window) it would otherwise pay —
     // streaming restarts routinely deliver zero-row micro-batches
     if (batchEmpty) return
-    // before the swap loses the sidecars (both kinds — r16 verdict: the
-    // zone sidecar was captured here but a bloom sidecar was silently
-    // destroyed by the directory swap)
-    val zoneCols = zoneColsOf(spark, path)
-    val bloomKeys = bloomKeysOf(spark, path)
+    // before the swap loses the shard summary
+    val summary = ShardSummary.read(spark, path)
     val merged =
       if (fs.exists(p)) graft.operators.Relational.upsert(spark.read.parquet(path), latest, key)
       else latest
@@ -100,13 +97,7 @@ object Sink {
       sys.error(s"mergeInto: cannot swap in $tmp")
     }
     fs.delete(bak, true)
-    // the table's files just changed under every listing, relation memo,
-    // view and cached segment over it (external writers call
-    // HybridScan.invalidateListings + refreshByPath themselves, the
-    // REFRESH TABLE analog)
-    Tables.wrote(spark, path)
-    rezone(spark, path, zoneCols)
-    rebloom(spark, path, bloomKeys)
+    resummarize(spark, path, summary)
   }
 
   /** Restore a table whose last mergeInto/compact died between its two
@@ -159,9 +150,8 @@ object Sink {
     if (before.isEmpty) sys.error(
       s"compact: no top-level .parquet files in $path — " +
         "partitioned or empty table? compact() operates on flat directories")
-    // before the swap loses the sidecars (both kinds — see mergeInto)
-    val zoneCols = zoneColsOf(spark, path)
-    val bloomKeys = bloomKeysOf(spark, path)
+    // before the swap loses the shard summary (see mergeInto)
+    val summary = ShardSummary.read(spark, path)
     val totalBytes = before.map(_.getLen).sum
     val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
     val tmp = new Path(p.getParent, s".${p.getName}.compact.tmp")
@@ -177,56 +167,28 @@ object Sink {
       sys.error(s"compact: cannot swap in $tmp")
     }
     fs.delete(bak, true)
-    Tables.wrote(spark, path)
-    rezone(spark, path, zoneCols)
-    rebloom(spark, path, bloomKeys)
+    resummarize(spark, path, summary)
     (before.length, afterCount)
   }
 
-  /** Columns of `path`'s zone-map sidecar, empty when none — read BEFORE
-    * a whole-directory swap, which moves the sidecar out with the old
-    * directory and deletes it with the `.bak` snapshot (the table would
-    * otherwise silently stop routing per shard after every maintenance
-    * op, with nothing even to count as drift). */
-  private def zoneColsOf(spark: SparkSession, path: String): Seq[String] =
-    ZoneMapPruner.readSidecar(spark, path)
-      .map(_.flatMap(_.ranges.keys).distinct.sorted).getOrElse(Nil)
-
-  /** Regenerate the zone-map sidecar a swap destroyed — one distributed
-    * pass over the NEW file set ([[ZoneMapPruner.rebuildSidecar]], which
-    * also re-fires the writer-invalidation hooks). The maintenance ops
-    * here rewrite flat parquet directories, so the rebuild template is
-    * the parquet read. */
-  private def rezone(spark: SparkSession, path: String,
-      zoneCols: Seq[String]): Unit =
-    if (zoneCols.nonEmpty) {
-      ZoneMapPruner.rebuildSidecar(spark, path,
-        TableSpec(new org.apache.hadoop.fs.Path(path).getName, "parquet",
-          Nil, None), zoneCols)
+  /** After a whole-directory swap: the table's files just changed under
+    * every listing, relation memo, view and cached segment over it, so
+    * fire [[Tables.wrote]] once (external writers call
+    * `HybridScan.invalidateListings` + `refreshByPath` themselves, the
+    * REFRESH TABLE analog). The swap also moved the shard summary out
+    * with the old directory and deleted it with the `.bak` snapshot, so
+    * a table that had one (`kept`, read before the swap) gets it rebuilt
+    * over the new files with the same zone columns (numeric and string)
+    * and bloom keys — one pass, whose [[ShardSummary.rebuild]] fires the
+    * hook even when it fails. The rebuild template is the parquet read:
+    * the maintenance ops here rewrite flat parquet directories. */
+  private def resummarize(spark: SparkSession, path: String,
+      kept: Option[ShardSummary]): Unit = kept match {
+    case Some(k) =>
+      ShardSummary.rebuild(spark, path, TableSpec(
+        new org.apache.hadoop.fs.Path(path).getName, "parquet", Nil, None),
+        k.zoneCols, k.bloomKeys)
       ()
-    }
-
-  /** Key columns (and kinds) of `path`'s bloom sidecar, empty when
-    * none — the bloom twin of [[zoneColsOf]], read BEFORE a
-    * whole-directory swap (r16 verdict item 1: compact over a
-    * bloom-bucketed table silently DESTROYED `_graft_bloom` — the exact
-    * hazard class §22.5 closed for zones; the reference regenerates
-    * partition metadata with the data, `fpdb-catalogue/include/fpdb/
-    * catalogue/Partition.h:23-41`). */
-  private def bloomKeysOf(spark: SparkSession, path: String)
-      : Seq[(String, BloomPruner.KeyKind)] =
-    BloomPruner.readSidecar(spark, path)
-      .map(_.map(cb => cb.keyCol -> cb.kind)).getOrElse(Nil)
-
-  /** Regenerate the bloom sidecar a swap destroyed — one distributed
-    * pass over the NEW file set ([[BloomPruner.rebuildSidecar]], which
-    * also re-fires the writer-invalidation hooks). */
-  private def rebloom(spark: SparkSession, path: String,
-      bloomKeys: Seq[(String, BloomPruner.KeyKind)]): Unit =
-    if (bloomKeys.nonEmpty) {
-      BloomPruner.rebuildSidecar(spark, path,
-        TableSpec(new org.apache.hadoop.fs.Path(path).getName, "parquet",
-          Nil, None), bloomKeys)
-      ()
-    }
+    case None => Tables.wrote(spark, path)
+  }
 }

@@ -188,253 +188,79 @@ object ZoneMapPruner {
     else { if (cmp < 0) Math.nextUp(d) else d }
   }
 
-  /** Build zone maps for an existing table by file — one aggregation over
-    * `input_file_name()`, the Spark-native way to generate the stats
-    * sidecar (run once at ingest, persist next to the data).
-    *
-    * Bounds aggregate on an EXACT encoding of the NATIVE column type and
-    * only then convert to double, rounded OUTWARD when inexact
-    * ([[outward]]) — never through a round-to-nearest `cast("double")`.
-    * Date columns encode as epoch DAYS and timestamps as epoch MICROS —
-    * the same dimensions [[graft.plans.ModeExec.rangePreds]] encodes
-    * date/timestamp literals in, so `WHERE d >= DATE '…'` prunes
-    * date-sharded logs (the reference's zone maps carry typed date
-    * bounds, `Partition.h:23-41`). */
-  def build(df: DataFrame, columns: Seq[String]): Seq[ShardZoneMap] = {
+  /** Build zone maps for an existing table by file: one aggregation
+    * over `input_file_name()` ([[ShardSummary.aggregate]]), the
+    * Spark-native way to generate the stats a [[ShardSummary]] persists
+    * next to the data. */
+  def build(df: DataFrame, columns: Seq[String]): Seq[ShardZoneMap] =
+    ShardSummary.aggregate(df, columns, Nil).map(_._1)
+
+  /** The min/max aggregates behind a zone map. Bounds aggregate on an
+    * EXACT encoding of the NATIVE column type and only then convert to
+    * double, rounded OUTWARD when inexact ([[outward]]) — never through
+    * a round-to-nearest `cast("double")`. Date columns encode as epoch
+    * DAYS and timestamps as epoch MICROS — the same dimensions
+    * [[graft.plans.ModeExec.rangePreds]] encodes date/timestamp literals
+    * in, so `WHERE d >= DATE '…'` prunes date-sharded logs (the
+    * reference's zone maps carry typed date bounds, `Partition.h:23-41`).
+    * String columns (UTF8_BINARY collation only — a non-binary collation
+    * orders differently from [[utf8Cmp]]) keep their native bounds. */
+  private[sources] def boundAggs(df: DataFrame, columns: Seq[String]): Seq[Column] = {
     import org.apache.spark.sql.types._
-    val dtypes = columns.map(c => c -> df.schema(c).dataType).toMap
-    // string columns (UTF8_BINARY collation only — a non-binary collation
-    // orders differently from [[utf8Cmp]] and must not produce bounds)
-    def isStr(c: String): Boolean = dtypes(c) == StringType
-    val (strCols, numCols) = columns.partition(isStr)
-    def enc(c: String): Column = dtypes(c) match {
+    def enc(c: String): Column = df.schema(c).dataType match {
       case DateType      => unix_date(col(c)).cast("long")
       case TimestampType => unix_micros(col(c))
       case DoubleType | FloatType => col(c).cast("double")
       case _             => col(c)
     }
-    val aggs = columns.flatMap(c =>
-      Seq(min(enc(c)).as(s"min_$c"), max(enc(c)).as(s"max_$c")))
-    df.groupBy(input_file_name().as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map { r =>
-        def bound(name: String, isMin: Boolean): Option[Double] =
-          r.getAs[Any](name) match {
-            case null => None
-            // a NaN bound widens to the matching infinity: Spark orders
-            // NaN ABOVE every value, so max() of a NaN-bearing column is
-            // NaN and every strict zone compare against it (`hi > v`)
-            // would be false — pruning a shard whose non-NaN rows match
-            // (and whose NaN rows match every Gt/Ge under Spark's
-            // ordering). The all-NULL case keeps the EMPTY interval; NaN
-            // widens in the opposite, sound direction (r15 ADVICE).
-            case d: java.lang.Double =>
-              if (d.isNaN) Some(if (isMin) Double.NegativeInfinity
-                                else Double.PositiveInfinity)
-              else Some(d.doubleValue)
-            case f: java.lang.Float =>
-              if (f.isNaN) Some(if (isMin) Double.NegativeInfinity
-                                else Double.PositiveInfinity)
-              else Some(f.doubleValue)
-            case other => Some(exactBD(other).map(outward(_, isMin)).getOrElse(
-              sys.error(s"zone map: unencodable bound $other for $name")))
-          }
-        ShardZoneMap(
-          r.getAs[String]("__file"),
-          numCols.map { c =>
-            (bound(s"min_$c", isMin = true), bound(s"max_$c", isMin = false)) match {
-              case (Some(lo), Some(hi)) => c -> (lo, hi)
-              // an all-NULL shard: no row can satisfy ANY extracted range
-              // predicate (comparisons are null-rejecting; the residual
-              // keeps IS NULL semantics), so the EMPTY interval — which
-              // every mayMatch arm rejects — prunes it soundly
-              case _ => c -> (Double.PositiveInfinity, Double.NegativeInfinity)
-            }
-          }.toMap,
-          strCols.flatMap { c =>
-            (Option(r.getAs[String](s"min_$c")),
-             Option(r.getAs[String](s"max_$c"))) match {
-              case (Some(lo), Some(hi)) => Some(c -> (lo, hi))
-              case _ => None // all-NULL string shard: kept conservatively
-            }
-          }.toMap)
-      }.toSeq
+    columns.flatMap(c => Seq(min(enc(c)).as(s"min_$c"), max(enc(c)).as(s"max_$c")))
   }
 
-  // ---- persisted sidecar -------------------------------------------------
-
-  /** The sidecar file name, underscore-prefixed so Spark's file index
-    * (and graft's own listings) skip it as a data file — the reference
-    * keeps exactly this artifact next to its data (`zoneMap.json`
-    * referenced from the catalogue's Partition metadata,
-    * `Partition.h:23-41`). Line format, one shard per line after a
-    * version header: `fileName<TAB>col=min,max<TAB>col=min,max…` —
-    * file NAMES are relative so the table directory can move. String
-    * bounds (r16) serialize as `col=s64:<base64(min)>,<base64(max)>`
-    * (base64 of the UTF-8 bytes — a raw string value could contain the
-    * format's own tab/comma/equals delimiters); a sidecar carrying any
-    * string bound is versioned `v=2`, so an OLDER reader rejects the
-    * whole file and falls back to the unrouted read (sound) instead of
-    * misparsing, while numeric-only sidecars stay `v=1` byte-compatible. */
-  val SidecarName = "_graft_zonemap"
-
-  private def b64(s: String): String =
-    java.util.Base64.getEncoder.encodeToString(
-      s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  private def unb64(s: String): String =
-    new String(java.util.Base64.getDecoder.decode(s),
-      java.nio.charset.StandardCharsets.UTF_8)
-
-  /** Persist `zones` as `dir/_graft_zonemap` (tmp + rename — a reader
-    * never sees a torn file). Paths in `zones` may be absolute; only
-    * their file names are stored. */
-  def writeSidecar(s: SparkSession, dir: String,
-      zones: Seq[ShardZoneMap]): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    // the format stores file NAMES: refuse a file that is not a DIRECT
-    // child of the table root (r17, the bloom sidecar's r16 ADVICE
-    // applied here too) — on a nested layout with repeated part-file
-    // basenames the name-set gate collapses duplicates and
-    // `Path(root, name)` resolves to the wrong (or no) file
-    val rootUri = root.toUri.getPath.stripSuffix("/")
-    zones.foreach { z =>
-      val parent = new org.apache.hadoop.fs.Path(z.path).getParent
-      require(parent != null && parent.toUri.getPath == rootUri,
-        s"writeSidecar: ${z.path} is not a direct child of $dir")
-    }
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(root,
-      s".${SidecarName}.tmp.${System.nanoTime}")
-    val target = new org.apache.hadoop.fs.Path(root, SidecarName)
-    val version = if (zones.exists(_.strRanges.nonEmpty)) "v=2" else "v=1"
-    val text = new StringBuilder(version).append('\n')
-    zones.sortBy(_.path).foreach { z =>
-      val name = new org.apache.hadoop.fs.Path(z.path).getName
-      val cols = z.ranges.toSeq.sortBy(_._1)
-        .map { case (c, (lo, hi)) => s"$c=$lo,$hi" } ++
-        z.strRanges.toSeq.sortBy(_._1)
-          .map { case (c, (lo, hi)) => s"$c=s64:${b64(lo)},${b64(hi)}" }
-      text.append((name +: cols).mkString("\t")).append('\n')
-    }
-    val out = fs.create(tmp, true)
-    try out.write(text.toString.getBytes("UTF-8")) finally out.close()
-    fs.delete(target, false)
-    if (!fs.rename(tmp, target))
-      sys.error(s"could not publish zone-map sidecar $target")
-  }
-
-  /** Load `dir/_graft_zonemap` if present, file names resolved back to
-    * absolute paths under `dir`. A malformed sidecar returns None (the
-    * caller falls back to an unrouted/unpruned read — pruning is an
-    * optimization, never a correctness input). */
-  def readSidecar(s: SparkSession, dir: String): Option[Seq[ShardZoneMap]] =
-    try {
-      val root = new org.apache.hadoop.fs.Path(dir)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val target = new org.apache.hadoop.fs.Path(root, SidecarName)
-      if (!fs.exists(target)) return None
-      val in = fs.open(target)
-      val text = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](8192)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        new String(buf.toByteArray, "UTF-8")
-      } finally in.close()
-      val lines = text.linesIterator.toSeq
-      if (!lines.headOption.exists(h => h == "v=1" || h == "v=2")) return None
-      // bounds parse with OUTWARD rounding: graft's own writer emits
-      // shortest-round-trip doubles (exact either way), but a sidecar
-      // written by another tool can carry decimal strings strictly
-      // between adjacent doubles — nearest-rounding there could pull a
-      // min up / a max down, the parse-time face of the build-side
-      // hazard [[outward]] exists for. Non-decimal renderings
-      // (Infinity) keep the plain parse; a parsed NaN widens to the
-      // matching infinity like [[build]]'s bound() does — a NaN bound
-      // fails every strict zone compare and would prune NaN-bearing
-      // shards whose rows match (r15 ADVICE).
-      def parseBound(s0: String, isMin: Boolean): Double = {
-        val d = try outward(new java.math.BigDecimal(s0.trim), isMin)
-                catch { case _: NumberFormatException => s0.trim.toDouble }
-        if (d.isNaN) { if (isMin) Double.NegativeInfinity
-                       else Double.PositiveInfinity }
-        else d
+  /** One shard's zone map from its row of [[boundAggs]]. */
+  private[sources] def zoneOf(df: DataFrame, columns: Seq[String], path: String,
+      r: org.apache.spark.sql.Row): ShardZoneMap = {
+    val (strCols, numCols) = columns.partition(c =>
+      df.schema(c).dataType == org.apache.spark.sql.types.StringType)
+    def bound(name: String, isMin: Boolean): Option[Double] =
+      r.getAs[Any](name) match {
+        case null => None
+        // a NaN bound widens to the matching infinity: Spark orders
+        // NaN ABOVE every value, so max() of a NaN-bearing column is
+        // NaN and every strict zone compare against it (`hi > v`)
+        // would be false — pruning a shard whose non-NaN rows match
+        // (and whose NaN rows match every Gt/Ge under Spark's
+        // ordering). The all-NULL case keeps the EMPTY interval; NaN
+        // widens in the opposite, sound direction (r15 ADVICE).
+        case d: java.lang.Double =>
+          if (d.isNaN) Some(if (isMin) Double.NegativeInfinity
+                            else Double.PositiveInfinity)
+          else Some(d.doubleValue)
+        case f: java.lang.Float =>
+          if (f.isNaN) Some(if (isMin) Double.NegativeInfinity
+                            else Double.PositiveInfinity)
+          else Some(f.doubleValue)
+        case other => Some(exactBD(other).map(outward(_, isMin)).getOrElse(
+          sys.error(s"zone map: unencodable bound $other for $name")))
       }
-      Some(lines.drop(1).filter(_.nonEmpty).map { line =>
-        val parts = line.split('\t')
-        val (strKvs, numKvs) = parts.tail.partition(kv =>
-          kv.substring(kv.indexOf('=') + 1).startsWith("s64:"))
-        val ranges = numKvs.map { kv =>
-          val i = kv.indexOf('=')
-          val Array(lo, hi) = kv.substring(i + 1).split(',')
-          kv.substring(0, i) -> ((parseBound(lo, isMin = true),
-            parseBound(hi, isMin = false)))
-        }.toMap
-        val strRanges = strKvs.map { kv =>
-          val i = kv.indexOf('=')
-          // limit -1: an empty-string bound base64-encodes to "" and a
-          // default split would drop the trailing empty token
-          val Array(lo, hi) = kv.substring(i + 1 + "s64:".length).split(",", -1)
-          kv.substring(0, i) -> ((unb64(lo), unb64(hi)))
-        }.toMap
-        ShardZoneMap(new org.apache.hadoop.fs.Path(root, parts.head).toString,
-          ranges, strRanges)
-      })
-    } catch { case e: Exception =>
-      org.slf4j.LoggerFactory.getLogger(getClass)
-        .warn(s"ignoring unreadable zone-map sidecar under $dir: ${e.getMessage}")
-      None
-    }
-
-  // ---- sidecar lifecycle (r15, r14 verdict item 5) ----------------------
-
-  private val driftN = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Times a routed-leaf detector found a sidecar that DISAGREES with
-    * its directory's file set (leaf left unrouted — correct, but the
-    * table silently loses per-shard routing until a rebuild). */
-  def driftCount: Long = driftN.get
-
-  /** Record one sidecar-drift observation (called by the conf-route
-    * detector). Deliberately loud: drift is an operational condition an
-    * operator fixes with [[rebuildSidecar]], not a steady state. */
-  private[graft] def noteDrift(dir: String, relFiles: Set[String],
-      zoneNames: Set[String], kind: String = "zone-map",
-      repair: String = "ZoneMapPruner.rebuildSidecar",
-      consequence: String = "leaf left unrouted"): Unit = {
-    driftN.incrementAndGet()
-    val missing = (zoneNames -- relFiles).take(3)
-    val extra = (relFiles -- zoneNames).take(3)
-    org.slf4j.LoggerFactory.getLogger(getClass).warn(
-      s"$kind sidecar under $dir has DRIFTED from the directory " +
-      s"(sidecar-only: ${missing.mkString(",")}; dir-only: " +
-      s"${extra.mkString(",")}): $consequence — rebuild with " + repair)
-  }
-
-  /** Rebuild `dir`'s sidecar from the data files currently on disk —
-    * ONE distributed aggregation pass ([[build]]) published tmp+rename
-    * like [[writeSidecar]], then the writer-invalidation hooks (the
-    * same pair [[Sink.compact]] calls after its swap) so cached
-    * listings and Spark's own file-status/CacheManager state see the
-    * new shard set. `template`'s format/schema/options describe how to
-    * parse the shards; its paths are ignored — the DIRECTORY is listed
-    * fresh (underscore/dot names skipped), because a drifted sidecar is
-    * exactly the state where any cached path set is wrong. */
-  def rebuildSidecar(s: SparkSession, dir: String, template: TableSpec,
-      columns: Seq[String]): Seq[ShardZoneMap] = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(root).toSeq
-      .filter(st => st.isFile &&
-        !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .map(_.getPath.toString).sorted
-    require(files.nonEmpty, s"rebuildSidecar: no data files under $dir")
-    val zones = build(Catalog.read(s, template.copy(paths = files)), columns)
-    writeSidecar(s, dir, zones)
-    Tables.wrote(s, dir)
-    zones
+    ShardZoneMap(
+      path,
+      numCols.map { c =>
+        (bound(s"min_$c", isMin = true), bound(s"max_$c", isMin = false)) match {
+          case (Some(lo), Some(hi)) => c -> (lo, hi)
+          // an all-NULL shard: no row can satisfy ANY extracted range
+          // predicate (comparisons are null-rejecting; the residual
+          // keeps IS NULL semantics), so the EMPTY interval — which
+          // every mayMatch arm rejects — prunes it soundly
+          case _ => c -> (Double.PositiveInfinity, Double.NegativeInfinity)
+        }
+      }.toMap,
+      strCols.flatMap { c =>
+        (Option(r.getAs[String](s"min_$c")),
+         Option(r.getAs[String](s"max_$c"))) match {
+          case (Some(lo), Some(hi)) => Some(c -> (lo, hi))
+          case _ => None // all-NULL string shard: kept conservatively
+        }
+      }.toMap)
   }
 
   /** Read only the shards surviving pruning, then apply the full filter
@@ -454,97 +280,48 @@ object ZoneMapPruner {
 
   // ---- end-to-end demonstration entry ------------------------------------
 
-  /** Ingest-once cache: `orders` materialized as 8 range-sharded CSV files
-    * (the reference's `T.csv.0 … T.csv.N` sharded layout, `README.md:57-59`)
-    * with zone maps built at write time — the sidecar a 100 TB ingest job
-    * would persist next to the data. Range sharding by key gives each
-    * shard a tight (min,max), the date-partitioned-logs shape pruning
-    * exists for. */
-  // bounded per-(session, dir) cache of the parsed spec + sidecar; the
-  // FILES follow the Fixtures write-once discipline — the old
-  // mode("overwrite") into a dir-keyed /tmp path meant a SECOND session
-  // on the same dir deleted the first session's part-files out from
-  // under its cached TableSpec paths (server mode runs many sessions)
-  private val shardCache =
-    new graft.util.SessionCache[(TableSpec, Seq[ShardZoneMap])]()
-
-  private[graft] def shardedOrders(s: SparkSession, dir: String): (TableSpec, Seq[ShardZoneMap]) =
+  /** Ingest-once fixture: `orders` materialized as 8 range-sharded CSV
+    * files (the reference's `T.csv.0 … T.csv.N` sharded layout,
+    * `README.md:57-59`) with its [[ShardSummary]] persisted next to the
+    * data, as a 100 TB ingest job would. Range sharding by key gives
+    * each shard a tight (min,max), the date-partitioned-logs shape
+    * pruning exists for. */
+  private[graft] def shardedOrders(s: SparkSession, dir: String): (TableSpec, ShardSummary) =
     shardedOrdersN(s, dir, 8, "orders_zonemap_csv")
+
+  import org.apache.spark.sql.types.{DateType, DoubleType, LongType, StringType}
 
   /** [[shardedOrders]] at a caller-chosen shard count — the bench's
     * shard-router block uses 16 shards so zone pruning has a realistic
     * keep-ratio to demonstrate (2/16 ≈ the date-partitioned-logs
     * shape). Fixture name carries the count (write-once discipline). */
   private[graft] def shardedOrdersN(s: SparkSession, dir: String,
-      nShards: Int, fixtureName: String): (TableSpec, Seq[ShardZoneMap]) =
-    shardCache.getOrBuild(s, s"$dir#zonemap-$fixtureName") {
-      val out = Fixtures.ensure(s, Fixtures.path(dir, fixtureName)) {
-        Tables.orders(s, dir)
-          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("o_orderstatus"))
-          .repartitionByRange(nShards, col("o_orderkey"))
-          .write.mode("overwrite")
-          .option("delimiter", "|").option("header", "false")
-          .csv(Fixtures.path(dir, fixtureName))
-      }
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      val files = fs.globStatus(new org.apache.hadoop.fs.Path(out, "part-*"))
-        .map(_.getPath.toString).sorted.toSeq
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("o_orderkey", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("o_custkey", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("o_totalprice", org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("o_orderstatus", org.apache.spark.sql.types.StringType)))
-      val spec = TableSpec("orders_csv", "csv", files, Some(schema), "|")
-      val zones = build(Catalog.read(s, spec), Seq("o_orderkey"))
-      // publish the sidecar next to the data (write-once like the files
-      // themselves): the conf-mode rewriter detects it and routes the
-      // DIRECTORY per shard (r14) — the reference's zoneMap.json lives
-      // exactly there, referenced from the catalogue
-      val sidecar = new org.apache.hadoop.fs.Path(out, SidecarName)
-      if (!fs.exists(sidecar)) writeSidecar(s, out.toString, zones)
-      (spec, zones)
-    }
+      nShards: Int, fixtureName: String): (TableSpec, ShardSummary) =
+    Fixtures.sharded(s, dir, fixtureName, "csv", Seq("o_orderkey" -> LongType,
+      "o_custkey" -> LongType, "o_totalprice" -> DoubleType,
+      "o_orderstatus" -> StringType), Seq("o_orderkey"))(
+      _.repartitionByRange(nShards, col("o_orderkey")))
 
   /** DATE-sharded orders: 8 range shards by `o_orderdate` (cast to
-    * DATE) with the date-typed zone sidecar built at write — THE
-    * canonical log-pruning shape (the reference's TPC-H zone maps carry
-    * `o_orderdate` bounds in its Partition metadata,
+    * DATE) — THE canonical log-pruning shape (the reference's TPC-H zone
+    * maps carry `o_orderdate` bounds in its Partition metadata,
     * `fpdb-catalogue/include/fpdb/catalogue/Partition.h:23-41`). Bounds
-    * encode as epoch days ([[build]]); [[graft.plans.ModeExec
+    * encode as epoch days ([[boundAggs]]); [[graft.plans.ModeExec
     * .rangePreds]] encodes date literals the same way, so a plain
     * `WHERE o_orderdate >= DATE '…'` prunes shards through the conf
     * route. */
   private[graft] def dateShardedOrders(s: SparkSession, dir: String)
-      : (TableSpec, Seq[ShardZoneMap]) =
-    shardCache.getOrBuild(s, s"$dir#zonemap-orders-datezone") {
-      val name = "orders_datezone_csv"
-      val out = Fixtures.ensure(s, Fixtures.path(dir, name)) {
-        Tables.orders(s, dir)
-          .select(col("o_orderdate").cast("date").as("o_orderdate"),
-            col("o_orderstatus"), col("o_totalprice"))
-          .repartitionByRange(8, col("o_orderdate"))
-          .write.mode("overwrite")
-          .option("delimiter", "|").option("header", "false")
-          .csv(Fixtures.path(dir, name))
-      }
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      val files = fs.globStatus(new org.apache.hadoop.fs.Path(out, "part-*"))
-        .map(_.getPath.toString).sorted.toSeq
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("o_orderdate", org.apache.spark.sql.types.DateType),
-        org.apache.spark.sql.types.StructField("o_orderstatus", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("o_totalprice", org.apache.spark.sql.types.DoubleType)))
-      val spec = TableSpec("orders_datezone", "csv", files, Some(schema), "|")
-      val zones = build(Catalog.read(s, spec), Seq("o_orderdate"))
-      val sidecar = new org.apache.hadoop.fs.Path(out, SidecarName)
-      if (!fs.exists(sidecar)) writeSidecar(s, out, zones)
-      (spec, zones)
-    }
+      : (TableSpec, ShardSummary) =
+    Fixtures.sharded(s, dir, "orders_datezone_csv", "csv",
+      Seq("o_orderdate" -> DateType, "o_orderstatus" -> StringType,
+        "o_totalprice" -> DoubleType), Seq("o_orderdate"))(
+      _.withColumn("o_orderdate", col("o_orderdate").cast("date"))
+        .repartitionByRange(8, col("o_orderdate")))
 
   /** Run `body` with `spark.graft.scanMode` set (restored after) — the
-    * conf-route bracket every z-entry repeats (r16 review: 5 hand-rolled
-    * copies in this file drifted one fix away from divergence). */
-  private def withScanMode[A](s: SparkSession, mode: String)(body: => A): A = {
+    * one conf-route bracket of the z-, bloom and dm entries (r16 review:
+    * hand-rolled copies drifted one fix away from divergence). */
+  private[graft] def withScanMode[A](s: SparkSession, mode: String)(body: => A): A = {
     val prev = s.conf.getOption("spark.graft.scanMode")
     s.conf.set("spark.graft.scanMode", mode)
     try body
@@ -555,37 +332,16 @@ object ZoneMapPruner {
   }
 
   /** Shared builder for STRING-keyed range-sharded orders fixtures: 6
-    * CSV shards on (keyCol, o_orderkey), zone sidecar carrying BOTH
-    * bound kinds (string bounds for the shard key, numeric for the
-    * tiebreaker - one v=2 sidecar). */
+    * CSV shards on (keyCol, o_orderkey), the summary carrying BOTH bound
+    * kinds (string bounds for the shard key, numeric for the
+    * tiebreaker). */
   private def stringShardedOrders(s: SparkSession, dir: String,
       fixtureName: String, keyCol: String, otherStr: String)
-      : (TableSpec, Seq[ShardZoneMap]) =
-    shardCache.getOrBuild(s, s"$dir#zonemap-$fixtureName") {
-      val out = Fixtures.ensure(s, Fixtures.path(dir, fixtureName)) {
-        Tables.orders(s, dir)
-          .select(col(keyCol), col(otherStr),
-            col("o_orderkey"), col("o_totalprice"))
-          .repartitionByRange(6, col(keyCol), col("o_orderkey"))
-          .write.mode("overwrite")
-          .option("delimiter", "|").option("header", "false")
-          .csv(Fixtures.path(dir, fixtureName))
-      }
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      val files = fs.globStatus(new org.apache.hadoop.fs.Path(out, "part-*"))
-        .map(_.getPath.toString).sorted.toSeq
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(keyCol, org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField(otherStr, org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("o_orderkey", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("o_totalprice", org.apache.spark.sql.types.DoubleType)))
-      val spec = TableSpec(fixtureName.stripSuffix("_csv"), "csv", files,
-        Some(schema), "|")
-      val zones = build(Catalog.read(s, spec), Seq(keyCol, "o_orderkey"))
-      val sidecar = new org.apache.hadoop.fs.Path(out, SidecarName)
-      if (!fs.exists(sidecar)) writeSidecar(s, out, zones)
-      (spec, zones)
-    }
+      : (TableSpec, ShardSummary) =
+    Fixtures.sharded(s, dir, fixtureName, "csv", Seq(keyCol -> StringType,
+      otherStr -> StringType, "o_orderkey" -> LongType,
+      "o_totalprice" -> DoubleType), Seq(keyCol, "o_orderkey"))(
+      _.repartitionByRange(6, col(keyCol), col("o_orderkey")))
 
   /** STATUS-sharded orders (r16): range shards by the STRING key
     * (o_orderstatus, tie-broken by o_orderkey) with string-typed zone
@@ -595,7 +351,7 @@ object ZoneMapPruner {
     * status/category/country columns are the common string shard keys
     * this shape stands in for. */
   private[graft] def statusShardedOrders(s: SparkSession, dir: String)
-      : (TableSpec, Seq[ShardZoneMap]) =
+      : (TableSpec, ShardSummary) =
     stringShardedOrders(s, dir, "orders_statuszone_csv",
       keyCol = "o_orderstatus", otherStr = "o_orderpriority")
 
@@ -603,38 +359,18 @@ object ZoneMapPruner {
     * keyed by the MULTI-character string column, for prefix-predicate
     * pruning (`LIKE '1-%'` — the category-prefix scan shape). */
   private[graft] def priorityShardedOrders(s: SparkSession, dir: String)
-      : (TableSpec, Seq[ShardZoneMap]) =
+      : (TableSpec, ShardSummary) =
     stringShardedOrders(s, dir, "orders_priorityzone_csv",
       keyCol = "o_orderpriority", otherStr = "o_orderstatus")
 
   /** JSONL-sharded orders (r15): same shape as [[shardedOrders]] in the
     * line-JSON format, for the widened sharded-leaf conf route. */
   private[graft] def shardedOrdersJsonl(s: SparkSession, dir: String)
-      : (TableSpec, Seq[ShardZoneMap]) =
-    shardCache.getOrBuild(s, s"$dir#zonemap-orders-jsonl") {
-      val name = "orders_zonemap_jsonl"
-      val out = Fixtures.ensure(s, Fixtures.path(dir, name)) {
-        Tables.orders(s, dir)
-          .select(col("o_orderkey"), col("o_custkey"),
-            col("o_totalprice"), col("o_orderstatus"))
-          .repartitionByRange(8, col("o_orderkey"))
-          .write.mode("overwrite")
-          .json(Fixtures.path(dir, name))
-      }
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      val files = fs.globStatus(new org.apache.hadoop.fs.Path(out, "part-*"))
-        .map(_.getPath.toString).sorted.toSeq
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("o_orderkey", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("o_custkey", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("o_totalprice", org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("o_orderstatus", org.apache.spark.sql.types.StringType)))
-      val spec = TableSpec("orders_jsonl", "json", files, Some(schema))
-      val zones = build(Catalog.read(s, spec), Seq("o_orderkey"))
-      val sidecar = new org.apache.hadoop.fs.Path(out, SidecarName)
-      if (!fs.exists(sidecar)) writeSidecar(s, out, zones)
-      (spec, zones)
-    }
+      : (TableSpec, ShardSummary) =
+    Fixtures.sharded(s, dir, "orders_zonemap_jsonl", "json", Seq(
+      "o_orderkey" -> LongType, "o_custkey" -> LongType,
+      "o_totalprice" -> DoubleType, "o_orderstatus" -> StringType),
+      Seq("o_orderkey"))(_.repartitionByRange(8, col("o_orderkey")))
 
   /** z01 — the reference's CSV partition-pruning story end-to-end
     * (`fpdb-executor/src/physical/prune/PartitionPruner.cpp:23-51`): a
@@ -644,8 +380,8 @@ object ZoneMapPruner {
     * overapproximation, and the result must equal DuckDB running the same
     * predicate over the parquet original. */
   private def z01ZoneMapPrune(s: SparkSession, dir: String): DataFrame = {
-    val (spec, zones) = shardedOrders(s, dir)
-    readPruned(s, spec, zones,
+    val (spec, summary) = shardedOrders(s, dir)
+    readPruned(s, spec, summary.zones,
       Seq(Le("o_orderkey", 1000.0)),
       residual = Some(col("o_orderkey") <= 1000L))
       .groupBy(col("o_orderstatus"))
@@ -672,11 +408,11 @@ object ZoneMapPruner {
     * predicate over the parquet original. */
   private def z06ShardedRoute(s: SparkSession, dir: String): DataFrame = {
     import graft.cache.HybridScan
-    val (spec, zones) = shardedOrders(s, dir)
+    val (spec, summary) = shardedOrders(s, dir)
     val r = new HybridScan.AdaptiveScanRouter(
       HybridScan.segmentCache(s, dir), pushdownSlots = 8)
     val cols = Seq("o_orderstatus", "o_totalprice")
-    def lease(hi: Long) = r.scanShardedMode(s, spec, "orders_sharded", zones,
+    def lease(hi: Long) = r.scanShardedMode(s, spec, "orders_sharded", summary.zones,
       Seq(Le("o_orderkey", hi.toDouble)), cols,
       col("o_orderkey") <= hi, HybridScan.ModeHybrid,
       leaseSpansExecution = false)
@@ -704,10 +440,7 @@ object ZoneMapPruner {
     * 00:00:00`, so format, layout, and routing change bytes, never
     * rows. */
   private def z07DateZonePrune(s: SparkSession, dir: String): DataFrame = {
-    val (spec, _) = dateShardedOrders(s, dir)
-    val root = new org.apache.hadoop.fs.Path(spec.paths.head).getParent.toString
-    s.read.schema(spec.schema.get).option("delimiter", "|").csv(root)
-      .createOrReplaceTempView("orders_datezone_csv")
+    Fixtures.viewOver(s, dateShardedOrders(s, dir)._1, "orders_datezone_csv")
     val sql =
       """SELECT o_orderstatus, count(*) AS n_orders,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(25,6))) AS DOUBLE) AS total_price
@@ -734,10 +467,7 @@ object ZoneMapPruner {
     * overapproximates). Oracle = the same IN over the parquet
     * original. */
   private def z08InZonemap(s: SparkSession, dir: String): DataFrame = {
-    val (spec, _) = shardedOrders(s, dir)
-    val root = new org.apache.hadoop.fs.Path(spec.paths.head).getParent.toString
-    s.read.schema(spec.schema.get).option("delimiter", "|").csv(root)
-      .createOrReplaceTempView("orders_sharded_csv_in")
+    Fixtures.viewOver(s, shardedOrders(s, dir)._1, "orders_sharded_csv_in")
     val sql =
       """SELECT o_orderstatus, count(*) AS n_orders,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(25,6))) AS DOUBLE) AS total_price
@@ -760,10 +490,7 @@ object ZoneMapPruner {
     * contains 'F' are read (shard count spec-pinned in ShardRouterSpec).
     * Oracle = the same predicate over the parquet ORIGINAL. */
   private def z09StringZonemap(s: SparkSession, dir: String): DataFrame = {
-    val (spec, _) = statusShardedOrders(s, dir)
-    val root = new org.apache.hadoop.fs.Path(spec.paths.head).getParent.toString
-    s.read.schema(spec.schema.get).option("delimiter", "|").csv(root)
-      .createOrReplaceTempView("orders_statuszone_csv")
+    Fixtures.viewOver(s, statusShardedOrders(s, dir)._1, "orders_statuszone_csv")
     val sql =
       """SELECT o_orderpriority, count(*) AS n_orders,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(25,6))) AS DOUBLE) AS total_price
@@ -787,10 +514,7 @@ object ZoneMapPruner {
     * (`fpdb-executor/src/physical/prune/PartitionPruner.cpp:70-88`).
     * Oracle = the same disjunction over the parquet ORIGINAL. */
   private def z10OrZonemap(s: SparkSession, dir: String): DataFrame = {
-    val (spec, _) = shardedOrders(s, dir)
-    val root = new org.apache.hadoop.fs.Path(spec.paths.head).getParent.toString
-    s.read.schema(spec.schema.get).option("delimiter", "|").csv(root)
-      .createOrReplaceTempView("orders_sharded_csv_or")
+    Fixtures.viewOver(s, shardedOrders(s, dir)._1, "orders_sharded_csv_or")
     val sql =
       """SELECT o_orderstatus, count(*) AS n_orders,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(25,6))) AS DOUBLE) AS total_price
@@ -812,10 +536,7 @@ object ZoneMapPruner {
     * arm). The category-prefix scan shape over a string shard key.
     * Oracle = the same LIKE over the parquet original. */
   private def z11PrefixZonemap(s: SparkSession, dir: String): DataFrame = {
-    val (spec, _) = priorityShardedOrders(s, dir)
-    val root = new org.apache.hadoop.fs.Path(spec.paths.head).getParent.toString
-    s.read.schema(spec.schema.get).option("delimiter", "|").csv(root)
-      .createOrReplaceTempView("orders_priorityzone_csv")
+    Fixtures.viewOver(s, priorityShardedOrders(s, dir)._1, "orders_priorityzone_csv")
     val sql =
       """SELECT o_orderstatus, count(*) AS n_orders,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(25,6))) AS DOUBLE) AS total_price
@@ -837,10 +558,7 @@ object ZoneMapPruner {
     * contain no matching row). Oracle = the same predicate over the
     * parquet original. */
   private def z12NeqZonemap(s: SparkSession, dir: String): DataFrame = {
-    val (spec, _) = statusShardedOrders(s, dir)
-    val root = new org.apache.hadoop.fs.Path(spec.paths.head).getParent.toString
-    s.read.schema(spec.schema.get).option("delimiter", "|").csv(root)
-      .createOrReplaceTempView("orders_statuszone_csv_neq")
+    Fixtures.viewOver(s, statusShardedOrders(s, dir)._1, "orders_statuszone_csv_neq")
     val sql =
       """SELECT o_orderstatus, count(*) AS n_orders,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(25,6))) AS DOUBLE) AS total_price

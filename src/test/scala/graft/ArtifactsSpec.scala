@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.GraftCoreBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.sources.Tables
 
@@ -22,22 +19,6 @@ class ArtifactsSpec extends SparkSpec {
       if (Files.isDirectory(f)) Files.createDirectories(t) else Files.copy(f, t)
     }
     to.toString
-  }
-
-  /** `f`'s value and the Spark jobs started while it ran. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    GraftCoreBridge.flushListenerBus(sc)
-    sc.addSparkListener(l)
-    try {
-      val v = f
-      GraftCoreBridge.flushListenerBus(sc)
-      (v, n.get)
-    } finally sc.removeSparkListener(l)
   }
 
   private val q11 = operators.TpchCorpus.sql(11)

@@ -228,22 +228,6 @@ class AutoSemiReductionSpec extends SparkSpec {
       s"broadcastable dims must not be semi-reduced:\n${joined.queryExecution.optimizedPlan}")
   }
 
-  /** Spark jobs started while `f` runs (listener bus flushed on both
-    * sides, so jobs of earlier work are not counted). */
-  private def jobsDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    org.apache.spark.GraftCoreBridge.flushListenerBus(sc)
-    sc.addSparkListener(l)
-    try { f; org.apache.spark.GraftCoreBridge.flushListenerBus(sc) }
-    finally sc.removeSparkListener(l)
-    n.get()
-  }
-
   test("backward leg: a broadcastable copied fact is left alone, with no plan-time probe") {
     import spark.implicits._
     // the q10 shape: a filtered lineitem against a customer ⋈ orders
@@ -259,7 +243,7 @@ class AutoSemiReductionSpec extends SparkSpec {
       .filter($"l_returnflag" === "R" && $"l_discount" < 0.03)
     val df = co.join(li, $"o_orderkey" === $"l_orderkey")
       .groupBy($"c_custkey").agg(sum($"l_extendedprice").as("revenue"))
-    val jobs = jobsDuring(df.queryExecution.optimizedPlan)
+    val jobs = jobsDuring(df.queryExecution.optimizedPlan)._2
     assert(jobs == 0, s"optimizing ran $jobs Spark job(s): a selectivity probe for a " +
       s"join the planner broadcasts:\n${df.queryExecution.optimizedPlan}")
     assert(semiJoins(df) == 0,
@@ -280,11 +264,11 @@ class AutoSemiReductionSpec extends SparkSpec {
     }
     withShuffledDim(() => build(guarded = false)) {
       val plain = build(guarded = false)
-      assert(jobsDuring(plain.queryExecution.optimizedPlan) > 0,
+      assert(jobsDuring(plain.queryExecution.optimizedPlan)._2 > 0,
         "the first optimization must probe the dim's selectivity")
       assert(semiJoins(plain) == 1, plain.queryExecution.optimizedPlan.toString)
       val guarded = build(guarded = true)
-      val jobs = jobsDuring(guarded.queryExecution.optimizedPlan)
+      val jobs = jobsDuring(guarded.queryExecution.optimizedPlan)._2
       assert(jobs == 0, s"an IsNotNull guard re-probed the same sample ($jobs jobs)")
       assert(semiJoins(guarded) == 1, guarded.queryExecution.optimizedPlan.toString)
     }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.cache.{HybridScan, LRU, SegmentCache, SegmentKey}
 import graft.cache.HybridScan.{AdaptiveScanRouter, Pullup, Pushdown}
 import graft.sources.Tables
+import graft.TempDirs.rm
 
 /** Hybrid cache/storage execution: the MergeKernel ordinal zip and the
   * AdaptPushdownManager admission contract (reference
@@ -148,9 +149,6 @@ class HybridScanSpec extends SparkSpec {
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete()
-      }
       rm(Paths.get(dir).toFile)
     }
   }
@@ -184,9 +182,6 @@ class HybridScanSpec extends SparkSpec {
         s"same-name content change must miss the (path,len,mtime) fingerprint, misses=${cache.misses}")
       cache.invalidateAll()
     } finally {
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete()
-      }
       rm(root.toFile)
     }
   }
@@ -282,9 +277,6 @@ class HybridScanSpec extends SparkSpec {
         "compact must invalidate: next touch re-lists")
       assert(fp2 != fp1, "the re-listed fingerprint must see the compacted layout")
     } finally {
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete()
-      }
       rm(root.toFile)
     }
   }
@@ -305,9 +297,6 @@ class HybridScanSpec extends SparkSpec {
       assert(HybridScan.listingCalls.get() == before + 1,
         "a file:-scheme invalidation must drop the bare-path cache entry")
     } finally {
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete()
-      }
       rm(root.toFile)
     }
   }
@@ -329,9 +318,6 @@ class HybridScanSpec extends SparkSpec {
       assert(HybridScan.listPathSession(spark, table).fingerprint != fp1,
         "refreshListings must force a fresh listing")
     } finally {
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete()
-      }
       rm(root.toFile)
     }
   }
@@ -603,9 +589,6 @@ class HybridScanSpec extends SparkSpec {
         s"compaction changed the zip result: $sumA vs $sumB")
       cache.invalidateAll()
     } finally {
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete()
-      }
       rm(Paths.get(dir).toFile)
     }
   }

@@ -8,6 +8,7 @@ import graft.cache.HybridScan.{AdaptiveScanRouter, ModeCachingOnly, ModeHybrid,
   ModePullup, ModePushdownOnly, ScanMode}
 import graft.operators.SsbCorpus
 import graft.plans.ModeExec
+import graft.TempDirs.rm
 
 /** Whole-suite mode comparison — the reference's `HybridTest.cpp` /
   * `exec.conf` Mode discipline run over graft's SSB corpus: every query
@@ -417,9 +418,6 @@ class ModeExecSpec extends SparkSpec {
         }
       }
     } finally {
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete(): Unit
-      }
       rm(root.toFile)
     }
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.cache.{HybridScan, LRU, MeasuredWLFU, SegmentCache, SegmentKey}
 import graft.cache.HybridScan.{AdaptiveScanRouter, CacheOnly, Hybrid,
   ModeCachingOnly, ModeHybrid, ModePullup, ModePushdownOnly, Pushdown}
+import graft.TempDirs.rm
 
 /** Per-PARTITION segment granularity (r12) — the reference's actual
   * cacheable unit: `SegmentKey` = (partition, column, range)
@@ -247,9 +248,6 @@ class PartitionRouterSpec extends SparkSpec {
         s"the heat cap must QUARTER-evict (not clear, not grow): $heatAfter")
     } finally {
       cache.invalidateAll()
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles).foreach(_.foreach(rm)); p.delete(): Unit
-      }
       rm(root.toFile)
     }
   }
@@ -341,9 +339,6 @@ class PartitionRouterSpec extends SparkSpec {
       finally lease.close()
       cache.invalidateAll()
     } finally {
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete()
-      }
       rm(root.toFile)
     }
   }
@@ -412,9 +407,6 @@ class PartitionRouterSpec extends SparkSpec {
         s"the known days must still serve cache-side: ${d._4}")
       cache.invalidateAll()
     } finally {
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete()
-      }
       rm(root.toFile)
     }
   }
@@ -490,9 +482,6 @@ class PartitionRouterSpec extends SparkSpec {
         }
       cache.invalidateAll()
     } finally {
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete()
-      }
       rm(root.toFile)
     }
   }
@@ -547,9 +536,6 @@ class PartitionRouterSpec extends SparkSpec {
       assert(d02.exists(k => !oldTables.contains(k.table)),
         s"the rewritten partition must re-key under a fresh fingerprint: $d02")
     } finally {
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete()
-      }
       rm(root.toFile)
     }
   }

@@ -68,8 +68,8 @@ class RouteLatticeSpec extends SparkSpec {
   }
 
   private lazy val sharded: Layout = new Layout {
-    private val (spec, zones0) = ZoneMapPruner.shardedOrders(spark, sfDir)
-    private val zones = zones0.sortBy(_.path)
+    private val (spec, summary) = ZoneMapPruner.shardedOrders(spark, sfDir)
+    private val zones = summary.zones.sortBy(_.path)
     private val cols = Seq("o_orderstatus", "o_totalprice")
     private def bounds(lo: Int, hi: Int) =
       (zones(lo).ranges("o_orderkey")._1, zones(hi).ranges("o_orderkey")._2)

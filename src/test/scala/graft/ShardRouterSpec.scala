@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.cache.{HybridScan, LRU, SegmentCache}
 import graft.cache.HybridScan.{AdaptiveScanRouter, CacheOnly, Hybrid,
   ModeCachingOnly, ModeHybrid, ModePullup, ModePushdownOnly, Pushdown}
-import graft.sources.ZoneMapPruner
+import graft.sources.{BloomPruner, ShardSummary, TableSpec, ZoneMapPruner}
 import graft.sources.ZoneMapPruner.Le
+import graft.TempDirs.rm
 
 /** Per-SHARD routing over a zone-mapped sharded flat table (r14) — the
   * reference's `SegmentKey` RANGE component
@@ -16,7 +17,10 @@ import graft.sources.ZoneMapPruner.Le
   * the cache tier sees them (`PartitionPruner.cpp:23-51`). */
 class ShardRouterSpec extends SparkSpec {
 
-  private lazy val fixture = ZoneMapPruner.shardedOrders(spark, sfDir)
+  private lazy val fixture = {
+    val (spec, summary) = ZoneMapPruner.shardedOrders(spark, sfDir)
+    (spec, summary.zones)
+  }
   private val cols = Seq("o_orderstatus", "o_totalprice")
 
   private def via(router: AdaptiveScanRouter, hi: Long,
@@ -30,6 +34,10 @@ class ShardRouterSpec extends SparkSpec {
       .orderBy("o_orderstatus").collect().map(_.toSeq).toSeq)
     finally lease.close()
   }
+
+  /** The rebuild template of a flat parquet directory. */
+  private def parquetAt(dir: String) =
+    TableSpec(new org.apache.hadoop.fs.Path(dir).getName, "parquet", Nil, None)
 
   private def oracle(hi: Long) =
     graft.sources.Tables.orders(spark, sfDir)
@@ -105,12 +113,13 @@ class ShardRouterSpec extends SparkSpec {
 
   test("conf-mode routes a zone-mapped sharded CSV directory per shard") {
     // r14: scanShardedMode is DEPLOYMENT-reachable — a plain view over
-    // the sharded directory (the persisted _graft_zonemap sidecar is
+    // the sharded directory (the persisted shard summary is
     // the detector's authority, like the reference's zoneMap.json in
     // its catalogue) + SET spark.graft.scanMode=hybrid routes per
     // shard with zone pruning composed in, no library call anywhere.
     val s = spark.newSession()
-    val (spec, zones) = ZoneMapPruner.shardedOrders(s, sfDir)
+    val (spec, summary) = ZoneMapPruner.shardedOrders(s, sfDir)
+    val zones = summary.zones
     val root = new org.apache.hadoop.fs.Path(spec.paths.head).getParent.toString
     s.read.schema(spec.schema.get).option("delimiter", "|").csv(root)
       .createOrReplaceTempView("orders_sharded_csv")
@@ -166,8 +175,8 @@ class ShardRouterSpec extends SparkSpec {
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .repartitionByRange(4, c("o_orderkey"))
         .write.parquet(table)
-      val zones = ZoneMapPruner.build(s.read.parquet(table), Seq("o_orderkey"))
-      ZoneMapPruner.writeSidecar(s, table, zones)
+      val zones = ShardSummary.rebuild(s, table, parquetAt(table),
+        Seq("o_orderkey")).zones
       s.read.parquet(table).createOrReplaceTempView("orders_pq_sharded")
       val sql =
         """SELECT count(*) AS n,
@@ -198,9 +207,6 @@ class ShardRouterSpec extends SparkSpec {
         cache.invalidateAll()
       }
     } finally {
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete(): Unit
-      }
       rm(root.toFile)
     }
   }
@@ -209,28 +215,14 @@ class ShardRouterSpec extends SparkSpec {
     // row-safety guard: a new shard landing without a sidecar rebuild
     // must not lose rows to sidecar-enumerated routing — the detector
     // requires name-set equality and falls back to the plain plan.
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     val s = spark.newSession()
-    val (spec, zones) = ZoneMapPruner.shardedOrders(s, sfDir)
-    val srcRoot = new org.apache.hadoop.fs.Path(spec.paths.head).getParent
+    val (spec, _) = ZoneMapPruner.shardedOrders(s, sfDir)
     val root = Files.createTempDirectory("graft-shard-drift")
     try {
-      // copy the fixture dir (files + sidecar), then add one shard the
-      // sidecar does not know
-      val fs = srcRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.listStatus(srcRoot).foreach { st =>
-        if (st.isFile) {
-          val in = fs.open(st.getPath)
-          val bytes = try {
-            val buf = new java.io.ByteArrayOutputStream()
-            val chunk = new Array[Byte](8192)
-            var n = in.read(chunk)
-            while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-            buf.toByteArray
-          } finally in.close()
-          Files.write(root.resolve(st.getPath.getName), bytes)
-        }
-      }
+      // copy the fixture dir (files + summary), then add one shard the
+      // summary does not know
+      TempDirs.copyFiles(new org.apache.hadoop.fs.Path(spec.paths.head).getParent.toString, root)
       // the drifting shard: one extra row with a huge key
       Files.write(root.resolve("part-extra.csv"),
         "999999|1|123.45|X\n".getBytes("UTF-8"))
@@ -255,9 +247,6 @@ class ShardRouterSpec extends SparkSpec {
         cache.invalidateAll()
       }
     } finally {
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete(): Unit
-      }
       rm(root.toFile)
     }
   }
@@ -363,7 +352,8 @@ class ShardRouterSpec extends SparkSpec {
       s"date→days / timestamp→micros extraction: $preds")
     // the fixture's epoch-day zone bounds prune the 1998 window
     val s = spark.newSession()
-    val (spec, zones) = ZoneMapPruner.dateShardedOrders(s, sfDir)
+    val (spec, summary) = ZoneMapPruner.dateShardedOrders(s, sfDir)
+    val zones = summary.zones
     val lo = java.time.LocalDate.of(1998, 1, 1).toEpochDay.toDouble
     val hi = java.time.LocalDate.of(1999, 1, 1).toEpochDay.toDouble
     val kept = ZoneMapPruner.prune(zones,
@@ -415,9 +405,8 @@ class ShardRouterSpec extends SparkSpec {
     val s = spark.newSession()
     val cache = HybridScan.segmentCache(s, sfDir)
     def pinRoutes(view: String, df: org.apache.spark.sql.DataFrame,
-        dir: String, keyCol: String): Unit = {
-      val zones = ZoneMapPruner.build(df, Seq(keyCol))
-      ZoneMapPruner.writeSidecar(s, dir, zones)
+        dir: String, keyCol: String, template: TableSpec): Unit = {
+      ShardSummary.write(s, dir, ShardSummary.build(s, dir, template, Seq(keyCol)))
       df.createOrReplaceTempView(view)
       val sql = s"SELECT count(*) AS n, sum($keyCol) AS sk FROM $view " +
         s"WHERE $keyCol <= 600"
@@ -444,30 +433,30 @@ class ShardRouterSpec extends SparkSpec {
       val jsonDir = root.resolve("j").toString
       base.write.json(jsonDir)
       pinRoutes("fmt_jsonl", s.read
-        .schema(base.schema).json(jsonDir), jsonDir, "o_orderkey")
+        .schema(base.schema).json(jsonDir), jsonDir, "o_orderkey",
+        TableSpec("j", "json", Nil, Some(base.schema)))
       val orcDir = root.resolve("o").toString
       base.write.orc(orcDir)
-      pinRoutes("fmt_orc", s.read.orc(orcDir), orcDir, "o_orderkey")
+      pinRoutes("fmt_orc", s.read.orc(orcDir), orcDir, "o_orderkey",
+        TableSpec("o", "orc", Nil, None))
       val csvDir = root.resolve("c").toString
       base.write.option("header", "true").option("delimiter", "|").csv(csvDir)
       pinRoutes("fmt_csv_hdr", s.read.schema(base.schema)
         .option("header", "true").option("delimiter", "|").csv(csvDir),
-        csvDir, "o_orderkey")
+        csvDir, "o_orderkey", TableSpec("c", "csv", Nil, Some(base.schema),
+          relationOptions = Some(Map("header" -> "true", "delimiter" -> "|"))))
     } finally {
       cache.invalidateAll()
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete(): Unit
-      }
       rm(root.toFile)
     }
   }
 
   test("Sink.compact regenerates the zone sidecar its swap destroys") {
-    // compact/mergeInto swap the WHOLE directory: the sidecar moves out
-    // with the old dir and is deleted with the .bak snapshot — without
-    // the rezone hook a zone-mapped table silently stops routing per
+    // compact/mergeInto swap the WHOLE directory: the shard summary moves
+    // out with the old dir and is deleted with the .bak snapshot —
+    // without the rebuild a zone-mapped table silently stops routing per
     // shard after every maintenance op (nothing even counts as drift,
-    // the sidecar is simply gone).
+    // the summary is simply gone).
     import java.nio.file.Files
     val s = spark.newSession()
     val root = Files.createTempDirectory("graft-compact-zone")
@@ -478,8 +467,7 @@ class ShardRouterSpec extends SparkSpec {
         .select(col("o_orderkey"), col("o_totalprice"))
         .repartitionByRange(4, col("o_orderkey"))
         .write.parquet(table)
-      val zones = ZoneMapPruner.build(s.read.parquet(table), Seq("o_orderkey"))
-      ZoneMapPruner.writeSidecar(s, table, zones)
+      ShardSummary.rebuild(s, table, parquetAt(table), Seq("o_orderkey"))
       def view(): Unit = s.read.parquet(table)
         .createOrReplaceTempView("orders_compact_zone")
       view()
@@ -498,9 +486,9 @@ class ShardRouterSpec extends SparkSpec {
         cache.invalidateAll()
         val (nBefore, nAfter) = graft.sources.Sink.compact(s, table)
         assert(nBefore == 4 && nAfter >= 1, s"compact: $nBefore -> $nAfter")
-        // the sidecar must exist again and NAME the new file set
-        val rezoned = ZoneMapPruner.readSidecar(s, table)
-        assert(rezoned.isDefined, "compact must regenerate the sidecar")
+        // the summary must exist again and NAME the new file set
+        val rezoned = ShardSummary.read(s, table).map(_.zones)
+        assert(rezoned.isDefined, "compact must regenerate the summary")
         val fs = org.apache.hadoop.fs.FileSystem.get(
           s.sparkContext.hadoopConfiguration)
         val nowFiles = fs.globStatus(
@@ -522,16 +510,13 @@ class ShardRouterSpec extends SparkSpec {
       }
     } finally {
       cache.invalidateAll()
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete(): Unit
-      }
       rm(root.toFile)
     }
   }
 
   test("drift is counted and rebuildSidecar restores per-shard routing") {
     // r14 verdict item 5: drift silently unrouted. Now it logs + counts,
-    // and the rebuild helper (one distributed pass, tmp+rename, writer
+    // and ShardSummary.rebuild (one distributed pass, tmp+rename, writer
     // invalidation hooks) brings the leaf back.
     import java.nio.file.Files
     val s = spark.newSession()
@@ -549,7 +534,7 @@ class ShardRouterSpec extends SparkSpec {
         Some(schema), "|")
       def readDir = s.read.schema(schema).option("delimiter", "|")
         .csv(root.toString)
-      ZoneMapPruner.rebuildSidecar(s, root.toString, template, Seq("k"))
+      ShardSummary.rebuild(s, root.toString, template, Seq("k"))
       // a new shard lands without a rebuild: drift counted, unrouted
       Files.write(root.resolve("part-2.csv"), "9|90\n".getBytes("UTF-8"))
       HybridScan.invalidateListings(root.toString)
@@ -558,21 +543,21 @@ class ShardRouterSpec extends SparkSpec {
       val sql = "SELECT count(*) AS n, sum(v) AS sv FROM t_rebuild WHERE k <= 100"
       val expect = Engine.plan(s, sfDir, sql).collect().map(_.toSeq).toSeq
       assert(expect == Seq(Seq(5L, 230L)), s"fixture: $expect")
-      val drift0 = ZoneMapPruner.driftCount
+      val drift0 = ShardSummary.driftCount
       try {
         s.conf.set("spark.graft.scanMode", "hybrid")
         assert(Engine.executeQuery(s, sfDir, sql).collect()
           .map(_.toSeq).toSeq == expect,
           "a drifted leaf must stay row-identical (unrouted)")
-        assert(ZoneMapPruner.driftCount == drift0 + 1,
+        assert(ShardSummary.driftCount == drift0 + 1,
           "drift must be observable, and counted EXACTLY once per query " +
           "per drifted leaf (r15 ADVICE: the Filter arm re-classified an " +
-          s"unroutable leaf, inflating driftCount 2x): ${ZoneMapPruner.driftCount - drift0}")
+          s"unroutable leaf, inflating driftCount 2x): ${ShardSummary.driftCount - drift0}")
         assert(!cache.keys.exists(_.region.startsWith("shard=")),
           s"drifted leaf must be unrouted: ${cache.keys}")
         // rebuild: one pass over the CURRENT directory → routed again
-        val zones = ZoneMapPruner.rebuildSidecar(s, root.toString,
-          template, Seq("k"))
+        val zones = ShardSummary.rebuild(s, root.toString,
+          template, Seq("k")).zones
         assert(zones.size == 3, s"rebuild must cover all shards: $zones")
         (1 to 3).foreach { _ =>
           assert(Engine.executeQuery(s, sfDir, sql).collect()
@@ -585,9 +570,6 @@ class ShardRouterSpec extends SparkSpec {
       }
     } finally {
       cache.invalidateAll()
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete(): Unit
-      }
       rm(root.toFile)
     }
   }
@@ -719,9 +701,6 @@ class ShardRouterSpec extends SparkSpec {
         s"the heat cap must QUARTER-evict (not clear, not grow): $heatAfter")
     } finally {
       cache.invalidateAll()
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles).foreach(_.foreach(rm)); p.delete(): Unit
-      }
       rm(root.toFile)
     }
   }
@@ -785,7 +764,8 @@ class ShardRouterSpec extends SparkSpec {
         s"id < 2^53+4 must keep the shard holding 2^53+3: $ltKept")
       // end-to-end through the conf route (persisted sidecar + SET
       // scanMode): strict-compare SQL loses no rows vs the pristine plan
-      ZoneMapPruner.writeSidecar(s, root.toString, zones)
+      ShardSummary.write(s, root.toString, ShardSummary.build(s, root.toString,
+        TableSpec("ids", "csv", Nil, Some(schema)), Seq("id")))
       readDir.createOrReplaceTempView("ids_2p53")
       def sumOf(sql: String): Seq[Seq[Any]] =
         Engine.executeQuery(s, sfDir, sql).collect().map(_.toSeq).toSeq
@@ -805,19 +785,17 @@ class ShardRouterSpec extends SparkSpec {
         try s.conf.unset("spark.graft.scanMode") catch { case _: Throwable => () }
         cache.invalidateAll()
       }
-      // parse-side pin: a sidecar from ANOTHER tool carrying an exact
+      // parse-side pin: a summary from ANOTHER tool carrying an exact
       // DECIMAL bound between adjacent doubles must round outward too
-      // (fresh dir: overwriting writeSidecar's file raw would trip the
-      // local filesystem's checksum sidecar)
+      // (fresh dir: overwriting ShardSummary.write's file raw would trip
+      // the local filesystem's checksum sidecar)
       val foreign = Files.createTempDirectory("graft-shard-foreign")
-      Files.write(foreign.resolve(ZoneMapPruner.SidecarName),
-        s"v=1\npart-a.csv\tid=${P53 + 1},${P53 + 1}\n".getBytes("UTF-8"))
+      Files.write(foreign.resolve(ShardSummary.FileName),
+        s"v=1\tnum=id\tstr=\tbloom=\npart-a.csv\t6\t1\t${P53 + 1},${P53 + 1}\n"
+          .getBytes("UTF-8"))
       val reread =
-        try ZoneMapPruner.readSidecar(s, foreign.toString).get.head
-        finally {
-          Files.deleteIfExists(foreign.resolve(ZoneMapPruner.SidecarName))
-          Files.deleteIfExists(foreign): Unit
-        }
+        try ShardSummary.read(s, foreign.toString).get.zones.head
+        finally rm(foreign.toFile)
       val (plo, phi) = reread.ranges("id")
       assert(new java.math.BigDecimal(plo)
         .compareTo(java.math.BigDecimal.valueOf(P53 + 1)) <= 0,
@@ -826,9 +804,6 @@ class ShardRouterSpec extends SparkSpec {
         .compareTo(java.math.BigDecimal.valueOf(P53 + 1)) >= 0,
         s"parsed hi $phi must round up")
     } finally {
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete(): Unit
-      }
       rm(root.toFile)
     }
   }
@@ -853,7 +828,8 @@ class ShardRouterSpec extends SparkSpec {
     assert(ge == Seq(SGe("st", "M")), s"string range extracts: $ge")
 
     val s = spark.newSession()
-    val (spec, zones) = ZoneMapPruner.statusShardedOrders(s, sfDir)
+    val (spec, summary) = ZoneMapPruner.statusShardedOrders(s, sfDir)
+    val zones = summary.zones
     assert(zones.forall(_.strRanges.contains("o_orderstatus")),
       s"string bounds must be in the zone map: $zones")
     assert(zones.forall(_.ranges.contains("o_orderkey")),
@@ -868,19 +844,21 @@ class ShardRouterSpec extends SparkSpec {
     }
     assert(kept.map(_.path).toSet == withF.map(_.path).toSet)
 
-    // sidecar round-trip: version v=2, string bounds intact
+    // summary round-trip: the header declares the string column, and the
+    // persisted bounds equal a fresh in-memory build of both kinds
     val root = new org.apache.hadoop.fs.Path(spec.paths.head).getParent.toString
     val sidecarText = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(root,
-        ZoneMapPruner.SidecarName).toUri.getPath)), "UTF-8")
-    assert(sidecarText.startsWith("v=2\n"),
-      s"a string-bearing sidecar must version v=2: ${sidecarText.take(20)}")
-    val reread = ZoneMapPruner.readSidecar(s, root).get
+        ShardSummary.FileName).toUri.getPath)), "UTF-8")
+    assert(sidecarText.startsWith("v=1\tnum=o_orderkey\tstr=o_orderstatus\t"),
+      s"a string-bearing summary must declare its string column: ${sidecarText.take(60)}")
+    val built = ZoneMapPruner.build(graft.sources.Catalog.read(s, spec),
+      Seq("o_orderstatus", "o_orderkey"))
     def byName(zs: Seq[graft.sources.ShardZoneMap]) =
       zs.map(z => new org.apache.hadoop.fs.Path(z.path).getName ->
         (z.ranges, z.strRanges)).toMap
-    assert(byName(reread) == byName(zones),
-      "sidecar round-trip must preserve both bound kinds")
+    assert(byName(built) == byName(zones),
+      "summary round-trip must preserve both bound kinds")
 
     // end-to-end through the conf route: rows identical, residents only
     // from status-surviving shards
@@ -965,8 +943,8 @@ class ShardRouterSpec extends SparkSpec {
           org.apache.spark.sql.types.LongType)))
       def readDir = s.read.schema(schema).option("delimiter", "|")
         .csv(root.toString)
-      val zones = ZoneMapPruner.build(readDir, Seq("k"))
-      ZoneMapPruner.writeSidecar(s, root.toString, zones)
+      ShardSummary.write(s, root.toString, ShardSummary.build(s, root.toString,
+        TableSpec("t_or", "csv", Nil, Some(schema)), Seq("k")))
       readDir.createOrReplaceTempView("t_or")
       val sql = "SELECT count(*) AS n, sum(v) AS sv FROM t_or WHERE k < 10 OR k > 750"
       val expect = Engine.plan(s, sfDir, sql).collect().map(_.toSeq).toSeq
@@ -984,9 +962,6 @@ class ShardRouterSpec extends SparkSpec {
     } finally {
       try s.conf.unset("spark.graft.scanMode") catch { case _: Throwable => () }
       cache.invalidateAll()
-      def rm(pf: java.io.File): Unit = {
-        Option(pf.listFiles()).foreach(_.foreach(rm)); pf.delete(): Unit
-      }
       rm(root.toFile)
     }
   }
@@ -996,7 +971,7 @@ class ShardRouterSpec extends SparkSpec {
     // of a NaN-bearing double column is NaN — and every strict zone
     // compare against a NaN bound is false, pruning a shard whose
     // non-NaN rows match (row loss). NaN bounds widen to the matching
-    // infinity at build AND at sidecar parse.
+    // infinity at build AND at summary parse.
     import java.nio.file.Files
     import graft.sources.ZoneMapPruner.{Gt => ZGt, Lt => ZLt}
     val s = spark.newSession()
@@ -1028,15 +1003,13 @@ class ShardRouterSpec extends SparkSpec {
       val kept = ZoneMapPruner.prune(zones, Seq(ZGt("x", 2.0)))
         .map(z => new org.apache.hadoop.fs.Path(z.path).getName).toSet
       assert(kept == Set("part-a.csv", "part-c.csv"), s"kept: $kept")
-      // parse-side: a foreign sidecar carrying literal NaN widens too
+      // parse-side: a foreign summary carrying literal NaN widens too
       val foreign = Files.createTempDirectory("graft-shard-nan-foreign")
-      Files.write(foreign.resolve(ZoneMapPruner.SidecarName),
-        "v=1\npart-a.csv\tx=5.0,NaN\npart-c.csv\tx=NaN,NaN\n".getBytes("UTF-8"))
-      val reread = try ZoneMapPruner.readSidecar(s, foreign.toString).get
-        finally {
-          Files.deleteIfExists(foreign.resolve(ZoneMapPruner.SidecarName))
-          Files.deleteIfExists(foreign): Unit
-        }
+      Files.write(foreign.resolve(ShardSummary.FileName),
+        ("v=1\tnum=x\tstr=\tbloom=\npart-a.csv\t12\t1\t5.0,NaN\n" +
+          "part-c.csv\t7\t1\tNaN,NaN\n").getBytes("UTF-8"))
+      val reread = try ShardSummary.read(s, foreign.toString).get.zones
+        finally rm(foreign.toFile)
       val rByName = reread.map(z =>
         new org.apache.hadoop.fs.Path(z.path).getName -> z.ranges("x")).toMap
       assert(rByName("part-a.csv") == (5.0, Double.PositiveInfinity) &&
@@ -1045,7 +1018,8 @@ class ShardRouterSpec extends SparkSpec {
         s"parsed NaN bounds must widen: $rByName")
       // end-to-end: the conf route returns the NaN rows a pruned plan
       // would have lost (Spark: NaN > 2.0 is TRUE)
-      ZoneMapPruner.writeSidecar(s, root.toString, zones)
+      ShardSummary.write(s, root.toString, ShardSummary.build(s, root.toString,
+        TableSpec("t_nan", "csv", Nil, Some(schema)), Seq("x")))
       readDir.createOrReplaceTempView("t_nan")
       val sql = "SELECT count(*) AS n, sum(k) AS sk FROM t_nan WHERE x > 2.0"
       val expect = Engine.plan(s, sfDir, sql).collect().map(_.toSeq).toSeq
@@ -1062,9 +1036,6 @@ class ShardRouterSpec extends SparkSpec {
     } finally {
       try s.conf.unset("spark.graft.scanMode") catch { case _: Throwable => () }
       cache.invalidateAll()
-      def rm(pf: java.io.File): Unit = {
-        Option(pf.listFiles()).foreach(_.foreach(rm)); pf.delete(): Unit
-      }
       rm(root.toFile)
     }
   }
@@ -1096,7 +1067,8 @@ class ShardRouterSpec extends SparkSpec {
 
     // end-to-end: the priority-sharded fixture through the conf route
     val s = spark.newSession()
-    val (spec, zones) = ZoneMapPruner.priorityShardedOrders(s, sfDir)
+    val (spec, summary) = ZoneMapPruner.priorityShardedOrders(s, sfDir)
+    val zones = summary.zones
     val kept = ZoneMapPruner.prune(zones, Seq(SPrefix("o_orderpriority", "1-")))
     assert(kept.nonEmpty && kept.size < zones.size,
       s"the prefix must prune shards: ${kept.size}/${zones.size}")
@@ -1165,7 +1137,8 @@ class ShardRouterSpec extends SparkSpec {
 
     // end-to-end: the status-sharded fixture, F-shards never admitted
     val s = spark.newSession()
-    val (spec, zones) = ZoneMapPruner.statusShardedOrders(s, sfDir)
+    val (spec, summary) = ZoneMapPruner.statusShardedOrders(s, sfDir)
+    val zones = summary.zones
     val kept = ZoneMapPruner.prune(zones, Seq(ZSNeq("o_orderstatus", "F")))
     assert(kept.size < zones.size,
       s"<> must prune the single-status shards: ${kept.size}/${zones.size}")
@@ -1199,17 +1172,20 @@ class ShardRouterSpec extends SparkSpec {
   }
 
   test("a bloom-only directory routes via conf; point lookups prune by membership") {
-    // r16: the _graft_bloom sidecar makes hash-bucketed point-lookup
-    // pruning deployment-reachable - a plain view + SET scanMode, no
-    // library call. Zones synthesize bound-free (a hash layout has no
-    // ranges); the equality conjunct prunes by sketch membership.
-    import graft.sources.BloomPruner
+    // r16: a shard summary with blooms and no zone columns makes
+    // hash-bucketed point-lookup pruning deployment-reachable - a plain
+    // view + SET scanMode, no library call. Zones are bound-free (a hash
+    // layout has no ranges); the equality conjunct prunes by sketch
+    // membership.
     val s = spark.newSession()
-    val (spec, blooms) = BloomPruner.shardedByCustId(s, sfDir)
+    val (spec, summary) = BloomPruner.shardedByCustId(s, sfDir)
     val root = new org.apache.hadoop.fs.Path(spec.paths.head).getParent.toString
-    // the persisted sidecar round-trips (kind + key + per-shard sketches)
-    val Seq(cb) = BloomPruner.readSidecar(s, root).get
+    // the persisted summary round-trips (kind + key + per-shard sketches)
+    // against a fresh in-memory build
+    val blooms = BloomPruner.buildString(graft.sources.Catalog.read(s, spec), "cust_id")
+    val Seq(cb) = summary.blooms
     assert(cb.keyCol == "cust_id" && cb.kind == BloomPruner.StringKey)
+    assert(summary.zoneCols.isEmpty, "a bloom-only summary carries no zone columns")
     val reread = cb.shards
     assert(reread.map(b => new org.apache.hadoop.fs.Path(b.path).getName).sorted ==
       blooms.map(b => new org.apache.hadoop.fs.Path(b.path).getName).sorted)
@@ -1270,7 +1246,6 @@ class ShardRouterSpec extends SparkSpec {
     // it (that branch could match anywhere); several constrained
     // conjuncts/columns INTERSECT; fractional literals skip the long
     // bloom rather than truncate-mismatch.
-    import graft.sources.BloomPruner
     import graft.sources.BloomPruner.{ColumnBlooms, ShardBloom}
     import graft.sources.ZoneMapPruner.{EqTo => ZEq, SEq => ZSEq, Gt => ZGt,
       OrPred => ZOr}
@@ -1331,9 +1306,9 @@ class ShardRouterSpec extends SparkSpec {
     // over the hash-bucketed directory keeps a shard iff SOME member's
     // sketch admits it — ≤ 2 of 8 shards — where the zone envelope alone
     // is useless (every shard spans the domain).
-    import graft.sources.BloomPruner
     val s = spark.newSession()
-    val (spec, blooms) = BloomPruner.shardedByCustId(s, sfDir)
+    val (spec, summary) = BloomPruner.shardedByCustId(s, sfDir)
+    val blooms = summary.blooms.head.shards
     val root = new org.apache.hadoop.fs.Path(spec.paths.head).getParent.toString
     val members = Seq("cust-42", "cust-900")
     val union = members.flatMap(k =>
@@ -1370,21 +1345,19 @@ class ShardRouterSpec extends SparkSpec {
   }
 
   test("one two-key sidecar prunes on both keys; a conjunction intersects (z16/z17)") {
-    // r16 verdict item 4: the v=2 sidecar carries a sketch set PER
+    // r16 verdict item 4: the shard summary carries a sketch set PER
     // COLUMN; the same directory prunes an o_orderkey lookup AND a
     // cust_id lookup, and a two-key conjunction keeps only the
     // intersection.
-    import graft.sources.BloomPruner
     val s = spark.newSession()
-    val (spec, cols) = BloomPruner.shardedTwoKey(s, sfDir)
-    assert(cols.map(c => (c.keyCol, c.kind)) ==
+    val (spec, summary) = BloomPruner.shardedTwoKey(s, sfDir)
+    assert(summary.bloomKeys ==
       Seq(("o_orderkey", BloomPruner.LongKey),
         ("cust_id", BloomPruner.StringKey)))
     val root = new org.apache.hadoop.fs.Path(spec.paths.head).getParent.toString
-    // the persisted v=2 sidecar round-trips both columns
-    val reread = BloomPruner.readSidecar(s, root).get
-    assert(reread.map(c => (c.keyCol, c.kind)) ==
-      cols.map(c => (c.keyCol, c.kind)))
+    // the persisted summary round-trips both columns
+    val reread = summary.blooms
+    assert(reread.map(c => (c.keyCol, c.kind)) == summary.bloomKeys)
     def up(p0: String) = new org.apache.hadoop.fs.Path(p0).toUri.getPath
     // a REAL row's (orderkey, cust) pair: both keys' keeps share its shard
     val row = graft.sources.Catalog.read(s, spec)
@@ -1449,11 +1422,10 @@ class ShardRouterSpec extends SparkSpec {
   test("Sink.compact and mergeInto regenerate the bloom sidecar their swap destroys") {
     // r16 verdict item 1: compact/mergeInto swap the WHOLE directory —
     // without the rebloom hook a bloom-bucketed table silently loses
-    // `_graft_bloom` (not even drift: just gone) after every maintenance
+    // its sketches (not even drift: just gone) after every maintenance
     // op, verbatim the §22.5 zone hazard. The reference regenerates
     // partition metadata with the data (`Partition.h:23-41`).
     import java.nio.file.Files
-    import graft.sources.BloomPruner
     val s = spark.newSession()
     val root = Files.createTempDirectory("graft-compact-bloom")
     val cache = HybridScan.segmentCache(s, sfDir)
@@ -1465,10 +1437,9 @@ class ShardRouterSpec extends SparkSpec {
           col("o_totalprice"))
         .repartition(4, col("cust_id"))
         .write.parquet(table)
-      val cols = BloomPruner.buildMulti(s.read.parquet(table),
+      ShardSummary.rebuild(s, table, parquetAt(table), Nil,
         Seq("o_orderkey" -> BloomPruner.LongKey,
           "cust_id" -> BloomPruner.StringKey))
-      BloomPruner.writeSidecar(s, table, cols)
       def view(): Unit = s.read.parquet(table)
         .createOrReplaceTempView("orders_compact_bloom")
       view()
@@ -1483,10 +1454,10 @@ class ShardRouterSpec extends SparkSpec {
         new org.apache.hadoop.fs.Path(table, "part-*"))
         .map(_.getPath.getName).toSet
       def sidecarNamesAndKeys() = {
-        val re = BloomPruner.readSidecar(s, table)
-        assert(re.isDefined, "bloom sidecar must exist")
-        (re.get.head.shards.map(b => new org.apache.hadoop.fs.Path(b.path)
-          .getName).toSet, re.get.map(c => (c.keyCol, c.kind)))
+        val re = ShardSummary.read(s, table)
+        assert(re.isDefined, "shard summary must exist")
+        (re.get.zones.map(z => new org.apache.hadoop.fs.Path(z.path)
+          .getName).toSet, re.get.bloomKeys)
       }
       s.conf.set("spark.graft.scanMode", "hybrid")
       try {
@@ -1540,21 +1511,17 @@ class ShardRouterSpec extends SparkSpec {
       }
     } finally {
       cache.invalidateAll()
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete(): Unit
-      }
       rm(root.toFile)
     }
   }
 
-  test("bloom drift is counted and BloomPruner.rebuildSidecar restores membership pruning") {
-    // the bloom twin of the zone drift/rebuild contract: a new shard
+  test("bloom drift is counted and ShardSummary.rebuild restores membership pruning") {
+    // the bloom side of the drift/rebuild contract: a new shard
     // lands without a rebuild → the leaf is unrouted (correct, counted,
-    // warned with the RIGHT repair name); one rebuildSidecar call (one
+    // warned with the repair name); one ShardSummary.rebuild call (one
     // distributed pass, tmp+rename, writer-invalidation hooks) brings
     // membership pruning back.
     import java.nio.file.Files
-    import graft.sources.BloomPruner
     val s = spark.newSession()
     val root = Files.createTempDirectory("graft-bloom-rebuild")
     val cache = HybridScan.segmentCache(s, sfDir)
@@ -1570,7 +1537,7 @@ class ShardRouterSpec extends SparkSpec {
         Some(schema), "|")
       def readDir = s.read.schema(schema).option("delimiter", "|")
         .csv(root.toString)
-      BloomPruner.rebuildSidecar(s, root.toString, template,
+      ShardSummary.rebuild(s, root.toString, template, Nil,
         Seq("k" -> BloomPruner.LongKey))
       Files.write(root.resolve("part-2.csv"), "9|90\n".getBytes("UTF-8"))
       HybridScan.invalidateListings(root.toString)
@@ -1579,19 +1546,19 @@ class ShardRouterSpec extends SparkSpec {
       val sql = "SELECT sum(v) AS sv FROM t_bloomrebuild WHERE k = 9"
       val expect = Engine.plan(s, sfDir, sql).collect().map(_.toSeq).toSeq
       assert(expect == Seq(Seq(90L)), s"fixture: $expect")
-      val drift0 = ZoneMapPruner.driftCount
+      val drift0 = ShardSummary.driftCount
       try {
         s.conf.set("spark.graft.scanMode", "hybrid")
         assert(Engine.executeQuery(s, sfDir, sql).collect()
           .map(_.toSeq).toSeq == expect,
           "a drifted bloom leaf must stay row-identical (unrouted) — " +
           "NOT lose the unlisted shard's rows")
-        assert(ZoneMapPruner.driftCount == drift0 + 1,
-          s"bloom drift must count once: ${ZoneMapPruner.driftCount - drift0}")
+        assert(ShardSummary.driftCount == drift0 + 1,
+          s"bloom drift must count once: ${ShardSummary.driftCount - drift0}")
         assert(!cache.keys.exists(_.region.startsWith("shard=")),
           s"drifted bloom leaf must be unrouted: ${cache.keys}")
-        val cols = BloomPruner.rebuildSidecar(s, root.toString, template,
-          Seq("k" -> BloomPruner.LongKey))
+        val cols = ShardSummary.rebuild(s, root.toString, template, Nil,
+          Seq("k" -> BloomPruner.LongKey)).blooms
         assert(cols.head.shards.size == 3, s"rebuild must cover all shards")
         (1 to 3).foreach { _ =>
           assert(Engine.executeQuery(s, sfDir, sql).collect()
@@ -1606,11 +1573,173 @@ class ShardRouterSpec extends SparkSpec {
       }
     } finally {
       cache.invalidateAll()
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete(): Unit
-      }
       rm(root.toFile)
     }
   }
 
+
+  test("a shard rewritten in place under the same name is drift: oracle rows, leaf unrouted") {
+    // the summary records each shard's (length, mtime): a same-name
+    // rewrite that puts rows OUTSIDE the recorded bounds must not be
+    // pruned by its stale bounds (a name-only check routed it and
+    // silently dropped the new rows)
+    import java.nio.file.Files
+    val s = spark.newSession()
+    val (spec, _) = ZoneMapPruner.shardedOrders(s, sfDir)
+    val root = Files.createTempDirectory("graft-shard-rewrite")
+    val cache = HybridScan.segmentCache(s, sfDir)
+    try {
+      TempDirs.copyFiles(new org.apache.hadoop.fs.Path(spec.paths.head).getParent.toString, root)
+      def view(): Unit = s.read.schema(spec.schema.get).option("delimiter", "|")
+        .csv(root.toString).createOrReplaceTempView("orders_rewritten")
+      def rows(sql: String, routed: Boolean) =
+        (if (routed) Engine.executeQuery(s, sfDir, sql) else Engine.plan(s, sfDir, sql))
+          .collect().map(_.toSeq).toSeq
+      val low = "SELECT count(*) AS n FROM orders_rewritten WHERE o_orderkey <= 1000"
+      val high = """SELECT count(*) AS n, CAST(sum(CAST(o_totalprice AS DECIMAL(25,6))) AS DOUBLE) AS total
+        |FROM orders_rewritten WHERE o_orderkey >= 900000""".stripMargin
+      s.conf.set("spark.graft.scanMode", "hybrid")
+      try {
+        view()
+        (1 to 3).foreach(_ => assert(rows(low, routed = true) == rows(low, routed = false)))
+        assert(cache.keys.exists(_.region.startsWith("shard=")),
+          s"fixture: the copy must route per shard before the rewrite: ${cache.keys}")
+        // rewrite the first shard in place: same name, one extra row far
+        // above every recorded bound, and an explicit later mtime
+        val shard = root.resolve(new org.apache.hadoop.fs.Path(spec.paths.head).getName)
+        val mtime = Files.getLastModifiedTime(shard).toMillis
+        Files.write(shard, "999999|1|123.45|X\n".getBytes("UTF-8"),
+          java.nio.file.StandardOpenOption.APPEND)
+        Files.setLastModifiedTime(shard,
+          java.nio.file.attribute.FileTime.fromMillis(mtime + 5000))
+        view()
+        val expect = rows(high, routed = false)
+        assert(expect == Seq(Seq(1L, 123.45)), s"oracle: $expect")
+        val router = HybridScan.sessionRouter(s, sfDir)
+        val (drift0, decisions0) = (ShardSummary.driftCount, router.decisionsTotal)
+        assert(rows(high, routed = true) == expect,
+          "a same-name rewrite must not be pruned by its stale bounds")
+        assert(ShardSummary.driftCount == drift0 + 1,
+          s"the rewrite must count as drift once: ${ShardSummary.driftCount - drift0}")
+        assert(router.decisionsTotal == decisions0,
+          "the drifted leaf must be left unrouted")
+      } finally {
+        try s.conf.unset("spark.graft.scanMode") catch { case _: Throwable => () }
+      }
+    } finally {
+      cache.invalidateAll()
+      rm(root.toFile)
+    }
+  }
+
+  test("a directory with only a legacy zone sidecar is drift: oracle rows, no shard segments") {
+    // earlier releases' sidecars carry no length or mtime, so they are
+    // never routed on; the directory counts as drift until a rebuild
+    import java.nio.file.Files
+    val s = spark.newSession()
+    val root = Files.createTempDirectory("graft-shard-legacy")
+    val cache = HybridScan.segmentCache(s, sfDir)
+    try {
+      Files.write(root.resolve("part-0.csv"), "1|10\n2|20\n".getBytes("UTF-8"))
+      Files.write(root.resolve("part-1.csv"), "5|50\n6|60\n".getBytes("UTF-8"))
+      Files.write(root.resolve("_graft_zonemap"),
+        "v=1\npart-0.csv\tk=1.0,2.0\npart-1.csv\tk=5.0,6.0\n".getBytes("UTF-8"))
+      val schema = org.apache.spark.sql.types.StructType(Seq("k", "v").map(c =>
+        org.apache.spark.sql.types.StructField(c, org.apache.spark.sql.types.LongType)))
+      s.read.schema(schema).option("delimiter", "|").csv(root.toString)
+        .createOrReplaceTempView("t_legacy")
+      val sql = "SELECT count(*) AS n, sum(v) AS sv FROM t_legacy WHERE k <= 5"
+      val expect = Engine.plan(s, sfDir, sql).collect().map(_.toSeq).toSeq
+      assert(expect == Seq(Seq(3L, 80L)), s"fixture: $expect")
+      val drift0 = ShardSummary.driftCount
+      try {
+        s.conf.set("spark.graft.scanMode", "hybrid")
+        assert(Engine.executeQuery(s, sfDir, sql).collect().map(_.toSeq).toSeq == expect)
+        assert(ShardSummary.driftCount == drift0 + 1,
+          s"a legacy-only directory counts as drift once: ${ShardSummary.driftCount - drift0}")
+        assert(!cache.keys.exists(_.region.startsWith("shard=")),
+          s"a legacy-only directory must be left unrouted: ${cache.keys}")
+      } finally {
+        try s.conf.unset("spark.graft.scanMode") catch { case _: Throwable => () }
+      }
+    } finally {
+      cache.invalidateAll()
+      rm(root.toFile)
+    }
+  }
+
+  test("Sink.compact keeps a string-only zone summary: the conf route still prunes on it") {
+    // the rebuild after the swap must carry STRING zone columns too; a
+    // summary with only string columns used to be dropped with the swap
+    import java.nio.file.Files
+    val s = spark.newSession()
+    val root = Files.createTempDirectory("graft-compact-strzone")
+    val cache = HybridScan.segmentCache(s, sfDir)
+    try {
+      val table = root.resolve("t").toString
+      graft.sources.Tables.orders(s, sfDir)
+        .select(col("o_orderstatus"), col("o_orderkey"), col("o_totalprice"))
+        .repartitionByRange(4, col("o_orderstatus"))
+        .write.parquet(table)
+      ShardSummary.rebuild(s, table, parquetAt(table), Seq("o_orderstatus"))
+      graft.sources.Sink.compact(s, table)
+      val summary = ShardSummary.read(s, table)
+      assert(summary.map(_.strCols) == Some(Seq("o_orderstatus")),
+        s"compact must rebuild the string zone column: $summary")
+      s.read.parquet(table).createOrReplaceTempView("orders_compact_strzone")
+      def sqlOf(v: String) =
+        s"SELECT count(*) AS n FROM orders_compact_strzone WHERE o_orderstatus = '$v'"
+      val router = HybridScan.sessionRouter(s, sfDir)
+      try {
+        s.conf.set("spark.graft.scanMode", "hybrid")
+        (1 to 3).foreach { _ =>
+          assert(Engine.executeQuery(s, sfDir, sqlOf("F")).collect().map(_.toSeq).toSeq ==
+            Engine.plan(s, sfDir, sqlOf("F")).collect().map(_.toSeq).toSeq)
+        }
+        assert(cache.keys.exists(_.region.startsWith("shard=")),
+          s"the compacted table must still route per shard: ${cache.keys}")
+        assert(Engine.executeQuery(s, sfDir, sqlOf("Z")).collect().head.getLong(0) == 0L)
+        assert(router.decisions.last._4.contains("all shards zone-pruned"),
+          s"a status outside every shard's bounds must prune: ${router.decisions.last}")
+      } finally {
+        try s.conf.unset("spark.graft.scanMode") catch { case _: Throwable => () }
+      }
+    } finally {
+      cache.invalidateAll()
+      rm(root.toFile)
+    }
+  }
+
+  test("a maintenance op whose summary rebuild fails still fires the writer hook") {
+    // the swap already replaced the files: listings and Spark's caches
+    // must learn it even when the summary cannot be rebuilt
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("graft-compact-hook")
+    try {
+      val table = graft.sources.Tables.path(root.toString, "t")
+      spark.range(0, 40).repartition(4).write.parquet(table)
+      // a summary naming a column the table does not have: its rebuild throws
+      Files.write(java.nio.file.Paths.get(table, ShardSummary.FileName),
+        "v=1\tnum=\tstr=\tbloom=missing:long\n".getBytes("UTF-8"))
+      val mark0 = graft.sources.Tables.writeMark(root.toString, "t")
+      intercept[Exception](graft.sources.Sink.compact(spark, table))
+      assert(graft.sources.Tables.writeMark(root.toString, "t") > mark0,
+        "Tables.wrote must run although the rebuild failed")
+      assert(spark.read.parquet(table).count() == 40L, "the compacted table is in place")
+    } finally rm(root.toFile)
+  }
+
+  test("a second session resolves the sharded fixtures with no Spark job") {
+    // the first session builds (or finds) each fixture's summary; later
+    // sessions read it through the memoized reader instead of re-running
+    // the zone/bloom aggregation
+    ZoneMapPruner.shardedOrders(spark, sfDir)
+    BloomPruner.shardedTwoKey(spark, sfDir)
+    val s2 = spark.newSession()
+    val ((orders, twoKey), jobs) = jobsDuring(
+      (ZoneMapPruner.shardedOrders(s2, sfDir), BloomPruner.shardedTwoKey(s2, sfDir)))
+    assert(jobs == 0, s"a second session ran $jobs job(s) resolving the fixtures")
+    assert(orders._1.paths.size == 8 && orders._2.zones.size == 8)
+    assert(twoKey._2.blooms.map(_.keyCol) == Seq("o_orderkey", "cust_id"))
+  }
 }

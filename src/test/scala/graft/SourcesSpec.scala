@@ -2,9 +2,10 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.sources.{BloomPruner, Catalog, TableSpec, ZoneMapPruner}
+import graft.sources.{BloomPruner, Catalog, ShardSummary, TableSpec, ZoneMapPruner}
 import graft.sources.ZoneMapPruner.{Between, EqTo, Ge, Gt, Lt}
 import graft.sources.Tables
+import graft.TempDirs.rm
 
 /** Catalog layer: CSV round-trip with declared schemas, schema.json
   * parsing, and zone-map shard pruning. */
@@ -94,7 +95,8 @@ class SourcesSpec extends SparkSpec {
 
   test("z01 entry scans fewer files than the full sharded table") {
     import org.apache.spark.sql.functions._
-    val (spec, zones) = ZoneMapPruner.shardedOrders(spark, sfDir)
+    val (spec, summary) = ZoneMapPruner.shardedOrders(spark, sfDir)
+    val zones = summary.zones
     assert(spec.paths.size == 8, s"expected 8 CSV shards, got ${spec.paths.size}")
     val pruned = ZoneMapPruner.readPruned(spark, spec, zones,
       Seq(ZoneMapPruner.Le("o_orderkey", 1000.0)),
@@ -110,7 +112,8 @@ class SourcesSpec extends SparkSpec {
 
   test("bloom sidecar prunes hash-sharded files where zone maps cannot") {
     import org.apache.spark.sql.functions._
-    val (spec, blooms) = BloomPruner.shardedByCustkey(spark, sfDir)
+    val (spec, summary) = BloomPruner.shardedByCustkey(spark, sfDir)
+    val blooms = summary.blooms.head.shards
     assert(spec.paths.size == 8, s"expected 8 CSV shards, got ${spec.paths.size}")
     // the layout defeats zone maps: every shard's custkey range spans
     // nearly the whole domain, so a min/max pruner keeps all 8
@@ -149,7 +152,8 @@ class SourcesSpec extends SparkSpec {
       assert(BloomPruner.xx64(k) == h,
         s"driver-side xx64('$k') must equal the engine's xxhash64")
     }
-    val (spec, blooms) = BloomPruner.shardedByCustId(spark, sfDir)
+    val (spec, summary) = BloomPruner.shardedByCustId(spark, sfDir)
+    val blooms = summary.blooms.head.shards
     assert(spec.paths.size == 8, s"expected 8 CSV shards: ${spec.paths.size}")
     val kept = BloomPruner.pruneString(blooms, "cust-42")
     assert(kept.size >= 1 && kept.size <= 2,
@@ -165,9 +169,12 @@ class SourcesSpec extends SparkSpec {
       .select(col("cust_id"), input_file_name().as("f"))
       .limit(2000).collect().map(r => r.getString(0) -> r.getString(1))
       .distinct.take(20)
+    // compared by URI path: the summary renders `file:/x`,
+    // input_file_name() `file:///x`
+    def up(p0: String) = new org.apache.hadoop.fs.Path(p0).toUri.getPath
     present.foreach { case (k, f) =>
-      val keptPaths = BloomPruner.pruneString(blooms, k).map(_.path).toSet
-      assert(keptPaths.contains(f),
+      val keptPaths = BloomPruner.pruneString(blooms, k).map(b => up(b.path)).toSet
+      assert(keptPaths.contains(up(f)),
         s"present key $k must keep its shard $f")
     }
     val absent = BloomPruner.readPrunedString(spark, spec, blooms, "cust-nope")
@@ -179,7 +186,8 @@ class SourcesSpec extends SparkSpec {
     // union (z15) — read the shards SOME member's sketch admits, then
     // re-apply the exact membership as the residual.
     import org.apache.spark.sql.functions._
-    val (spec, blooms) = BloomPruner.shardedByCustkey(spark, sfDir)
+    val (spec, summary) = BloomPruner.shardedByCustkey(spark, sfDir)
+    val blooms = summary.blooms.head.shards
     val keys = Seq(42L, 900L)
     val union = keys.flatMap(k => BloomPruner.prune(blooms, k)).distinct
     assert(union.size >= 1 && union.size <= 3,
@@ -192,7 +200,8 @@ class SourcesSpec extends SparkSpec {
     assert(expect > 0 && df.count() == expect,
       s"union + residual must select exactly the members' rows")
     // string twin over the string-bucketed fixture
-    val (sSpec, sBlooms) = BloomPruner.shardedByCustId(spark, sfDir)
+    val (sSpec, sSummary) = BloomPruner.shardedByCustId(spark, sfDir)
+    val sBlooms = sSummary.blooms.head.shards
     val sdf = BloomPruner.readPrunedStringIn(spark, sSpec, sBlooms,
       Seq("cust-42", "cust-900"))
     assert(sdf.count() == expect)
@@ -258,17 +267,14 @@ class SourcesSpec extends SparkSpec {
       assert(BloomPruner.readPruned(spark, spec, tsBlooms, micros + 1L)
         .count() == 0L, "an absent micros key selects nothing")
     } finally {
-      def rm(pf: java.io.File): Unit = {
-        Option(pf.listFiles()).foreach(_.foreach(rm)); pf.delete(): Unit
-      }
       rm(root.toFile)
     }
   }
 
-  test("bloom sidecar v=2: relative paths, outside-root refusal, v=1 back-compat") {
+  test("shard summary: relative paths, outside-root refusal, legacy bloom file unread") {
     // r16 ADVICE: basenames collapse on nested layouts (repeated
-    // part-file names) — v=2 stores ROOT-RELATIVE paths and the writer
-    // refuses files that do not live under the sidecar's directory.
+    // part-file names) — the summary stores ROOT-RELATIVE paths and the
+    // writer refuses files that do not live under its directory.
     import java.nio.file.Files
     import org.apache.spark.sql.functions._
     val root = Files.createTempDirectory("graft-bloom-v2")
@@ -278,50 +284,47 @@ class SourcesSpec extends SparkSpec {
         .repartition(2, col("g")).write.parquet(dir)
       val cols = BloomPruner.buildMulti(spark.read.parquet(dir),
         Seq("id" -> BloomPruner.LongKey))
-      BloomPruner.writeSidecar(spark, dir, cols)
+      val template = TableSpec("t", "parquet", Nil, None)
+      ShardSummary.write(spark, dir, ShardSummary.build(spark, dir, template, Nil,
+        Seq("id" -> BloomPruner.LongKey)))
       // round-trip: same shard keep-sets
-      val re = BloomPruner.readSidecar(spark, dir).get
+      val re = ShardSummary.read(spark, dir).get.blooms
       def up(p0: String) = new org.apache.hadoop.fs.Path(p0).toUri.getPath
       (0L to 19L).foreach { k =>
         assert(BloomPruner.prune(re.head.shards, k).map(b => up(b.path)).toSet ==
           BloomPruner.prune(cols.head.shards, k).map(b => up(b.path)).toSet,
-          s"v=2 round-trip must prune identically for $k")
+          s"summary round-trip must prune identically for $k")
       }
-      // a bloom whose file lives OUTSIDE the directory is refused
-      val foreign = cols.head.copy(shards = cols.head.shards.map(b =>
-        b.copy(path = "/somewhere/else/" +
-          new org.apache.hadoop.fs.Path(b.path).getName)))
+      // a shard whose file lives OUTSIDE the directory is refused
+      val built = ShardSummary.build(spark, dir, template, Seq("id"))
+      val foreign = built.copy(shards = built.shards.map(sh =>
+        sh.copy(zone = sh.zone.copy(path = "/somewhere/else/" +
+          new org.apache.hadoop.fs.Path(sh.zone.path).getName))))
       intercept[RuntimeException] {
-        BloomPruner.writeSidecar(spark, dir, Seq(foreign))
+        ShardSummary.write(spark, dir, foreign)
       }
-      // v=1 single-key files (older writers) still parse: hand-write one
-      val shards = cols.head.shards
-      val v1 = new StringBuilder("v=1\tkeyCol=id\tkind=long\n")
-      shards.foreach { b =>
-        val buf = new java.io.ByteArrayOutputStream()
-        b.bloom.writeTo(buf)
-        v1.append(new org.apache.hadoop.fs.Path(b.path).getName).append('\t')
-          .append(java.util.Base64.getEncoder.encodeToString(buf.toByteArray))
-          .append('\n')
+      // a nested layout repeating part-file basenames keeps one entry per
+      // file, each resolving back to its own path
+      val nested = root.resolve("n")
+      val parts = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+      Seq("a", "b").foreach { d =>
+        Files.createDirectories(nested.resolve(d))
+        parts.foreach(f => Files.copy(f.toPath, nested.resolve(d).resolve(f.getName)))
       }
-      // write through the Hadoop fs (like any external tool would) — a
-      // raw java.nio overwrite leaves the local ChecksumFileSystem's
-      // stale .crc behind and the read fails on checksum, not format
-      val hfs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val sidecarPath = new org.apache.hadoop.fs.Path(dir,
-        BloomPruner.SidecarName)
-      val out = hfs.create(sidecarPath, true)
-      try out.write(v1.toString.getBytes("UTF-8")) finally out.close()
-      val legacy = BloomPruner.readSidecar(spark, dir).get
-      assert(legacy.map(c => (c.keyCol, c.kind)) ==
-        Seq(("id", BloomPruner.LongKey)))
-      assert(legacy.head.shards.map(b => up(b.path)).sorted ==
-        shards.map(b => up(b.path)).sorted)
+      ShardSummary.write(spark, nested.toString,
+        ShardSummary.build(spark, nested.toString, template, Seq("id")))
+      val nestedZones = ShardSummary.read(spark, nested.toString).get.zones
+      assert(nestedZones.map(z => up(z.path)).toSet == Seq("a", "b").flatMap(d =>
+        parts.map(f => nested.resolve(d).resolve(f.getName).toString)).toSet,
+        s"nested shards must keep distinct relative paths: ${nestedZones.map(_.path)}")
+      // an earlier release's bloom sidecar carries no length or mtime and
+      // is not parsed: a directory holding only it has no summary
+      val legacyDir = root.resolve("legacy")
+      Files.createDirectories(legacyDir)
+      Files.write(legacyDir.resolve("_graft_bloom"),
+        "v=1\tkeyCol=id\tkind=long\n".getBytes("UTF-8"))
+      assert(ShardSummary.read(spark, legacyDir.toString).isEmpty)
     } finally {
-      def rm(pf: java.io.File): Unit = {
-        Option(pf.listFiles()).foreach(_.foreach(rm)); pf.delete(): Unit
-      }
       rm(root.toFile)
     }
   }

@@ -14,6 +14,24 @@ trait SparkSpec extends AnyFunSuite {
   /** Smallest scale factor — specs verify semantics, not throughput. */
   val sfDir = "/root/testdata/sf0.001"
 
+  /** `f`'s value and the Spark jobs started while it ran (listener bus
+    * flushed on both sides, so jobs of earlier work are not counted). */
+  def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.GraftCoreBridge.flushListenerBus(sc)
+    sc.addSparkListener(l)
+    try {
+      val v = f
+      org.apache.spark.GraftCoreBridge.flushListenerBus(sc)
+      (v, n.get)
+    } finally sc.removeSparkListener(l)
+  }
+
   /** Pin the shared session ACTIVE on the test thread: the active
     * session is a thread-local (inheritable at thread creation only),
     * and ScalaTest may run a suite on a pool thread that never
