@@ -221,7 +221,8 @@ object Shell {
         val router = graft.cache.HybridScan.sessionRouter(spark, dir)
         println(f"cache: policy=${cache.policy} used=${cache.usedBytes / 1e6}%.1f MB" +
           f" of ${cache.capacityBytes / 1e6}%.1f MB; hits=${cache.hits}" +
-          s" misses=${cache.misses} evictions=${cache.evictions}")
+          s" misses=${cache.misses} evictions=${cache.evictions}" +
+          f" refusals=${cache.refusals} refused_loaded=${cache.refusedBytes / 1e6}%.1f MB")
         println(s"router: pushdowns=${router.pushdowns} pullups=${router.pullups}" +
           s" cacheOnly=${router.cacheOnlys} hybrid=${router.hybrids}" +
           s" overBudget=${router.overBudget} freeSlots=${router.availableSlots}")

@@ -468,8 +468,11 @@ object HybridScan {
     *  - `spark.graft.pushdownSlots` (the store's concurrent-pushdown
     *    budget, the reference's adaptive-pushdown parallel degree;
     *    default 64)
-    *  - `spark.graft.hotAdmitAfter` (admission-loop threshold; ≤0
-    *    disables self-warming; default 2)
+    *  - `spark.graft.hotAdmitAfter` (admission-loop threshold: the
+    *    number of routed QUERIES at one table version that must miss a
+    *    column set before it is admitted — a query naming the set twice
+    *    counts once, a write restarts the count; ≤0 disables
+    *    self-warming; default 2)
     * A value that is not an integer falls back to the default with one
     * warning per value. */
   def sessionRouter(s: SparkSession, dir: String): AdaptiveScanRouter =
@@ -663,13 +666,17 @@ object HybridScan {
     * are selectable like any other (they resolve from directory names);
     * `_metadata.row_index` is per PHYSICAL FILE, so the (file, pos)
     * ordinal stays unique and both zip sides agree on it regardless of
-    * how the layout nests. */
+    * how the layout nests. The relation takes the schema
+    * [[graft.sources.Tables]] already inferred for the version `listing`
+    * fingerprints — a segment build or hybrid fetch runs no
+    * footer-reading inference job; a version never inferred before (an
+    * external rewrite rotates the fingerprint) infers once. */
   def ordinalScanPath(s: SparkSession, path: String,
       cols: Seq[String], listing: TableListing): DataFrame = {
     val fileKey =
       if (listing.hashSafe) xxhash64(col("_metadata.file_path"))
       else col("_metadata.file_path")
-    s.read.parquet(path).select(
+    Tables.readParquet(s, path, Some(listing.fingerprint)).select(
       fileKey.as(FileCol) +:
       col("_metadata.row_index").as(PosCol) +:
       cols.map(col): _*)
@@ -877,6 +884,18 @@ object HybridScan {
     override def close(): Unit = if (closed.compareAndSet(false, true)) releaseFn()
   }
 
+  /** One query's heat scope: the router ticks a heat key at most once
+    * per scope, so a query that names one column set twice (a CTE read
+    * by its main query and by a subquery) counts one access, not two.
+    * [[graft.plans.ModeExec]] opens one per routed query and passes it to
+    * every leaf it routes; a direct router call that passes none is its
+    * own scope. */
+  final class HeatScope {
+    private val ticked = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    /** True the first time `key` is touched in this scope. */
+    private[HybridScan] def firstTouch(key: String): Boolean = ticked.add(key)
+  }
+
   /** How the per-partition router re-reads a routed leaf from storage
     * (r13 verdict item 2 — routing was parquet-only, and CSV is the
     * reference's PRIMARY format: its S3 Select path parses streamed CSV,
@@ -1061,61 +1080,92 @@ object HybridScan {
       * r12 ADVICE). */
     def decisionsTotal: Long = decisionCount.get
 
-    /** Hot-data admission memory for [[scanMode]]'s HYBRID mode — the
-      * loop that makes the cache WARM ITSELF from the workload instead of
-      * only serving pre-existing segments. The reference's caching tier
-      * decides what to keep from per-query access history
-      * (`fpdb-cache`'s policies run on segment access events, and its
-      * HYBRID mode is caching AND pushdown together); here a total miss
-      * routes pushdown until the same (table, column set) has been asked
-      * for `hotAdmitAfter` times, then loads-and-admits a ZIP-CAPABLE
-      * ordinal segment: later equal-or-narrower scans serve cache-only,
-      * later WIDER scans hybrid-zip against it. `hotAdmitAfter = 2` (the
-      * default) is scan-resistant — a one-shot table scan never evicts
-      * anything — while a workload's repeated tables warm up after their
-      * first repeat; ≤ 0 disables the loop. Admission itself is still
-      * the CACHE's decision (policy priority + capacity): a refusal
-      * resets the set's access counter — the query is served by the route
-      * the admission preempted (hybrid zip, or pushdown/pullup on a total
-      * miss) and the set must RE-EARN its heat, so a refused segment is
-      * re-attempted only every `hotAdmitAfter` accesses, never every
-      * access (the full-width ordinal rebuild that would imply is
-      * persistently worse than the routes it preempts). */
-    private val missSeen =
-      new java.util.concurrent.ConcurrentHashMap[String, AtomicLong]
+    /** Hot-data admission memory — the loop that makes the cache WARM
+      * ITSELF from the workload instead of only serving pre-existing
+      * segments. The reference's caching tier decides what to keep from
+      * per-query access history (`fpdb-cache`'s policies run on segment
+      * access events, and its HYBRID mode is caching AND pushdown
+      * together). Here the evidence is reuse ACROSS queries:
+      *  - HEAT is one counter per (kind, table, column set), ticked at
+      *    most once per query ([[HeatScope]]): a CTE read twice by one
+      *    query is one access, and the repeat's decision line says so;
+      *  - heat belongs to a TABLE VERSION (the listing fingerprint for
+      *    [[scanMode]], the unit's fingerprinted key table for
+      *    [[routeUnits]]): a tick at another version restarts the count
+      *    at 1, so a write retires the heat along with the segments it
+      *    made stale;
+      *  - a set whose count reaches `hotAdmitAfter` (queries at this
+      *    table version) is ADMITTED: its zip-capable ordinal segment is
+      *    built at plan time. Later equal-or-narrower scans serve
+      *    cache-only, later WIDER scans hybrid-zip against it.
+      * `hotAdmitAfter = 2` (the default) is scan-resistant — a one-shot
+      * scan never evicts anything — while a workload's repeated tables
+      * warm on their second query; ≤ 0 disables the loop. Admission is
+      * still the CACHE's decision (policy priority + capacity): a refusal
+      * resets the counter, the query is served by the route the admission
+      * preempted (hybrid zip, or pushdown/pullup on a total miss), and the
+      * set must re-earn its heat — a refused segment is re-attempted only
+      * every `hotAdmitAfter` queries, never every access, and one that can
+      * never fit is not loaded again at all ([[SegmentCache.get]]). */
+    private val missSeen = new java.util.concurrent.ConcurrentHashMap[String, Heat]
 
-    /** One access tick for a (kind, table, column set) key. `kind`
-      * separates the full-miss counter from the zipped-partial counter:
-      * promotion of an already-zipping set is judged on how often it
-      * ZIPS, not on accesses it served other ways. Bounded history: past
-      * the cap, a QUARTER of the entries are evicted (arbitrary CHM
-      * order) instead of clearing the map — per-partition region keys
-      * put high-partition-count tables at thousands of live counters,
-      * and a full clear mid-loop would starve exactly those tables of
-      * admission forever (every early-iterated partition's heat wiped
-      * before it reaches the threshold, every pass — r12 review).
-      * Eviction only delays a survivor's warming by one access. */
-    private def countAccess(kind: String, table: String, need: Seq[String]): Long = {
+    /** One heat counter: the queries counted at the table `version` that
+      * last ticked it. A seeded entry ([[seedHeat]]) has no version yet
+      * and adopts the first one it sees. */
+    private final class Heat(var version: String, var count: Long)
+
+    private val heatTickN = new AtomicLong(0)
+    /** Heat ticks since construction — spec hook proving one tick per
+      * (key, query), however often the query names the key. */
+    private[graft] def heatTicks: Long = heatTickN.get
+
+    private def heatKey(kind: String, unit: String, cols: Seq[String]): String =
+      s"$kind|$unit|${cols.sorted.mkString(",")}"
+
+    /** One access of `req` for a (kind, column set) key at table
+      * `version`; returns the key's count. `kind` separates the full-miss
+      * counter from the zipped-partial counter: promotion of an
+      * already-zipping set is judged on how often it ZIPS, not on
+      * accesses it served other ways. A key already ticked in `req`'s
+      * scope is not ticked again (the request is marked a repeat).
+      * Bounded history: past the cap, a QUARTER of the entries are
+      * evicted (arbitrary CHM order) instead of clearing the map —
+      * per-partition region keys put high-partition-count tables at
+      * thousands of live counters, and a full clear mid-loop would starve
+      * exactly those tables of admission forever (every early-iterated
+      * partition's heat wiped before it reaches the threshold, every pass
+      * — r12 review). Eviction only delays a survivor's warming by one
+      * access. */
+    private def countAccess(kind: String, req: Req, cols: Seq[String],
+        version: String): Long = {
       heatDirty.set(true) // live activity: the next heat save is a real measurement
       if (missSeen.size > 65536) {
         val it = missSeen.keySet.iterator
         var i = 0
         while (it.hasNext) { it.next(); if (i % 4 == 0) it.remove(); i += 1 }
       }
-      missSeen.computeIfAbsent(s"$kind|$table|${need.sorted.mkString(",")}",
-        _ => new AtomicLong).incrementAndGet()
+      val key = heatKey(kind, req.unit, cols)
+      val tick = req.scope.firstTouch(key)
+      if (tick) heatTickN.incrementAndGet() else req.repeat = true
+      val h = missSeen.computeIfAbsent(key, _ => new Heat(version, 0L))
+      h.synchronized {
+        if (h.version == null) h.version = version
+        else if (h.version != version) { h.version = version; h.count = 0L }
+        if (tick) h.count += 1
+        h.count
+      }
     }
 
     /** Forget a (kind, table, column set)'s access history — called when
       * the cache REFUSES the segment that history argued for. Without the
-      * reset the counter stays above threshold forever and every later
-      * access re-attempts the refused admission (rebuilding the full-width
+      * reset the counter stays above threshold and every later query
+      * re-attempts the refused admission (rebuilding the full-width
       * ordinal scan each time — persistently worse than the route it
       * preempted); with it, the set re-earns its heat and the admission is
-      * re-attempted only every `hotAdmitAfter` accesses, by which time
+      * re-attempted only every `hotAdmitAfter` queries, by which time
       * capacity may have freed up. */
-    private def resetAccess(kind: String, table: String, need: Seq[String]): Unit =
-      missSeen.remove(s"$kind|$table|${need.sorted.mkString(",")}")
+    private def resetAccess(kind: String, unit: String, cols: Seq[String]): Unit =
+      missSeen.remove(heatKey(kind, unit, cols))
 
     private def dataCols(k: SegmentKey): Seq[String] =
       k.columns.filterNot(c => c == FileCol || c == PosCol)
@@ -1139,13 +1189,16 @@ object HybridScan {
       if (acquired) () => slots.release() else () => ()
 
     /** One routing request: the unit name its decision line and heat keys
-      * carry, the projection and the predicate. `need` is every column
-      * the scan must produce BEFORE the filter runs — the projection plus
-      * any predicate-only columns; coverage decisions (and the pullup
-      * segment) are made on this set, so a predicate on a column outside
-      * the projection still routes correctly. */
+      * carry, the projection, the predicate and the query's heat scope.
+      * `need` is every column the scan must produce BEFORE the filter
+      * runs — the projection plus any predicate-only columns; coverage
+      * decisions (and the pullup segment) are made on this set, so a
+      * predicate on a column outside the projection still routes
+      * correctly. `repeat` is set when a heat key this request touched
+      * was already ticked in its scope; its decision line says so. */
     private final class Req(val unit: String, val cols: Seq[String],
-        val predicate: Column) {
+        val predicate: Column, val scope: HeatScope = new HeatScope) {
+      var repeat = false
       val need: Seq[String] =
         cols ++ referencedCols(predicate).toSeq.sorted.filterNot(cols.contains)
       /** Predicate pushed into `df`'s scan, then the projection. */
@@ -1163,7 +1216,8 @@ object HybridScan {
         case CacheOnly => cacheOnlyN
         case Hybrid    => hybridN
       }).incrementAndGet()
-      logDecision(req.unit, req.need, route, reason)
+      logDecision(req.unit, req.need, route,
+        if (req.repeat) reason + " (repeat in this query: heat not ticked)" else reason)
     }
 
     /** The forced-mode arms every entry point shares, over the unit's
@@ -1223,7 +1277,8 @@ object HybridScan {
       * (`SegmentKey.h`: (partition, column, range);
       * `PrePToS3PTransformer.cpp:66-77`). Each unit, in order:
       *  - ticks its heat under `kind|unit|cols,region` (the `part|…` and
-      *    `shard|…` keys `spark.graft.heatPath` snapshots carry);
+      *    `shard|…` keys `spark.graft.heatPath` snapshots carry), once per
+      *    query, at the version its `keyTable` names;
       *  - serves cache-side from a resident segment covering `need`;
       *  - or, hot past `hotAdmitAfter` (every unit under caching-only), is
       *    admitted as its OWN region-keyed segment — its own bytes,
@@ -1261,8 +1316,8 @@ object HybridScan {
       units.foreach { u => u.keyTable match {
         case None => cold += u
         case Some(keyTable) =>
-          val heatKey = needSorted :+ u.region
-          val heat = countAccess(kind, req.unit, heatKey)
+          val heatCols = needSorted :+ u.region
+          val heat = countAccess(kind, req, heatCols, keyTable)
           val capped = hot.size >= maxHotRegions
           val resident = if (capped) None else
             residentByKey.getOrElse((keyTable, u.region), Nil)
@@ -1275,7 +1330,7 @@ object HybridScan {
               val seg = cache.get(k)(u.build(needSorted))
               if (cache.keys.contains(k)) hot += u -> seg
               else {
-                resetAccess(kind, req.unit, heatKey)
+                resetAccess(kind, req.unit, heatCols)
                 refusedLease(seg, leaseSpansExecution) match {
                   case Some(rel) => hot += u -> seg; releases += rel
                   case None =>
@@ -1343,11 +1398,13 @@ object HybridScan {
       *        a condemned frame there would unpersist it at close and
       *        recompute its repartition+sort lineage at execution —
       *        strictly worse than the fallback routes, so those paths
-      *        release the refused frame promptly and fall back. */
+      *        release the refused frame promptly and fall back.
+      * @param scope the query's heat scope (default: this call alone). */
     def scanMode(s: SparkSession, dir: String, table: String,
         cols: Seq[String], predicate: Column, mode: ScanMode,
-        leaseSpansExecution: Boolean = true): ScanLease = {
-      val req = new Req(table, cols, predicate)
+        leaseSpansExecution: Boolean = true,
+        scope: HeatScope = new HeatScope): ScanLease = {
+      val req = new Req(table, cols, predicate, scope)
       val need = req.need
       val path = Tables.path(dir, table)
       // memoized relation (r18, r17 verdict item 4): a fresh
@@ -1477,13 +1534,14 @@ object HybridScan {
             case None => partial match {
               case Some((k, overlap))
                   if hotAdmitAfter > 0 &&
-                    countAccess("zip", table, need) >= hotAdmitAfter + 1 =>
+                    countAccess("zip", req, need, tl.fingerprint) >= hotAdmitAfter + 1 =>
                 // a set that KEEPS zipping pays its fetch columns' store
                 // bytes on every query; once it proves hot (it has zipped
-                // hotAdmitAfter times already — a zip serves it cheaply,
-                // so promotion takes one more signal than a miss), admit
-                // full residency and stop paying. The narrower segment it
-                // zipped against goes cold and ages out by policy.
+                // in hotAdmitAfter queries already — a zip serves it
+                // cheaply, so promotion takes one more signal than a
+                // miss), admit full residency and stop paying. The
+                // narrower segment it zipped against goes cold and ages
+                // out by policy.
                 admitOrdinal("zip",
                   s"hot zipped set: promoting [${need.sorted.mkString(",")}] " +
                   s"to full residency (was zipping against [${overlap.mkString(",")}])",
@@ -1491,7 +1549,7 @@ object HybridScan {
                   hybridZip(k, overlap, _))
               case Some((k, overlap)) => hybridZip(k, overlap)
               case None =>
-                val seen = countAccess("miss", table, need)
+                val seen = countAccess("miss", req, need, tl.fingerprint)
                 // not yet hot, or the hot admission was refused: route like
                 // a cold miss (an unpersisted repartition+sort frame would
                 // be strictly worse than a straight pushdown scan)
@@ -1521,7 +1579,16 @@ object HybridScan {
         cols: Seq[String], predicate: Column, partitionCol: String,
         mode: ScanMode, leaseSpansExecution: Boolean = true): ScanLease =
       scanPartitionedMode(s, path, segName, cols, predicate,
-        Seq(partitionCol), mode, leaseSpansExecution, PartitionedRead.Parquet)
+        Seq(partitionCol), mode, leaseSpansExecution, PartitionedRead.Parquet,
+        new HeatScope)
+
+    /** [[scanPartitionedMode]] as its own heat scope. */
+    def scanPartitionedMode(s: SparkSession, path: String, segName: String,
+        cols: Seq[String], predicate: Column, partitionCols: Seq[String],
+        mode: ScanMode, leaseSpansExecution: Boolean,
+        readSpec: PartitionedRead): ScanLease =
+      scanPartitionedMode(s, path, segName, cols, predicate, partitionCols,
+        mode, leaseSpansExecution, readSpec, new HeatScope)
 
     /** Per-PARTITION routing over a hive-partitioned layout (r12) — the
       * reference's ACTUAL cache granularity: its `SegmentKey` is
@@ -1556,9 +1623,9 @@ object HybridScan {
     def scanPartitionedMode(s: SparkSession, path: String, segName: String,
         cols: Seq[String], predicate: Column, partitionCols: Seq[String],
         mode: ScanMode, leaseSpansExecution: Boolean,
-        readSpec: PartitionedRead): ScanLease = {
+        readSpec: PartitionedRead, scope: HeatScope): ScanLease = {
       require(partitionCols.nonEmpty, "partitionCols must be non-empty")
-      val req = new Req(segName, cols, predicate)
+      val req = new Req(segName, cols, predicate, scope)
       // ONE relation resolution per (session, path, spec) — not per
       // decision: every derived frame filters/selects off this base, and
       // the resolution itself (Spark's InMemoryFileIndex partition
@@ -1794,9 +1861,10 @@ object HybridScan {
         segName: String, shards: Seq[graft.sources.ShardZoneMap],
         zonePreds: Seq[graft.sources.ZoneMapPruner.RangePred],
         cols: Seq[String], predicate: Column, mode: ScanMode,
-        leaseSpansExecution: Boolean = true): ScanLease = {
+        leaseSpansExecution: Boolean = true,
+        scope: HeatScope = new HeatScope): ScanLease = {
       import graft.sources.{Catalog, ZoneMapPruner}
-      val req = new Req(segName, cols, predicate)
+      val req = new Req(segName, cols, predicate, scope)
       val surviving = ZoneMapPruner.prune(shards, zonePreds).sortBy(_.path)
       val prunedNote = s"${surviving.size}/${shards.size} shards after zone pruning"
       // multi-path reads are session-cached per (parent dir, spec,
@@ -1972,7 +2040,8 @@ object HybridScan {
       sb.append(s"pushdown_est_nanos=$pushdownEstNanos\n")
       sb.append(s"pullup_est_nanos=$pullupEstNanos\n")
       tableCostSecs.forEach((t, c) => sb.append(s"cost.$t=$c\n"): Unit)
-      missSeen.forEach((k, v) => sb.append(s"seen.$k=${v.get}\n"): Unit)
+      missSeen.forEach((k, h) =>
+        sb.append(s"seen.$k=${h.synchronized(h.count)}\n"): Unit)
       sb.toString
     }
 
@@ -1995,8 +2064,7 @@ object HybridScan {
               tableCostSecs.putIfAbsent(k.stripPrefix("cost."),
                 Double.box(v.toDouble))
             case _ if k.startsWith("seen.") =>
-              missSeen.putIfAbsent(k.stripPrefix("seen."),
-                new AtomicLong(v.toLong))
+              missSeen.putIfAbsent(k.stripPrefix("seen."), new Heat(null, v.toLong))
             case _ => ()
           } catch { case _: NumberFormatException => () }
         }

@@ -68,6 +68,16 @@ class SegmentCache(val capacityBytes: Long, val policy: CachePolicy = LRU) {
   private var hitCount = 0L
   private var missCount = 0L
   private var evictCount = 0L
+  private var refusalCount = 0L
+  private var refusedByteCount = 0L
+  /** Keys whose MEASURED bytes exceeded [[capacityBytes]] (MeasuredWLFU's
+    * eager load): capacity is fixed, so such a key can never be admitted,
+    * and [[get]] refuses it before its load runs again. Ordinal keys
+    * embed `table@fingerprint`, so a rewritten table is tried afresh.
+    * Bounded: past [[MaxOversizeKeys]] the set is cleared (a forgotten
+    * key costs one more load, never a wrong route). */
+  private val oversize = mutable.Set.empty[SegmentKey]
+  private val MaxOversizeKeys = 4096
   /** Miss counter driving the [[trueUpSizes]] throttle — atomic because
     * it ticks on the UNLOCKED miss path (a racing non-atomic var could
     * under-fire the periodic true-up arbitrarily, r12 ADVICE); the
@@ -86,6 +96,13 @@ class SegmentCache(val capacityBytes: Long, val policy: CachePolicy = LRU) {
     * three counters in its `modes` block so a cache-policy regression
     * shows up in the round record, not only in CacheSpec. */
   def evictions: Long = evictCount
+  /** Admissions the cache refused (capacity or priority), including
+    * keys refused outright because they can never fit. */
+  def refusals: Long = synchronized(refusalCount)
+  /** Bytes an eager policy loaded and then refused — storage reads that
+    * bought no residency. Zero under the lazy policies, which refuse
+    * before anything is read. */
+  def refusedBytes: Long = synchronized(refusedByteCount)
   def keys: Seq[SegmentKey] = entries.keys.toSeq
 
   // under withActive: stats estimation reads the THREAD's conf (CBO
@@ -165,17 +182,21 @@ class SegmentCache(val capacityBytes: Long, val policy: CachePolicy = LRU) {
     * `measureLoad` (a full materialization job) run UNLOCKED, so a slow
     * load never blocks concurrent hits on other keys. Two racers may load
     * the same key concurrently; the loser finds the key resident at
-    * admit time, discards its own copy, and returns the winner's. */
+    * admit time, discards its own copy, and returns the winner's. A key
+    * whose measured load once exceeded the whole capacity is refused
+    * without loading it again (see [[oversize]]). */
   def get(key: SegmentKey)(produce: => DataFrame): DataFrame = {
-    val hit: Option[DataFrame] = synchronized {
+    val (hit, neverFits) = synchronized {
       clock += 1
       entries.get(key) match {
         case Some(e) =>
           hitCount += 1; e.hits += 1; e.lastAccess = clock
-          Some(e.df)
+          (Some(e.df), false)
         case None =>
           missCount += 1
-          None
+          val nf = oversize.contains(key)
+          if (nf) refusalCount += 1
+          (None, nf)
       }
     }
     hit match {
@@ -188,6 +209,9 @@ class SegmentCache(val capacityBytes: Long, val policy: CachePolicy = LRU) {
         return df
       case None => ()
     }
+    // a key that can never fit is refused before any load: its frame
+    // comes back unpersisted and unmeasured, as a lazy refusal's does
+    if (neverFits) return produce
     // miss path — no lock held while Spark jobs run. Release any
     // admission-refused-but-materialized frames that have AGED OUT
     // (see [[drainCondemned]]'s age rule).
@@ -205,7 +229,12 @@ class SegmentCache(val capacityBytes: Long, val policy: CachePolicy = LRU) {
         // planner estimates
         df.persist(StorageLevel.MEMORY_AND_DISK)
         val c = measureLoad(df)
-        (measuredBytes(df).getOrElse(statsSize), c)
+        val measured = measuredBytes(df)
+        if (measured.exists(_ > capacityBytes)) synchronized {
+          if (oversize.size >= MaxOversizeKeys) oversize.clear()
+          oversize += key
+        }
+        (measured.getOrElse(statsSize), c)
       case _ => (statsSize, 0.0)
     }
     // True up resident sizes before the admission DECIDES — but not on
@@ -261,6 +290,7 @@ class SegmentCache(val capacityBytes: Long, val policy: CachePolicy = LRU) {
                 df.persist(StorageLevel.MEMORY_AND_DISK)
                 entries.put(key, Entry(df, size, 1L, clock, cost))
               } else {
+                refusedByteCount += size
                 // refused AFTER the eager load: unpersisting NOW would
                 // force the caller's one execution to re-read storage —
                 // the full segment bytes paid TWICE per refusal (measured:
@@ -387,6 +417,12 @@ class SegmentCache(val capacityBytes: Long, val policy: CachePolicy = LRU) {
     * cache untouched. Ties go to the newcomer (fresh data wins over an
     * equally-cold resident). */
   private def admit(key: SegmentKey, size: Long, costSecs: Double = 0.0): Boolean = {
+    val ok = makeRoom(key, size, costSecs)
+    if (!ok) refusalCount += 1
+    ok
+  }
+
+  private def makeRoom(key: SegmentKey, size: Long, costSecs: Double): Boolean = {
     if (size > capacityBytes) return false
     val candP = priority(key, hits = 1L, lastAccess = clock, sizeBytes = size, costSecs)
     val asc = entries.toSeq

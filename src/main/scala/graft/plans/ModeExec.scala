@@ -506,6 +506,11 @@ object ModeExec extends PredicateHelper {
       leases: mutable.Buffer[ScanLease],
       leasesSpanExecution: Boolean): LogicalPlan = {
 
+    // one heat scope for the whole query, subqueries included: a column
+    // set the query names twice (a CTE read by the main query and by a
+    // scalar subquery) is one access of the router's admission heat
+    val scope = new HybridScan.HeatScope
+
     // one substitution for every leaf kind: prune to what the plan above
     // actually reads (a V1 relation node always outputs the full table
     // schema — physical planning does the pruning — but the ROUTER must
@@ -575,12 +580,12 @@ object ModeExec extends PredicateHelper {
       leafTable(dir)(p).map(table =>
           (pred: Option[Expression], req: AttributeSet) =>
             substitute(p, pred, req)(router.scanMode(s, dir, table, _, _,
-              mode, leasesSpanExecution)))
+              mode, leasesSpanExecution, scope)))
         .orElse(partitionedLeaf(p).map { case (path, partCols, readSpec) =>
           (pred: Option[Expression], req: AttributeSet) =>
             substitute(p, pred, req)(router.scanPartitionedMode(s, path,
               segNameOf(path), _, _, partCols, mode, leasesSpanExecution,
-              readSpec)) })
+              readSpec, scope)) })
         .orElse(shardedLeaf(s)(p).map { case (root, spec, summary) =>
           (pred: Option[Expression], req: AttributeSet) =>
             // the zone-prunable conjuncts of the SAME predicate the router
@@ -594,7 +599,8 @@ object ModeExec extends PredicateHelper {
               summary.zones.filter(z =>
                 keep.contains(new org.apache.hadoop.fs.Path(z.path).toUri.getPath)))
             substitute(p, pred, req)(router.scanShardedMode(s, spec,
-              segNameOf(root), kept, zonePreds, _, _, mode, leasesSpanExecution)) })
+              segNameOf(root), kept, zonePreds, _, _, mode, leasesSpanExecution,
+              scope)) })
 
     // `required` accumulates every attribute an ancestor references, so a
     // leaf substitutes a scan of exactly the columns the query touches
@@ -736,7 +742,8 @@ object ModeExec extends PredicateHelper {
     * what lets a user see WHY lineitem zipped while orders pushed down.
     * Routing happens at plan time and the report is the NEW decisions
     * the plan produced. An explain IS an access: it ticks the session
-    * router's counters (same as `\routes`), and when that crosses the
+    * router's counters once per column set, like any query (same as
+    * `\routes`; a repeat reference's row says so), and when that crosses the
     * admission threshold it performs the admission a real query would —
     * under an eager policy (MeasuredWLFU) that is a real segment load at
     * explain time, deployment truth by design, not a free dry-run. */

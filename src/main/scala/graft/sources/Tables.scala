@@ -195,15 +195,20 @@ object Tables {
   }
 
   private def build(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") buildEvents(spark, dir) else read(spark, dir, name)
+    if (name == "events") buildEvents(spark, dir) else readParquet(spark, path(dir, name))
 
-  /** `spark.read.parquet` over the table, with the schema taken from
-    * [[schemas]] when this version of the table was inferred before. */
-  private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val p = path(dir, name)
-    val k = (p, writeMark(dir, name), graft.util.Artifacts.confDigest(spark))
+  /** `spark.read.parquet(p)`, with the schema taken from [[schemas]] when
+    * this version of `p` was inferred before. The version is `asOf` (a
+    * listing fingerprint the caller already holds) or, without one, the
+    * fingerprint of the files the new relation lists. */
+  private[graft] def readParquet(spark: SparkSession, p: String,
+      asOf: Option[String] = None): DataFrame = {
+    val k = (p, writeMarks.getOrDefault(pathKey(p), 0L).longValue,
+      graft.util.Artifacts.confDigest(spark))
     val known = schemas.synchronized(Option(schemas.get(k))).flatMap { case (fp, schema) =>
-      Some(spark.read.schema(schema).parquet(p)).filter(listing(_).fingerprint == fp)
+      if (asOf.exists(_ != fp)) None
+      else Some(spark.read.schema(schema).parquet(p))
+        .filter(df => asOf.nonEmpty || listing(df).fingerprint == fp)
     }
     known.getOrElse {
       val df = spark.read.parquet(p)
@@ -271,7 +276,7 @@ object Tables {
     // error on nanos data (and the testdata's events is the only nanos
     // producer in scope).
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventTime(read(s, d, "events"))
+    normalizeEventTime(readParquet(s, path(d, "events")))
   }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")

@@ -7,8 +7,8 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.cache.{LRU, MeasuredWLFU, SegmentCache}
-import graft.cache.HybridScan.{AdaptiveScanRouter, ModeCachingOnly, ScanLease,
-  ScanMode}
+import graft.cache.HybridScan.{AdaptiveScanRouter, HeatScope, ModeCachingOnly,
+  ModeHybrid, ModePullup, ModePushdownOnly, ScanLease, ScanMode}
 import graft.sources.{Catalog, ZoneMapPruner}
 import graft.sources.ZoneMapPruner.{Ge, Le}
 
@@ -17,7 +17,9 @@ import graft.sources.ZoneMapPruner.{Ge, Le}
   * refused states, in every mode and for both lease disciplines, the
   * routed rows equal the plain scan, and once every lease has closed the
   * router's slots are back to their budget and no refused frame is still
-  * pinned. */
+  * pinned. A pass of windows routed in one heat scope ticks each (unit,
+  * columns) key once, and a unit whose fingerprint rotates restarts its
+  * count. */
 class RouteLatticeSpec extends SparkSpec {
 
   /** An eager-admission cache that refuses exactly the segments
@@ -42,9 +44,11 @@ class RouteLatticeSpec extends SparkSpec {
     def needSorted: Seq[String]
     def region(u: Int): String
     def scan(r: AdaptiveScanRouter, mode: ScanMode, spans: Boolean,
-        lo: Int, hi: Int): ScanLease
+        lo: Int, hi: Int, scope: HeatScope): ScanLease
     def plain(lo: Int, hi: Int): DataFrame
     def ofUnit(df: DataFrame, u: Int): Boolean
+    /** The units a scan of `lo..hi` routes (after any zone pruning). */
+    def touched(lo: Int, hi: Int): Set[Int]
   }
 
   private lazy val partitioned: Layout = new Layout {
@@ -58,13 +62,14 @@ class RouteLatticeSpec extends SparkSpec {
     val needSorted = cols.sorted
     def region(u: Int) = s"day=${units(u)}"
     def scan(r: AdaptiveScanRouter, mode: ScanMode, spans: Boolean,
-        lo: Int, hi: Int) =
-      r.scanPartitionedMode(spark, path, segName, cols, window(lo, hi), "day",
-        mode, spans)
+        lo: Int, hi: Int, scope: HeatScope) =
+      r.scanPartitionedMode(spark, path, segName, cols, window(lo, hi), Seq("day"),
+        mode, spans, graft.cache.HybridScan.PartitionedRead.Parquet, scope)
     def plain(lo: Int, hi: Int) =
       spark.read.parquet(path).filter(window(lo, hi)).select(cols.map(col): _*)
     def ofUnit(df: DataFrame, u: Int) =
       df.queryExecution.analyzed.toString.contains(units(u))
+    def touched(lo: Int, hi: Int) = (lo to hi).toSet
   }
 
   private lazy val sharded: Layout = new Layout {
@@ -82,13 +87,16 @@ class RouteLatticeSpec extends SparkSpec {
     val units = zones.map(z => new org.apache.hadoop.fs.Path(z.path).getName)
     val needSorted = (cols :+ "o_orderkey").sorted
     def region(u: Int) = s"shard=${units(u)}"
-    def scan(r: AdaptiveScanRouter, mode: ScanMode, spans: Boolean,
-        lo: Int, hi: Int) = {
+    private def preds(lo: Int, hi: Int) = {
       val (a, b) = bounds(lo, hi)
-      r.scanShardedMode(spark, spec, segName, zones,
-        Seq(Ge("o_orderkey", a), Le("o_orderkey", b)), cols, window(lo, hi),
-        mode, spans)
+      Seq(Ge("o_orderkey", a), Le("o_orderkey", b))
     }
+    def scan(r: AdaptiveScanRouter, mode: ScanMode, spans: Boolean,
+        lo: Int, hi: Int, scope: HeatScope) =
+      r.scanShardedMode(spark, spec, segName, zones, preds(lo, hi), cols,
+        window(lo, hi), mode, spans, scope)
+    def touched(lo: Int, hi: Int) =
+      ZoneMapPruner.prune(zones, preds(lo, hi)).map(zones.indexOf(_)).toSet
     def plain(lo: Int, hi: Int) =
       Catalog.read(spark, spec).filter(window(lo, hi)).select(cols.map(col): _*)
     // the analyzed plan, not `inputFiles`: a plan-equal persisted frame
@@ -143,7 +151,8 @@ class RouteLatticeSpec extends SparkSpec {
         // (unless the cache refuses it)
         val admin = new AdaptiveScanRouter(cache, pushdownSlots = 0)
         c.resident.foreach { u =>
-          layout.scan(admin, ModeCachingOnly, spans = true, u, u).close()
+          layout.scan(admin, ModeCachingOnly, spans = true, u, u,
+            new HeatScope).close()
         }
         val router = new AdaptiveScanRouter(cache, pushdownSlots = c.slots,
           hotAdmitAfter = c.hotAdmitAfter, maxHotRegions = c.maxHot)
@@ -152,8 +161,11 @@ class RouteLatticeSpec extends SparkSpec {
           s"seen.${layout.kind}|${layout.segName}|" +
             (layout.needSorted :+ layout.region(u)).sorted.mkString(",") + s"=$n"
         }.mkString("\n"))
+        // both windows are one pass (one query's heat scope)
+        val pass = new HeatScope
+        val ticks0 = router.heatTicks
         c.windows.foreach { case (lo, hi) =>
-          val lease = layout.scan(router, c.mode, c.spans, lo, hi)
+          val lease = layout.scan(router, c.mode, c.spans, lo, hi, pass)
           // a plan-only caller closes before the frame executes
           val got =
             if (c.spans) try rows(lease.df) finally lease.close()
@@ -165,6 +177,13 @@ class RouteLatticeSpec extends SparkSpec {
           assert(cache.leasedRefusals == 0,
             s"$c: a refused frame is still leased after close")
         }
+        // forced modes never consult heat; the others tick each distinct
+        // (unit, columns) key of the pass once, overlap or not
+        val keys =
+          if (c.mode == ModePullup || c.mode == ModePushdownOnly) 0
+          else c.windows.flatMap { case (lo, hi) => layout.touched(lo, hi) }.toSet.size
+        assert(router.heatTicks - ticks0 == keys,
+          s"$c: ${router.heatTicks - ticks0} heat ticks for $keys distinct keys")
       } finally cache.invalidateAll()
     }
 
@@ -174,6 +193,44 @@ class RouteLatticeSpec extends SparkSpec {
 
   test("property: sharded lattice rows equal the plain scan, leases release") {
     check(sharded, seed = 4201L, samples = 12)
+  }
+
+  test("a unit whose fingerprint rotates restarts its heat count") {
+    val src = java.nio.file.Paths.get(
+      graft.sources.Layout.partitionedEvents(spark, sfDir).stripPrefix("file:"))
+    val dst = java.nio.file.Files.createTempDirectory("graft-lattice-rotate")
+    try {
+      java.nio.file.Files.walk(src).forEach { f =>
+        val to = dst.resolve(src.relativize(f).toString)
+        if (java.nio.file.Files.isDirectory(f)) java.nio.file.Files.createDirectories(to)
+        else if (!f.getFileName.toString.startsWith(".")) java.nio.file.Files.copy(f, to)
+      }
+      val path = dst.toString
+      val cols = Seq("event_type", "value", "day")
+      val days = Seq("2024-01-04", "2024-01-05")
+      // threshold out of reach: the counts are the point, not admission
+      val router = new AdaptiveScanRouter(new SegmentCache(1L << 30, LRU),
+        pushdownSlots = 4, hotAdmitAfter = 100)
+      def pass(): Unit = router.scanPartitionedMode(spark, path, "rot", cols,
+        col("day").between(lit(days.head).cast("date"), lit(days.last).cast("date")),
+        "day", ModeHybrid).close()
+      def count(day: String): Long = {
+        val key = s"seen.part|rot|${(cols :+ s"day=$day").sorted.mkString(",")}="
+        router.heatSnapshot.linesIterator.find(_.startsWith(key))
+          .map(_.stripPrefix(key).toLong).getOrElse(0L)
+      }
+      pass(); pass()
+      assert(days.map(count) == Seq(2L, 2L))
+      // an in-place rewrite of one day's file rotates that unit's key table
+      val f = java.nio.file.Files.list(dst.resolve(s"day=${days.head}"))
+        .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get
+      java.nio.file.Files.setLastModifiedTime(f, java.nio.file.attribute.FileTime
+        .fromMillis(java.nio.file.Files.getLastModifiedTime(f).toMillis + 5000))
+      graft.cache.HybridScan.invalidateListings(path)
+      pass()
+      assert(days.map(count) == Seq(1L, 3L),
+        s"the rotated day restarts at 1, the other continues: ${days.map(count)}")
+    } finally TempDirs.rm(dst.toFile)
   }
 
   test("property: generated cases cover every mode, lease discipline and refusal") {
