@@ -418,7 +418,9 @@ object HybridScan {
 
   /** One shared segment cache per (session, sf-dir); released (unpersist
     * of every resident segment) at the bench's family boundaries via the
-    * [[graft.util.SessionCache]] lifecycle like every other artifact.
+    * [[graft.util.SessionCache]] lifecycle. It stays on `SessionCache`,
+    * not [[graft.util.Artifacts]]: its admissions and heat are the
+    * session's own state, not data derived from the source files.
     *
     * Capacity and policy come from SESSION CONFS — the reference's
     * `exec.conf` knobs (`resources/config/exec.conf:3,5`: `CACHE_SIZE=8GB`,
@@ -455,6 +457,8 @@ object HybridScan {
       new SegmentCache(capacityBytes = cap, policy = pol)
     }
 
+  // per-session state (access history, slots), not derived data: stays
+  // on SessionCache like the segment caches above
   private val routers = new SessionCache[AdaptiveScanRouter](
     maxEntries = 4, releaseValue = (_: AdaptiveScanRouter) => ())
 

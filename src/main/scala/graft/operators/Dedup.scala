@@ -607,15 +607,12 @@ object Dedup {
     * pairwise candidates into a dedup decision.
     *
     * Like the IVF index, the assignment is an ingest-time artifact built
-    * once per (session, dir) and materialized — d08 (groups) and d09
-    * (survivor selection) share it instead of each re-running the LSH
-    * pipeline and the label-propagation rounds. Bounded LRU retention
-    * (see SessionCache for why weak keys can't work here). */
-  private val groupCache = new graft.util.SessionCache[DataFrame](
-    releaseValue = graft.util.SessionCache.releaseFrame, gcReclaimable = true)
-
+    * once per version of `documents` ([[graft.util.Artifacts]]) and
+    * materialized — d08 (groups) and d09 (survivor selection) share it
+    * instead of each re-running the LSH pipeline and the
+    * label-propagation rounds. */
   private def dupGroups(s: SparkSession, dir: String): DataFrame =
-    groupCache.getOrBuild(s, dir)({
+    graft.util.Artifacts.getOrBuild(s, "dup_groups", Seq(dir -> "documents"))({
       val edges = minhashCandidates(Tables.documents(s, dir))
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       // connectedComponents already returns a checkpointed frame; the
@@ -703,8 +700,8 @@ object Dedup {
     * naive per-doc split would have disagreed with their group's split,
     * i.e. exactly the leaks prevented.
     *
-    * Scale shape: groups are the cached d08 session artifact (built once
-    * per (session, dir), shared with d09); the docs↔groups join is the
+    * Scale shape: groups are the cached d08 artifact (built once per
+    * version of `documents`, shared with d09); the docs↔groups join is the
     * only corpus-sized shuffle and carries (doc_id, group_id) pairs; the
     * split columns are narrow md5 maps and the audit is a 2-row
     * aggregate. */
@@ -799,16 +796,13 @@ object Dedup {
 
   /** Exact near-dup id set (vectors with an earlier neighbor above
     * [[SemDedupTau]]) — the one O(n²) scan of the semantic-dedup family,
-    * computed once per (session, dir) and materialized: d11 anti-joins
-    * it for survivors and d12 reuses it (d11b's recall gate runs on the
-    * bounded sample instead — see [[SemDedupSampleK]]). Like the IVF
-    * index and the dup-group artifact, recomputing it per query would
-    * double the family's dominant cost for no semantic reason. */
-  private val semDupCache = new graft.util.SessionCache[DataFrame](
-    releaseValue = graft.util.SessionCache.releaseFrame, gcReclaimable = true)
-
+    * computed once per version of `embeddings` and materialized: d11
+    * anti-joins it for survivors and d12 reuses it (d11b's recall gate
+    * runs on the bounded sample instead — see [[SemDedupSampleK]]). Like
+    * the IVF index and the dup-group artifact, recomputing it per query
+    * would double the family's dominant cost for no semantic reason. */
   private def exactSemDups(s: SparkSession, dir: String): DataFrame =
-    semDupCache.getOrBuild(s, dir)({
+    graft.util.Artifacts.getOrBuild(s, "sem_dups", Seq(dir -> "embeddings"))({
       import s.implicits._
       val emb = Tables.embeddings(s, dir)
       val a = Tables.spread(emb.select($"vec_id".as("vec_a"), $"embedding".as("ea")))
@@ -1526,15 +1520,9 @@ object Dedup {
     } finally graft.util.SessionCache.releaseFrame(newRows)
   }
 
-  private val hashCorpusCache = new graft.util.SessionCache[(SparkSession, String)](
-    releaseValue = graft.plans.Bucketing.dropTable)
-
   private def d19CorpusTable(s: SparkSession, dir: String): String =
-    hashCorpusCache.getOrBuild(s, s"$dir#d19corpus") {
-      graft.plans.Bucketing.buildArtifactTable(s, "d19_hash_corpus", dir)(
-        writeHashCorpus(seenHashes(s, dir), _,
-          math.max(4, s.sparkContext.defaultParallelism)))
-    }._2
+    graft.util.Artifacts.table(s, "d19_hash_corpus", Seq(dir -> "documents"))(
+      writeHashCorpus(seenHashes(s, dir), _, math.max(4, s.sparkContext.defaultParallelism)))
 
   /** d19 — d16 against the PERSISTENT bucketed hash corpus: identical
     * rows (same oracle), but the seen side is a cross-run catalog table
@@ -1789,23 +1777,15 @@ object Dedup {
     s.catalog.refreshTable(table)
   }
 
-  /** The d18 index table is a catalog object, so its lifecycle rides the
-    * SessionCache like every other artifact — built once per (session,
-    * dir), DROPped at release points. Naming via
-    * [[graft.plans.Bucketing.sessionTableName]]: catalog tables are
-    * shared across sessions of one SparkContext, and two sessions (or
-    * two RACING builders — the per-attempt nonce) must never write to,
-    * or release, each other's index. */
-  private val bandIndexCache = new graft.util.SessionCache[(SparkSession, String)](
-    releaseValue = graft.plans.Bucketing.dropTable)
-
+  /** The d18 index table is a catalog object: a per-session table
+    * artifact ([[graft.util.Artifacts.table]]), built once per version of
+    * `documents` under a per-build-attempt name and DROPped at release
+    * points, so two sessions (or two racing builders) never write to, or
+    * release, each other's index. */
   private def d18IndexTable(s: SparkSession, dir: String): String =
-    bandIndexCache.getOrBuild(s, s"$dir#d18index") {
-      graft.plans.Bucketing.buildArtifactTable(s, "d18_band_index", dir)(
-        writeBandIndex(
-          Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(2)) === 0),
-          _, math.max(4, s.sparkContext.defaultParallelism)))
-    }._2
+    graft.util.Artifacts.table(s, "d18_band_index", Seq(dir -> "documents"))(
+      writeBandIndex(Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(2)) === 0),
+        _, math.max(4, s.sparkContext.defaultParallelism)))
 
   /** d18 — d17 against the PERSISTENT bucketed band index: identical
     * pairs (same oracle), but the seen side is a cross-run catalog table
@@ -2144,16 +2124,10 @@ object Dedup {
     }
   }
 
-  private val windowIndexCache = new graft.util.SessionCache[(SparkSession, String)](
-    releaseValue = graft.plans.Bucketing.dropTable)
-
   private def d23IndexTable(s: SparkSession, dir: String): String =
-    windowIndexCache.getOrBuild(s, s"$dir#d23index") {
-      graft.plans.Bucketing.buildArtifactTable(s, "d23_window_index", dir)(
-        writeWindowIndex(
-          Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(2)) === 0),
-          _, math.max(4, s.sparkContext.defaultParallelism)))
-    }._2
+    graft.util.Artifacts.table(s, "d23_window_index", Seq(dir -> "documents"))(
+      writeWindowIndex(Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(2)) === 0),
+        _, math.max(4, s.sparkContext.defaultParallelism)))
 
   /** d23 — substring spans against the PERSISTENT window index: the
     * ingestion-time form of d20, completing the incremental trilogy

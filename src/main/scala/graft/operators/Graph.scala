@@ -56,12 +56,14 @@ object Graph {
   private val SuppParity = 1
 
   /** Final rank vectors are ingest-time-style artifacts: checkpointed,
-    * bounded-LRU-retained per (session, dir, variant), released at
-    * family boundaries by the suite runner — the d08/IVF discipline.
-    * Everything intermediate (edge set, degrees, per-round vectors) is
-    * freed eagerly inside [[pagerank]] itself. */
-  private val rankCache = new graft.util.SessionCache[DataFrame](
-    releaseValue = graft.util.SessionCache.releaseFrame, gcReclaimable = true)
+    * built once per version of their source tables
+    * ([[graft.util.Artifacts]]), released at the suite runner's release
+    * points — the d08/IVF discipline. Everything intermediate (edge set,
+    * degrees, per-round vectors) is freed eagerly inside [[pagerank]]
+    * itself. Their sources are the tables [[purchaseEdges]] reads (g02
+    * adds `customer`). */
+  private def edgeSources(dir: String): Seq[(String, String)] =
+    Seq(dir -> "orders", dir -> "lineitem")
 
   /** Directed customer→supplier purchase edges: one edge per DISTINCT
     * (custkey, suppkey) pair appearing in orders⋈lineitem. The distinct
@@ -137,7 +139,7 @@ object Graph {
 
   /** g01 — classic PageRank, 3 iterations, over all nodes. */
   private def g01Pagerank(s: SparkSession, dir: String): DataFrame =
-    rankCache.getOrBuild(s, s"$dir#g01")({
+    graft.util.Artifacts.getOrBuild(s, "rank_g01", edgeSources(dir))({
       // checkpoint the edge list ONCE: the teleport vector's node set
       // derives from the same edges, and without the checkpoint its
       // distinct re-ran the full orders⋈lineitem join a second time
@@ -187,7 +189,7 @@ object Graph {
     * market segment", the seed-expansion selection device. */
   private def g02PprSeeds(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    rankCache.getOrBuild(s, s"$dir#g02")({
+    graft.util.Artifacts.getOrBuild(s, "rank_g02", edgeSources(dir) :+ (dir -> "customer"))({
       // same one-checkpoint discipline as g01: the node set must not
       // re-run the edge join
       val edges = purchaseEdges(s, dir).localCheckpoint()

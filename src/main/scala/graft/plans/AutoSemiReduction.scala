@@ -159,7 +159,9 @@ object AutoSemiReduction extends Rule[LogicalPlan] with PredicateHelper
     * data change — overwriting a table's files can leave a stale ratio
     * steering rewrites until the entry ages out of the LRU or the
     * session is replaced; re-probing per query would cost more than a
-    * stale, merely-heuristic gate can lose. */
+    * stale, merely-heuristic gate can lose. The ratios are this session's
+    * measurements of its own plans, not data derived from source files,
+    * so they stay on `SessionCache` rather than [[graft.util.Artifacts]]. */
   private val SelCacheMax = 256
   private val selCaches =
     new graft.util.SessionCache[java.util.LinkedHashMap[LogicalPlan, java.lang.Double]]()

@@ -47,18 +47,16 @@ object Bucketing {
 
   private val tableNonce = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Unique name for a session-scoped managed artifact table:
-    * `<prefix>_<session-hex>_<md5(dir) 6 bytes>_<nonce>`. The nonce makes
-    * every BUILD ATTEMPT's name unique — [[graft.util.SessionCache]] runs
-    * racing builds outside its monitor and releases the loser's value,
-    * so with a deterministic name the losing racer's DROP (and its
-    * mid-build overwrite) would take the winner's just-registered table
-    * with it. Unique names confine each racer's write and DROP to its
-    * own table; the session hash + dir id stay for debuggability, not
-    * identity. Failed in-JVM build attempts self-reclaim (use
-    * [[buildArtifactTable]]); a crashed JVM's orphans stay on disk —
-    * harmless (nonce'd names are never reused) and bounded by the
-    * artifact tables' small size. */
+  /** Name of one build attempt of a managed artifact table:
+    * `<prefix>_<session-hex>_<md5(dir) 6 bytes>_<nonce>`. The tables are
+    * per session ([[graft.util.Artifacts.table]]): a table name resolves
+    * in the session's current database, so sessions do not share them.
+    * The nonce makes every attempt's name unique: racing builds run
+    * outside the cache's monitor and the loser's table is dropped, which
+    * with a shared name would drop the winner's. The session hash and
+    * dir id are for reading a catalog listing, not for identity. A failed
+    * attempt reclaims its own table ([[buildArtifactTable]]); a crashed
+    * JVM's orphans stay on disk, never reused and small. */
   def sessionTableName(prefix: String, s: SparkSession, dir: String): String = {
     val dirId = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
@@ -66,8 +64,8 @@ object Bucketing {
       "_" + dirId + "_" + tableNonce.incrementAndGet()
   }
 
-  /** The matching [[graft.util.SessionCache]] release hook: DROP the
-    * artifact table (managed — the location goes with it). */
+  /** The artifact tables' release hook: DROP the table (managed — the
+    * location goes with it). */
   val dropTable: ((SparkSession, String)) => Unit = { case (s, t) =>
     try s.sql(s"DROP TABLE IF EXISTS $t") catch { case _: Throwable => () } }
 
@@ -76,7 +74,7 @@ object Bucketing {
     * error propagates. Without this, nonce'd names would turn every
     * failed-then-retried build into an orphan (the retry gets a new
     * name, so no later reclaim ever targets the failed one's). Returns
-    * the (session, name) pair the artifact SessionCaches store. */
+    * the (session, name) pair [[dropTable]] releases. */
   def buildArtifactTable(s: SparkSession, prefix: String, dir: String)(
       write: String => Unit): (SparkSession, String) = {
     val name = sessionTableName(prefix, s, dir)

@@ -1,12 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 import graft.{GraftSession, SparkEntry}
-import graft.sources.Tables
 
-/** Dev-only: print the PQ/ADC recall@3 value (s09 only exposes the
-  * boolean floor check). Run: sbt "runMain graft.tools.ProfilePqRecall". */
+/** Dev-only: print the recall@3 of the IVF, PQ/ADC and IVF-PQ indexes
+  * (s06, s09 and s11 only expose the boolean floor check).
+  * Run: sbt "runMain graft.tools.ProfilePqRecall [dir...]". */
 object ProfilePqRecall {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
@@ -15,8 +13,8 @@ object ProfilePqRecall {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     dirs.foreach { dir =>
-      Seq("s08_ann_pq", "s10_ann_ivfpq").foreach { entry =>
-        // the SAME ground-truth definition the s09/s11 gates use
+      Seq("s04_ann_ivf", "s08_ann_pq", "s10_ann_ivfpq").foreach { entry =>
+        // the SAME ground-truth definition the s06/s09/s11 gates use
         val approx = SparkEntry.queries(entry)(spark, dir).select($"qid", $"nid")
         val r = graft.operators.Similarity.recallAt3(spark, dir, approx)
           .head().getAs[Double]("recall")

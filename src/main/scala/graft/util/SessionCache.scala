@@ -7,12 +7,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   *
   * Its values are built and held per session: a second session asking
   * for the same key builds its own. That fits state that IS per session
-  * (a router's heat, a segment cache's admissions) and the operator
-  * artifacts not yet moved; an artifact every session would compute
-  * alike from the same source files belongs in [[Artifacts]], which
-  * builds it once per source version and keeps each session's use of it
-  * in one of these caches (so [[SessionCache.releaseAll]] releases those
-  * uses too).
+  * (a router's heat, a segment cache's admissions, the semi-reduction
+  * selectivities); an artifact every session would compute alike from
+  * the same source files belongs in [[Artifacts]], which builds it once
+  * per source version and keeps each session's use of it, and its
+  * per-session tables, in two of these caches (so
+  * [[SessionCache.releaseAll]] releases those too).
   *
   * Weak session keys do NOT work when the cached value is a DataFrame:
   * the value strongly references its SparkSession, which re-reaches the
@@ -41,19 +41,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * idempotent and side-effect-free, so the duplicate work is benign —
   * but the loser's value IS released, it would otherwise leak storage).
   */
-/** @param gcReclaimable true iff `releaseValue`'s entire effect is also
-  *        achieved by GC + ContextCleaner reclaiming the value (pure
-  *        `releaseFrame` hooks over checkpointed frames): such values
-  *        may be held WEAKLY on the deferred-eviction list, so an
-  *        unreleased eviction can never pin storage for the JVM
-  *        lifetime. Leave false (strong deferral, released at the next
-  *        quiescence point) when the hook has side effects GC cannot
-  *        perform — dropping a catalog table, re-pointing a temp view:
-  *        a weakly-held value could be collected first and the hook
-  *        silently skipped, leaking the external resource. */
 final class SessionCache[V](maxEntries: Int = 8,
-    releaseValue: V => Unit = (_: V) => (),
-    gcReclaimable: Boolean = false) {
+    releaseValue: V => Unit = (_: V) => ()) {
 
   SessionCache.register(this)
 
@@ -71,27 +60,14 @@ final class SessionCache[V](maxEntries: Int = 8,
   // values fall back to the old drop-the-reference/GC path rather than
   // pinning storage forever. Inline eager release remains only for the
   // losing racer below (whose value was never handed out).
-  // Deferred-list retention per the `gcReclaimable` contract: WEAK for
-  // values GC fully reclaims (a deferred frame must not be pinned for
-  // the JVM lifetime when no release point ever comes — the drain skips
-  // cleared refs and ContextCleaner has already done the work), STRONG
-  // for values whose release hook has side effects GC cannot perform
-  // (the hook MUST run at the next quiescence point or the external
-  // resource leaks).
-  private final class Deferred(val session: SparkSession, v: V) {
-    private val weak =
-      if (gcReclaimable) new java.lang.ref.WeakReference[V](v) else null
-    private val strong: V = if (gcReclaimable) null.asInstanceOf[V] else v
-    def get: V = if (gcReclaimable) weak.get() else strong
-  }
   private val DeferredCap = 64
-  private val deferred = new java.util.ArrayDeque[Deferred]()
+  private val deferred = new java.util.ArrayDeque[(SparkSession, V)]()
   private val map = new java.util.LinkedHashMap[(SparkSession, String), V](
     16, 0.75f, /*accessOrder=*/ true) {
     override def removeEldestEntry(
         e: java.util.Map.Entry[(SparkSession, String), V]): Boolean = {
       if (size() <= maxEntries) return false
-      deferred.addLast(new Deferred(e.getKey._1, e.getValue()))
+      deferred.addLast((e.getKey._1, e.getValue()))
       while (deferred.size() > DeferredCap) deferred.pollFirst() // → GC path
       true
     }
@@ -130,19 +106,15 @@ final class SessionCache[V](maxEntries: Int = 8,
     }
     val dit = deferred.iterator()
     while (dit.hasNext) {
-      val d = dit.next()
-      if (d.session eq s) {
-        val v = d.get
-        if (v != null) releaseQuietly(v) // cleared ref: GC path already took it
-        dit.remove()
-      }
+      val (ds, v) = dit.next()
+      if (ds eq s) { releaseQuietly(v); dit.remove() }
     }
   }
 
   /** Deferred (capacity-evicted, not yet released) values for `s` (spec hook). */
   def deferredEntries(s: SparkSession): Int = synchronized {
     var n = 0
-    deferred.forEach(d => if ((d.session eq s) && d.get != null) n += 1)
+    deferred.forEach(d => if (d._1 eq s) n += 1)
     n
   }
 

@@ -11,15 +11,7 @@ import graft.sources.Tables
   * sessions whose confs change what they compute. */
 class ArtifactsSpec extends SparkSpec {
 
-  private def copyOf(src: String): String = {
-    val from = Paths.get(src)
-    val to = Files.createTempDirectory("graft-artifacts")
-    Files.walk(from).forEach { f =>
-      val t = to.resolve(from.relativize(f).toString)
-      if (Files.isDirectory(f)) Files.createDirectories(t) else Files.copy(f, t)
-    }
-    to.toString
-  }
+  private def copyOf(src: String): String = TempDirs.copyTree(src, "graft-artifacts")
 
   private val q11 = operators.TpchCorpus.sql(11)
   private def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().map(_.toSeq).toSeq
@@ -57,6 +49,17 @@ class ArtifactsSpec extends SparkSpec {
     assert(!partsuppPlan(s).sameResult(partsuppPlan(plain)))
     // its own CTE text, on its own views and confs
     assert(rows(df) == rows(s.sql(q11)))
+  }
+
+  test("a conf set back to its default keeps a session on the shared partsupp") {
+    val dir = copyOf(sfDir)
+    Engine.executeQuery(spark.newSession(), dir, q11).collect()
+    val s = spark.newSession()
+    // a scoped conf change undone with set(prev), as the engine's brackets do
+    val k = "spark.sql.autoBroadcastJoinThreshold"
+    s.conf.set(k, s.conf.get(k))
+    assert(jobsDuring(Engine.executeQuery(s, dir, q11))._2 == 0,
+      "the restored conf built a second partsupp")
   }
 
   test("a same-path rewrite with another schema is seen by a new session") {

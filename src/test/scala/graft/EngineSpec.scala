@@ -170,16 +170,7 @@ class EngineSpec extends SparkSpec {
   }
 
   /** A private copy of a testdata dir (graft writers rewrite in place). */
-  private def copyOf(src: String): String = {
-    val from = java.nio.file.Paths.get(src)
-    val to = java.nio.file.Files.createTempDirectory("graft-engine-copy")
-    java.nio.file.Files.walk(from).forEach { f =>
-      val t = to.resolve(from.relativize(f).toString)
-      if (java.nio.file.Files.isDirectory(f)) java.nio.file.Files.createDirectories(t)
-      else java.nio.file.Files.copy(f, t)
-    }
-    to.toString
-  }
+  private def copyOf(src: String): String = TempDirs.copyTree(src, "graft-engine-copy")
 
   test("a lineitem rewrite rotates the derived partsupp: q11 reads the new version") {
     import org.apache.spark.sql.functions._

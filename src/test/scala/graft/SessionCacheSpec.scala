@@ -2,8 +2,9 @@ package graft
 
 import graft.util.SessionCache
 
-/** The artifact cache backing IVF assignment and dup-group reuse:
-  * hit-returns-cached, bounded LRU eviction, access refreshes recency. */
+/** The per-session cache behind the router and segment state and behind
+  * `Artifacts`' per-session uses and tables: hit-returns-cached, bounded
+  * LRU eviction, access refreshes recency. */
 class SessionCacheSpec extends SparkSpec {
 
   test("hits return the cached value without rebuilding") {

@@ -22,4 +22,16 @@ object TempDirs {
       .filter(f => f.isFile && !f.getName.startsWith(".")).foreach { f =>
         Files.copy(f.toPath, dst.resolve(f.getName), StandardCopyOption.COPY_ATTRIBUTES)
       }
+
+  /** A private copy of the tree under `src` in a new temp dir, named
+    * `prefix...` (graft writers rewrite a table dir in place). */
+  def copyTree(src: String, prefix: String): String = {
+    val from = java.nio.file.Paths.get(src)
+    val to = Files.createTempDirectory(prefix)
+    Files.walk(from).forEach { f =>
+      val t = to.resolve(from.relativize(f).toString)
+      if (Files.isDirectory(f)) Files.createDirectories(t) else Files.copy(f, t)
+    }
+    to.toString
+  }
 }
