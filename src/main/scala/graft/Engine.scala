@@ -14,6 +14,14 @@ import graft.sources.Tables
   * Spark's SQL surface is a strict superset of the reference's accepted
   * grammar (`CalcitePlanJsonDeserializer.cpp:68-89`), so every query the
   * reference runs is accepted unchanged.
+  *
+  * The engine matches no query text and swaps no view: the only temp
+  * views it creates are the table registrations and the derived
+  * `partsupp`. Whether an under-split scan is fanned out across the cores
+  * is decided in the planner, for every text alike, by
+  * [[graft.plans.SpreadScans]]; so a concurrent reader of the session
+  * (a JDBC client on the shared single session) always sees the plain
+  * views.
   */
 object Engine {
 
@@ -90,71 +98,6 @@ object Engine {
     }
   }
 
-  // ---- co-join probe spread (r18, r17 verdict item 1) -------------------
-  // The reference's synthetic co-join corpus (hv01/hv02 =
-  // co-join-2/3-table.sql) probes the FULL lineitem fact through
-  // broadcast joins into a COUNT aggregate — on an under-split input
-  // (sf0.1's single-row-group parquet; any scan offering fewer splits
-  // than cores) the entire probe pipeline executes as ONE task: scan →
-  // BHJ(s) → partial agg on one core, the suite's most expensive entry
-  // (hv02 ~3.9 s, ~4× its parallel cost). The engine recognizes exactly
-  // these two shipped texts (the partsuppCte discipline: matched against
-  // the corpus resources, never duplicated here) and analyzes them with
-  // the lineitem view SPREAD — [[Tables.spread]] is a no-op whenever the
-  // scan already offers >= parallelism splits, so at cluster scale this
-  // adds nothing and locally it is one narrow exchange of the pruned
-  // probe columns. The opt-in is per-TEXT, not a blanket view-layer
-  // spread, for a CORRECTNESS reason beyond the measured q35-class
-  // regressions: corpus measures are raw DOUBLEs, and the driver's
-  // result hash is ulp-sensitive (the r12 fs02 incident: a 9e-7
-  // difference on a 5.6e8 sum went red), so re-ordering partial sums
-  // under e.g. h01's sum(l_extendedprice*(1-l_discount)) is a hash
-  // lottery per query per SF. The co-join probes aggregate COUNTs only
-  // — partial-aggregation order cannot change any output value.
-  // hv02 ONLY: the 3-table probe (two BHJs + fan-out into the aggregate)
-  // repays the spread exchange 3.2× (A/B 4.04 → 1.26 s); hv01's single
-  // BHJ + count does NOT — its whole probe is one hash lookup per row,
-  // cheaper than the exchange it would buy (A/B 0.65 → 1.11 s), so it
-  // stays on the plain path.
-  private lazy val coJoinTexts: Set[String] =
-    Seq("/graft/tpch/hv02.sql").flatMap { p =>
-      Option(getClass.getResourceAsStream(p)).map { in =>
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      }
-    }.toSet
-
-  /** Analyze `analyzeSql` (the text after any CTE strip), with the
-    * lineitem view spread iff the ORIGINAL text is one of the shipped
-    * co-join probes. Caller holds the registration lock; the plain view
-    * is restored before returning (analysis is eager, so the returned
-    * frame keeps the spread plan while no other query can observe the
-    * swapped view). A restore that fails is logged and leaves the
-    * session unregistered (`r.dir` reset, so its next query re-points
-    * every view); an analysis failure still surfaces as itself. */
-  private def analyzeWithProbeSpread(spark: SparkSession, dir: String,
-      r: Registration, original: String, analyzeSql: String): DataFrame =
-    if (!coJoinTexts.contains(original)) spark.sql(analyzeSql)
-    else {
-      Tables.spread(Tables.lineitem(spark, dir))
-        .createOrReplaceTempView("lineitem")
-      try spark.sql(analyzeSql)
-      finally {
-        try restoreProbeView(spark, dir)
-        catch { case t: Throwable =>
-          org.slf4j.LoggerFactory.getLogger("graft.Engine").warn(
-            s"restoring the lineitem view over $dir failed; its views are re-pointed " +
-              "on the session's next query", t)
-          r.dir = null
-        }
-      }
-    }
-
-  /** Re-point the session's lineitem view at the plain relation (a spec
-    * hook replaces it to force a failing restore). */
-  @volatile private[graft] var restoreProbeView: (SparkSession, String) => Unit =
-    (spark, dir) => Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
-
   /** Register the scale-factor directory's tables (skipped when this
     * session's views already point at `dir`) and run one SQL query.
     *
@@ -229,20 +172,16 @@ object Engine {
       case None =>
         r.synchronized {
           ensureRegistered(spark, dir, r)
-          analyzeWithProbeSpread(spark, dir, r, sql, sql)
+          spark.sql(sql)
         }
       case Some((block, body)) =>
-        // register BEFORE the artifact key is taken: registration sets
-        // session confs the key digests (events' nanosAsLong), so a key
-        // taken before it would differ from every later query's and
-        // build the artifact twice. A miss ANALYZES the CTE body under
-        // the lock (cheap plan resolution; once analyzed it is immune to
-        // later view swaps) but runs the expensive materialization
-        // OUTSIDE it — the first CTE query used to hold the registration
-        // lock for the entire lineitem aggregation, stalling even a
-        // concurrent SELECT 1 at planning. Same-key racing builds are
-        // safe: Artifacts keeps one winner and releases the other.
-        r.synchronized(ensureRegistered(spark, dir, r))
+        // a miss ANALYZES the CTE body under the lock (cheap plan
+        // resolution; once analyzed it is immune to later view swaps)
+        // but runs the expensive materialization OUTSIDE it — the first
+        // CTE query used to hold the registration lock for the entire
+        // lineitem aggregation, stalling even a concurrent SELECT 1 at
+        // planning. Same-key racing builds are safe: Artifacts keeps one
+        // winner and releases the other.
         val art = partsupp(spark, dir, r.synchronized {
           ensureRegistered(spark, dir, r)
           spark.sql(body)
@@ -253,7 +192,7 @@ object Engine {
           // `dir` before registering the view and analyzing the text
           ensureRegistered(spark, dir, r)
           art.createOrReplaceTempView("partsupp")
-          analyzeWithProbeSpread(spark, dir, r, sql, sql.replace(block, ""))
+          spark.sql(sql.replace(block, ""))
         }
     }
   }

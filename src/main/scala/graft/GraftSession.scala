@@ -11,9 +11,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * the Spark-native equivalents are shuffle partitioning and AQE. The
   * engine's predicate transfer (SURVEY.md §4.1) is the injected optimizer
   * rule [[graft.plans.AutoSemiReduction]], not the runtime bloom filters
-  * enabled below (see the note there). These settings are the ones that
-  * transfer to a real cluster: on 1000 executors only `master` and the
-  * partition counts change.
+  * enabled below (see the note there). When an under-split scan is fanned
+  * out across the `cpus` cores is decided by one injected physical rule,
+  * [[graft.plans.SpreadScans]], for every query of the session alike; it
+  * adds no conf. These settings are the ones that transfer to a real
+  * cluster: on 1000 executors only `master` and the partition counts
+  * change, and scans that offer that many splits are never spread.
   */
 object GraftSession {
 
@@ -56,6 +59,15 @@ object GraftSession {
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.parquet.aggregatePushdown", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // `events.ts` has shipped as parquet TIMESTAMP(NANOS), which the
+      // vectorized reader rejects; under this flag it surfaces as raw-nanos
+      // LongType and `Tables.normalizeEventTime` converts it. Set here, once
+      // for the context, not by the first `events` read: a session conf
+      // changed mid-life rotates `Artifacts.confDigest`, so a session that
+      // had read `events` keyed every shared schema and artifact apart from
+      // one that had not. Side effect: any other TIMESTAMP(NANOS) column
+      // also reads as LongType instead of failing.
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
       // managed (bucketed) tables land outside the repo checkout

@@ -104,11 +104,14 @@ object CosineSimilarity {
   * `builder.withExtensions(new GraftExtensions)` — after which
   * `SELECT cosine_sim(a.embedding, b.embedding) ...` parses anywhere SQL is
   * accepted, mirroring how the reference exposes Gandiva-compiled scalars to
-  * its SQL surface — plus the automatic predicate-transfer optimizer rule
-  * (`graft.plans.AutoSemiReduction`). */
+  * its SQL surface — plus the engine's two planner rules: the automatic
+  * predicate-transfer optimizer rule (`graft.plans.AutoSemiReduction`)
+  * and the physical rule that spreads under-split scans across the cores
+  * (`graft.plans.SpreadScans`). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => graft.plans.AutoSemiReduction)
+    ext.injectQueryPostPlannerStrategyRule(graft.plans.SpreadScans(_))
     ext.injectFunction((
       new FunctionIdentifier("cosine_sim"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),

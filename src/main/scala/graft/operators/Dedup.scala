@@ -31,6 +31,9 @@ object Dedup {
     * bodies re-evaluate captured subexpressions per element, so shingling
     * over an unbound split() would re-run it O(words) times per row. */
   private[operators] def withSh3(docs: DataFrame): DataFrame =
+    // spread by hand: SpreadScans refuses d03/d06/d06b/d15 by (b), their LSH
+    // buckets collect_list the doc ids in arrival order; r20 d03 0.62 s with
+    // the call, 0.68 s without
     Tables.spread(docs)
       .withColumn("w", words(col("text")))
       .withColumn("sh", shingles(col("w"), 3))
@@ -216,6 +219,9 @@ object Dedup {
   /** SimHash fingerprints for any (doc_id, text) frame; `bits` ∈ {32, 64}
     * (64 is the 100 TB width — see [[graft.functions.SimHash]]). */
   def simhashes(docs: DataFrame, bits: Int = SimhashBits): DataFrame =
+    // spread by hand: SpreadScans refuses d05/d05b by (b), their bands
+    // collect_list the doc ids in arrival order; r20 d05 0.76 s with the call,
+    // 0.93 s without
     Tables.spread(docs)
       .select(col("doc_id"),
         graft.functions.SimHash.column(words(col("text")), bits).as("simhash"))
@@ -479,9 +485,9 @@ object Dedup {
   private def d07EmbedNearDup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
-    // the streamed (non-broadcast) side must be spread across cores — the
-    // n² cosine loop runs in its scan stage
-    val a = Tables.spread(emb.select($"vec_id".as("vec_a"), $"embedding".as("ea")))
+    // the n² cosine loop runs in the streamed side's scan stage, which
+    // graft.plans.SpreadScans spreads across the cores (nested-loop join)
+    val a = emb.select($"vec_id".as("vec_a"), $"embedding".as("ea"))
     val b = emb.select($"vec_id".as("vec_b"), $"embedding".as("eb"))
     a.join(b, $"vec_a" < $"vec_b")
       .withColumn("cosine", graft.functions.CosineSimilarity.column($"ea", $"eb"))
@@ -802,16 +808,19 @@ object Dedup {
     * the IVF index and the dup-group artifact, recomputing it per query
     * would double the family's dominant cost for no semantic reason. */
   private def exactSemDups(s: SparkSession, dir: String): DataFrame =
-    graft.util.Artifacts.getOrBuild(s, "sem_dups", Seq(dir -> "embeddings"))({
-      import s.implicits._
-      val emb = Tables.embeddings(s, dir)
-      val a = Tables.spread(emb.select($"vec_id".as("vec_a"), $"embedding".as("ea")))
-      val b = emb.select($"vec_id".as("vec_b"), $"embedding".as("eb"))
-      a.join(b, $"vec_a" < $"vec_b")
-        .filter(graft.functions.CosineSimilarity.column($"ea", $"eb") > SemDedupTau)
-        .select($"vec_b".as("dup_id")).distinct()
-        .localCheckpoint()
-    })
+    graft.util.Artifacts.getOrBuild(s, "sem_dups", Seq(dir -> "embeddings"))(
+      semDupScan(s, dir).localCheckpoint())
+
+  /** The O(n²) scan [[exactSemDups]] materializes. */
+  private[graft] def semDupScan(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val emb = Tables.embeddings(s, dir)
+    val a = emb.select($"vec_id".as("vec_a"), $"embedding".as("ea"))
+    val b = emb.select($"vec_id".as("vec_b"), $"embedding".as("eb"))
+    a.join(b, $"vec_a" < $"vec_b")
+      .filter(graft.functions.CosineSimilarity.column($"ea", $"eb") > SemDedupTau)
+      .select($"vec_b".as("dup_id")).distinct()
+  }
 
   private def d11SemDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -867,7 +876,7 @@ object Dedup {
       .orderBy(md5($"vec_id".cast("string")), $"vec_id")
       .limit(SemDedupSampleK)
       .select($"vec_id".as("b"), $"embedding".as("eb"))
-    val corpus = Tables.spread(emb.select($"vec_id".as("a"), $"embedding".as("ea")))
+    val corpus = emb.select($"vec_id".as("a"), $"embedding".as("ea"))
     corpus.join(broadcast(sample), $"a" < $"b")
       .filter(graft.functions.CosineSimilarity.column($"ea", $"eb") > SemDedupTau)
       .select($"b".as("dup_id")).distinct()
@@ -949,6 +958,8 @@ object Dedup {
   private def d13ChunkDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ChunkWords = 20
+    // spread by hand: SpreadScans refuses by (b), a row_number window ranks
+    // its ties by arrival order; r20 d13 0.47 s with the call, 0.48 s without
     val chunks = Tables.spread(Tables.documents(s, dir))
       .select($"doc_id", split($"text", " ").as("ws"))
       .filter(size($"ws") > 0)
@@ -1844,6 +1855,9 @@ object Dedup {
     * carries hashes and integer ids over corpus-words-sized data — never
     * text — and there is no all-pairs stage anywhere. */
   private def d20SubstringSpans(s: SparkSession, dir: String): DataFrame =
+    // spread by hand: SpreadScans refuses by (b), the island merge's lag
+    // window reads rows in arrival order on ties; r20 d20 0.70 s with the
+    // call, 0.76 s without
     substringSpans(Tables.spread(Tables.documents(s, dir)), SpanWindow)()
       .orderBy(col("doc_id"), col("span_start"))
 
@@ -1929,6 +1943,8 @@ object Dedup {
     * interval list, no word-level shuffle anywhere. The cuts side joins
     * on doc_id (AQE broadcasts it when duplication is rare). */
   private def d21SpanRemoval(s: SparkSession, dir: String): DataFrame =
+    // spread by hand: SpreadScans refuses by (b), a row_number window ranks
+    // its ties by arrival order; r20 d21 0.82 s with the call, 0.80 s without
     spanRemoval(Tables.spread(Tables.documents(s, dir)), SpanWindow)
       .orderBy(col("doc_id"))
 
@@ -2140,6 +2156,8 @@ object Dedup {
     * answers only "seen before". */
   private def d23IndexedSpans(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    // spread by hand: SpreadScans refuses by (b), the island merge's lag
+    // window; r20 d23 0.57 s with the call, 0.80 s without
     spansAgainstIndex(s, d23IndexTable(s, dir),
       Tables.spread(
         Tables.documents(s, dir).filter(pmod($"doc_id", lit(2)) === 1)))

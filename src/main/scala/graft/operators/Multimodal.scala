@@ -83,8 +83,7 @@ object Multimodal {
     * scaler). */
   private def m02DecodeFeatures(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val media: Dataset[MediaRow] =
-      graft.sources.Tables.spread(mediaTable(s, dir)).as[MediaRow]
+    val media: Dataset[MediaRow] = mediaTable(s, dir).as[MediaRow]
     media.mapPartitions { rows =>
       // per-partition setup — the reason this is mapPartitions: one
       // digest instance per partition (digest() resets it per call),

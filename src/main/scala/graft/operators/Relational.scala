@@ -28,10 +28,10 @@ object Relational {
     * `transform/PrePToPTransformerUtil.cpp:62-124`). */
   private def q01GroupAgg(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // spread before the partial aggregate (r17): the single-row-group
-    // scan otherwise runs every decimal-exact partial sum on one core;
-    // spreading parallelizes the decimal math across the session's cores
-    // (measured 0.92 → 0.81 s at sf0.1) and is a no-op at cluster scale
+    // spread by hand: graft.plans.SpreadScans refuses this site by (b), the
+    // double sum and avgs above the scan (this exchange predates the rule and
+    // q01's oracle rows are pinned with it); r17 measured 0.92 → 0.81 s
+    // spread, r20 q01 1.14 s with the call, 1.01 s without.
     Tables.spread(Tables.lineitem(s, dir)
         .filter($"l_shipdate" <= lit("1998-09-02").cast("timestamp")))
       .groupBy($"l_returnflag", $"l_linestatus")
@@ -948,8 +948,11 @@ object Relational {
     * identical plan shape. */
   private def q35Percentiles(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // spread: exact-percentile partials buffer value arrays, so the
-    // single-split scan would otherwise aggregate on one core
+    // spread by hand: exact-percentile partials buffer value arrays, so the
+    // single-split scan would otherwise aggregate on one core. SpreadScans
+    // refuses by (b) (percentile is not in its order- insensitive set) and (c)
+    // (no per-row work before the aggregate); r20 q35 2.59 s with the call,
+    // 3.05 s without
     Tables.spread(Tables.lineitem(s, dir)
         .select($"l_returnflag", $"l_extendedprice", $"l_quantity"))
       .groupBy($"l_returnflag")
@@ -979,6 +982,9 @@ object Relational {
   private def q37PercentilesApprox(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val li = Tables.lineitem(s, dir).select($"l_returnflag", $"l_extendedprice")
+    // spread by hand: SpreadScans refuses by (b), percentile_approx's sketch
+    // is not in its order-insensitive set; r20 q37 1.28 s with the call, 1.24
+    // s without
     val sketched = Tables.spread(li)
       .groupBy($"l_returnflag")
       .agg(
@@ -1508,14 +1514,13 @@ object Relational {
   private def q43SaltedJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     graft.plans.SkewJoin.salted(
-      // project to the join/salt/agg columns and spread across cores
-      // BEFORE salting (guide §2.3/§2.6; r17): the single-row-group scan
-      // otherwise runs salt + probe + partial agg on ONE core — measured
-      // 2.08 → 1.34 s at sf0.1 (ProfileR17 q43_xx vs q43_xx_spread). At
-      // cluster scale spread() is a no-op (splits ≥ cores) and the
-      // projection is what column pruning reaches anyway.
-      Tables.spread(Tables.lineitem(s, dir)
-        .select($"l_orderkey", $"l_linenumber", $"l_extendedprice")),
+      // project to the join/salt/agg columns (guide §2.3/§2.6). r17's A/B
+      // measured 2.08 → 1.34 s with a spread here; r20 measured the reverse
+      // (2.29 s spread, 1.72 s not), and graft.plans.SpreadScans refuses the
+      // site (the salt hash is not per-row work it counts), so the scan is not
+      // spread.
+      Tables.lineitem(s, dir)
+        .select($"l_orderkey", $"l_linenumber", $"l_extendedprice"),
       Tables.orders(s, dir).select($"o_orderkey", $"o_orderpriority"),
       $"l_orderkey", $"o_orderkey",
       // varies WITHIN a join key — salting by the key itself would keep

@@ -68,7 +68,9 @@ object Similarity {
     val emb = withNorm(Tables.embeddings(s, dir))
     val q = emb.filter($"vec_id" < 20)
       .select($"vec_id".as("qid"), $"embedding".as("qe"), $"norm".as("qn"))
-    // corpus side streams through its scan stage — spread it across cores
+    // corpus side streams through its scan stage — spread by hand: SpreadScans
+    // refuses by (b), a row_number window ranks its ties by arrival order; r20
+    // s01 0.38 s with the call, 0.70 s without
     val n = Tables.spread(
       emb.select($"vec_id".as("nid"), $"embedding".as("ne"), $"norm".as("nn")))
     val w = Window.partitionBy($"qid").orderBy($"cosine".desc, $"nid")
@@ -145,6 +147,8 @@ object Similarity {
     val emb = Tables.embeddings(s, dir)
     val q = emb.filter($"vec_id" < 20)
       .select($"vec_id".as("qid"), $"embedding".as("qe"))
+    // spread by hand: SpreadScans refuses by (b), a row_number window ranks
+    // its ties by arrival order; r20 s03 0.26 s with the call, 0.33 s without
     val n = Tables.spread(emb.select($"vec_id".as("nid"), $"embedding".as("ne")))
     val w = Window.partitionBy($"qid").orderBy($"cosine".desc, $"nid")
     broadcast(q).crossJoin(n)
@@ -199,6 +203,10 @@ object Similarity {
       import s.implicits._
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
+      // spread by hand: the k-means fit reads its input through RDD jobs with
+      // no exchange, which AQE (and so SpreadScans) never plans, and k-means||
+      // seeds per partition; the build (s04's first run) took 6.26 s with the
+      // call, 5.24 s without (r20)
       val emb = Tables.spread(Tables.embeddings(s, dir))
       val fit = emb.withColumn("features", array_to_vector($"embedding"))
       val model = new KMeans().setK(16).setSeed(42L).setMaxIter(5).fit(fit)
@@ -266,6 +274,9 @@ object Similarity {
       val emb = Tables.embeddings(s, dir)
       val q = emb.filter($"vec_id" < 50)
         .select($"vec_id".as("qid"), $"embedding".as("qe"))
+      // spread by hand: SpreadScans refuses by (b), a row_number window ranks
+      // its ties by arrival order; the build (s06's first run) took 1.82 s
+      // with the call, 1.71 s without (r20)
       val n = Tables.spread(emb.select($"vec_id".as("nid"), $"embedding".as("ne")))
       val w = Window.partitionBy($"qid").orderBy($"cosine".desc, $"nid")
       broadcast(q).crossJoin(n)
@@ -327,6 +338,8 @@ object Similarity {
     val q = emb.filter($"vec_id" < 50)
       .select($"vec_id".as("qid"), $"embedding".as("qe"),
         explode(probes).as("probe"))
+    // spread by hand: SpreadScans refuses by (b), a row_number window ranks
+    // its ties by arrival order; r20 s05 0.34 s with the call, 0.33 s without
     val n = Tables.spread(
       emb.select($"vec_id".as("nid"), $"embedding".as("ne"), $"bkt".as("nbkt")))
     val w = Window.partitionBy($"qid").orderBy($"cosine".desc, $"nid")
@@ -393,6 +406,8 @@ object Similarity {
         transform($"embedding",
           x => round(x.cast("double") / $"scl").cast("float")).as("code"))
     val q = coded.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"code".as("qc"))
+    // spread by hand: SpreadScans refuses by (b), a row_number window ranks
+    // its ties by arrival order; r20 s07 0.75 s with the call, 1.12 s without
     val n = Tables.spread(coded.select($"vec_id".as("nid"), $"code".as("nc")))
     val w = Window.partitionBy($"qid").orderBy($"qcosine".desc, $"nid")
     broadcast(q).crossJoin(n)
@@ -714,6 +729,8 @@ object Similarity {
     val emb = Tables.embeddings(s, dir)
     val q = emb.filter($"vec_id" < 20)
       .select($"vec_id".as("qid"), $"embedding".as("qe"))
+    // spread by hand: SpreadScans refuses by (b), a row_number window ranks
+    // its ties by arrival order; r20 s12 0.15 s with the call, 0.25 s without
     val n = Tables.spread(emb.filter($"label" === 3)
       .select($"vec_id".as("nid"), $"embedding".as("ne")))
     val w = Window.partitionBy($"qid").orderBy($"cosine".desc, $"nid")
@@ -757,6 +774,8 @@ object Similarity {
     val emb = Tables.embeddings(s, dir)
     val codes = emb.select($"vec_id", signCode($"embedding").as("code"))
     val q = codes.filter($"vec_id" < 20).select($"vec_id".as("qid"), $"code".as("qc"))
+    // spread by hand: SpreadScans refuses by (b), a row_number window ranks
+    // its ties by arrival order; r20 s13 0.52 s with the call, 1.22 s without
     val n = Tables.spread(codes.select($"vec_id".as("nid"), $"code".as("nc")))
     val w = Window.partitionBy($"qid").orderBy($"hamming".asc, $"nid")
     broadcast(q).crossJoin(n)
@@ -795,6 +814,8 @@ object Similarity {
     val coded = emb.select($"vec_id", $"embedding", signCode($"embedding").as("code"))
     val q = coded.filter($"vec_id" < 20)
       .select($"vec_id".as("qid"), $"embedding".as("qe"), $"code".as("qc"))
+    // spread by hand: SpreadScans refuses by (b), a row_number window ranks
+    // its ties by arrival order; r20 s14 0.51 s with the call, 1.83 s without
     val n = Tables.spread(coded.select($"vec_id".as("nid"), $"embedding".as("ne"), $"code".as("nc")))
     val wH = Window.partitionBy($"qid").orderBy($"hamming".asc, $"nid")
     val wC = Window.partitionBy($"qid").orderBy($"cosine".desc, $"nid")

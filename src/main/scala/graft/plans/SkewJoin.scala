@@ -37,7 +37,7 @@ object SkewJoin {
     // xxhash64 mod salts: deterministic and uniform, and a single
     // codegen'd long hash per row. (r17 optimization: the original
     // md5→hex→substring→conv(16,10)→cast chain cost ~0.8 s/600k rows at
-    // sf0.1 — measured via ProfileR17 q43_md5_inline vs q43_xx — because
+    // sf0.1 — measured in r17's A/B of the two salt forms — because
     // the optimizer also duplicates the salt expression under the join's
     // null-rejection filter, so every fact row paid it twice.)
     // coalesce: a NULL salt source must still salt (a NULL salt would

@@ -266,27 +266,23 @@ object Tables {
 
   def events(s: SparkSession, d: String): DataFrame = load(s, d, "events")
 
-  private def buildEvents(s: SparkSession, d: String): DataFrame = {
-    // session-global BY DESIGN, not scoped: the flag affects row decode
-    // at execution time, so restoring it after this call could break the
-    // returned (lazy) frame's later scans. Documented side effect: any
-    // OTHER parquet table with TIMESTAMP(NANOS) columns read on this
-    // session surfaces them as raw-nanos LongType rather than failing —
-    // acceptable for a flag whose alternative is an unconditional read
-    // error on nanos data (and the testdata's events is the only nanos
-    // producer in scope).
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  /** The raw-nanos encoding reads as LongType only under
+    * `spark.sql.legacy.parquet.nanosAsLong`, which `GraftSession.builder`
+    * sets for the whole context. */
+  private def buildEvents(s: SparkSession, d: String): DataFrame =
     normalizeEventTime(readParquet(s, path(d, "events")))
-  }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
-  /** Spread a CPU-heavy pipeline's input across all cores when the source
-    * offers fewer splits than the session's parallelism. Needed because a
-    * single-row-group parquet file cannot be split finer at the scan, so
-    * e.g. per-document hashing would run on one core; on a real cluster the
-    * input split count exceeds the core count and this guard makes it a
-    * no-op (no shuffle added at scale). */
+  /** Spread `df` across all cores when it offers fewer input files than
+    * the session's parallelism. The planner rule
+    * [[graft.plans.SpreadScans]] makes this decision for every query; a
+    * call stays only where that rule refuses the site, and each call names
+    * the clause it refuses on and the measured cost of dropping the call
+    * (r20: sf0.1, 4 cores, `graft.Bench` min of 5, with → without). A
+    * single-row-group parquet file cannot be split finer at the
+    * scan; on a cluster whose inputs offer that many splits this is a
+    * no-op. */
   def spread(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
     // Decide from the file count (our testdata is single-row-group files, so

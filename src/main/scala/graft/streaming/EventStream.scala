@@ -66,14 +66,13 @@ object EventStream {
     *
     * The stream source must be declared with the file's RAW schema — e.g.
     * parquet TIMESTAMP(NANOS) surfaces as `LongType` under the nanosAsLong
-    * conf, timestamp[us] without UTC adjustment as TIMESTAMP_NTZ — and the
+    * conf that `GraftSession.builder` sets, timestamp[us] without UTC adjustment as TIMESTAMP_NTZ — and the
     * conversion to watermark-compatible TimestampType applied as a
     * projection AFTER the source (declaring the post-conversion type
     * against the raw file fails at read time). Shares
     * `Tables.normalizeEventTime` with the batch path so the two can never
     * diverge on a testdata re-encode. */
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val p = Tables.path(dir, "events")
     val rawSchema = spark.read.parquet(p).schema // footer schema, raw encoding
     // The path must be a GLOB: for a non-glob path FileStreamSource silently

@@ -77,4 +77,29 @@ class ArtifactsSpec extends SparkSpec {
     assert(df.columns.toSeq == Seq("n_nationkey", "n_name", "n_extra"))
     assert(rows(df).map(_.last) == Seq(0L, 2L, 4L))
   }
+
+  test("reading events leaves a session's conf digest as it was") {
+    val dir = copyOf(sfDir)
+    val s = spark.newSession()
+    val before = graft.util.Artifacts.confDigest(s)
+    Tables.events(s, dir).schema
+    assert(graft.util.Artifacts.confDigest(s) == before,
+      "the first events read changed the session's conf digest")
+  }
+
+  test("a session that has read events shares the partsupp a session that has not built") {
+    val dir = copyOf(sfDir)
+    // the builder never reads events: it materializes the CTE body over
+    // its own lineitem view, under the key the engine takes
+    val builder = spark.newSession()
+    Tables.lineitem(builder, dir).createOrReplaceTempView("lineitem")
+    val body = "(?s)with partsupp as \\(\n(.*?)\n\\)\n".r.findFirstMatchIn(q11).get.group(1)
+    graft.util.Artifacts.getOrBuild(builder, "partsupp", Seq(dir -> "lineitem"))(
+      builder.sql(body).localCheckpoint())
+    val reader = spark.newSession()
+    Tables.events(reader, dir).schema
+    Engine.executeQuery(reader, dir, "SELECT 1").collect()
+    assert(jobsDuring(Engine.executeQuery(reader, dir, q11))._2 == 0,
+      "the session that read events built its own partsupp")
+  }
 }
